@@ -59,9 +59,13 @@ object Cli {
     val grid = Geo.gridExpand(t.filter(inSet))
       .select(col("lat"), col("lon"), col("elevation"), col("tile_key"))
       .cache()
-    Geo.writeTiled(grid, out)
     // count the written frame directly — an empty set writes only
-    // _SUCCESS, which a schema-inferring re-read would choke on
-    grid.count()
+    // _SUCCESS, which a schema-inferring re-read would choke on; the
+    // cache is released afterwards so a long-lived session does not
+    // accumulate one grid per call
+    try {
+      Geo.writeTiled(grid, out)
+      grid.count()
+    } finally grid.unpersist(blocking = false)
   }
 }

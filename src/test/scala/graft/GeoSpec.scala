@@ -90,6 +90,81 @@ class GeoSpec extends SparkSpec {
     assert(one.count() == 64)
   }
 
+  test("writeTiled equals a default local-FS write: files, .crc files, permissions, data; s3a still writes") {
+    import java.nio.file.{Files, Paths}
+    import java.nio.file.attribute.PosixFilePermissions
+    import scala.jdk.CollectionConverters._
+    val g = Geo.gridExpand(Geo.tiles(spark, Sf).filter(col("tile_id") < 12))
+      .repartition(col("tile_key"))
+    val ours = scratchDir("graft_tiled")
+    val control = scratchDir("graft_tiled_control")
+    Geo.writeTiled(g, ours)
+    g.write.mode("overwrite").option("compression", "snappy")
+      .partitionBy("tile_key").parquet(control)
+    // relative path (part-file ids folded) and POSIX mode of every entry
+    def tree(root: String): Seq[(String, String)] = {
+      val r = Paths.get(root)
+      val walk = Files.walk(r)
+      try walk.iterator().asScala.filter(_ != r).map { p =>
+        r.relativize(p).toString.replaceAll("part-\\d+-[0-9a-f-]+", "part") ->
+          PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+      }.toVector.sorted
+      finally walk.close()
+    }
+    val files = tree(ours)
+    assert(files == tree(control))
+    val names = files.map(_._1)
+    val tileDirs = names.filter(n => n.startsWith("tile_key=") && !n.contains("/"))
+    assert(tileDirs.nonEmpty)
+    tileDirs.foreach { d =>
+      assert(names.filter(_.startsWith(s"$d/")) ==
+        Seq(s"$d/.part.c000.snappy.parquet.crc", s"$d/part.c000.snappy.parquet"))
+    }
+    assert(names.contains("_SUCCESS") && names.contains("._SUCCESS.crc"))
+    val back = spark.read.parquet(ours)
+    val backControl = spark.read.parquet(control)
+    assert(back.count() == g.count())
+    assert(back.exceptAll(backControl).isEmpty && backControl.exceptAll(back).isEmpty)
+    // the file-system choice is the local disk's only: s3a writes as before
+    val stub = new S3Stub("tiles")
+    try {
+      val hc = spark.sparkContext.hadoopConfiguration
+      hc.set("fs.s3a.impl", "graft.sources.S3HttpFileSystem")
+      hc.set("fs.s3a.endpoint", stub.endpoint)
+      hc.set("fs.s3a.retry.base.ms", "10")
+      hc.set("fs.s3a.impl.disable.cache", "true")
+      Geo.writeTiled(g, "s3a://tiles/grid")
+      assert(stub.keys.count(k => k.startsWith("grid/tile_key=") && k.endsWith(".parquet")) ==
+        tileDirs.length, stub.keys)
+      val viaS3 = spark.read.parquet("s3a://tiles/grid")
+      assert(viaS3.exceptAll(back).isEmpty && back.exceptAll(viaS3).isEmpty)
+    } finally stub.stop()
+  }
+
+  test("InProcessChmodFileSystem sets the same mode bits as Hadoop's forked chmod") {
+    import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+    import org.apache.hadoop.fs.permission.FsPermission
+    val dir = scratchDir("graft_chmod")
+    val ours = new graft.sources.InProcessChmodFileSystem
+    val hadoop = new RawLocalFileSystem
+    Seq(ours, hadoop).foreach(_.initialize(java.net.URI.create("file:///"),
+      spark.sparkContext.hadoopConfiguration))
+    def modeAfter(fs: RawLocalFileSystem, name: String, m: Int): Int = {
+      val f = new java.io.File(dir, name)
+      assert(f.createNewFile())
+      fs.setPermission(new Path(f.getPath), new FsPermission(m.toShort))
+      java.nio.file.Files.getAttribute(f.toPath, "unix:mode").asInstanceOf[Int] & 0xfff
+    }
+    // 1777 carries the sticky bit, which goes through the parent
+    val rnd = new scala.util.Random(5)
+    val modes = Seq("0", "400", "644", "755", "777", "1777").map(Integer.parseInt(_, 8)) ++
+      Seq.fill(24)(rnd.nextInt(512))
+    modes.zipWithIndex.foreach { case (m, i) =>
+      assert(modeAfter(ours, s"ours-$i", m) == modeAfter(hadoop, s"hadoop-$i", m),
+        s"mode ${Integer.toOctalString(m)}")
+    }
+  }
+
   test("g34: compaction rewrites each bin into ONE file; row multiset preserved both ways") {
     val manifest = graft.geo.GeoQueries.compactionApply(spark, Sf).collect()
     assert(manifest.nonEmpty)
@@ -126,7 +201,10 @@ class GeoSpec extends SparkSpec {
 
   test("Cli.run writes a tiled parquet dataset filtered to the set") {
     val out = scratchDir("graft_cli")
+    val persisted = spark.sparkContext.getPersistentRDDs.size
     val n = Cli.run(spark, Sf, out, "europe")
+    // the grid's cache is released, not left to pile up in the session
+    assert(spark.sparkContext.getPersistentRDDs.size == persisted)
     val t = Geo.tiles(spark, Sf)
     val expectedTiles = t.filter(Geo.inEurope(col("lat0"), col("lon0"))).count()
     assert(n == expectedTiles * 64)
