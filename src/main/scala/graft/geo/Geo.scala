@@ -2,7 +2,6 @@ package graft.geo
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.TileKeyExprs
 import graft.Tables
 import graft.sources.LocalWriteFileSystem
 
@@ -75,21 +74,21 @@ object Geo {
       when(lat >= 0, "N").otherwise("S"), abs(lat),
       when(lon >= 0, "E").otherwise("W"), abs(lon))
 
-  /** Parse a tile key back to signed lat: the leftmost
-    * [[TilePattern]] match anywhere in the string (a key inside a
-    * path parses), null if none. A byte-scanning codegen'd expression
-    * ([[org.apache.spark.sql.graft.TileDegree]]), not four
-    * `regexp_extract` calls: the raster ingest parses the key once
-    * per exploded pixel row (460,800 rows for eight 240×240 tiles),
-    * where the regex form took that decode stage from about 0.1 s to
-    * 0.55 s of wall time and 0.2 s to 1.5 s of CPU on 4 cores.
-    */
-  def parseLat(key: Column): Column = TileKeyExprs.tile_lat(key)
+  /** Parse a tile key back to signed lat (null if no match). */
+  def parseLat(key: Column): Column = {
+    val hemi = regexp_extract(key, TilePattern, 1)
+    val deg  = regexp_extract(key, TilePattern, 2)
+    when(hemi === "", lit(null).cast("int"))
+      .otherwise(when(hemi === "N", deg.cast("int")).otherwise(-deg.cast("int")))
+  }
 
-  /** Parse a tile key back to signed lon (null if no match); see
-    * [[parseLat]].
-    */
-  def parseLon(key: Column): Column = TileKeyExprs.tile_lon(key)
+  /** Parse a tile key back to signed lon (null if no match). */
+  def parseLon(key: Column): Column = {
+    val hemi = regexp_extract(key, TilePattern, 3)
+    val deg  = regexp_extract(key, TilePattern, 4)
+    when(hemi === "", lit(null).cast("int"))
+      .otherwise(when(hemi === "E", deg.cast("int")).otherwise(-deg.cast("int")))
+  }
 
   // --- region sets (main.rs:56-88) -----------------------------------
   /** N50..=53 × E3..=7 */

@@ -12,7 +12,7 @@ import Geo._
   */
 object GeoQueries {
 
-  /** g1: tile-key format + parse round-trip (main.rs:108-133,298). */
+  /** g1: tile-key format + regex parse round-trip (main.rs:108-133,298). */
   def tileParse(s: SparkSession, dir: String): DataFrame =
     tiles(s, dir)
       .select(col("tile_id"), col("tile_key"), col("lat0"), col("lon0"),

@@ -403,64 +403,6 @@ class ExprSpec extends SparkSpec {
     assert(got(1).isNullAt(0))
   }
 
-  test("TileDegree == the regexp_extract tile-key parse, interpreted and generated") {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.BoundReference
-    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
-    import org.apache.spark.sql.graft.TileDegree
-    import org.apache.spark.sql.types.StringType
-    import org.apache.spark.unsafe.types.UTF8String
-    import graft.geo.Geo
-    val key = "ALPSMLC30_N050E003_DSM"
-    val fixed = Seq(null, "", s"…/$key.tif", s"s3a://aw3d30/tiles/$key.tif",
-      s"${key}ALPSMLC30_S012W045_DSM", s"ALPSMLC30_N50E003_DSM/$key",
-      "ALPSMLC30_S000W000_DSM", "ALPSMLC30_S000E000_DSM", "ALPSMLC30_N000W000_DSM",
-      // near misses: lowercase hemisphere, two-digit degree, X
-      // hemisphere, missing _DSM, a non-ASCII digit (\d is ASCII-only)
-      "ALPSMLC30_n050E003_DSM", "ALPSMLC30_N050w003_DSM", "ALPSMLC30_N50E003_DSM",
-      "ALPSMLC30_N050E03_DSM", "ALPSMLC30_X050E003_DSM", "ALPSMLC30_N050X003_DSM",
-      "ALPSMLC30_N050E003", "ALPSMLC30_N050E003_DS", "ALPSMLC30_N05\u0663E003_DSM",
-      s"é日本🌍$key", s"ÄLPSMLC30_N050E003_DSM $key")
-    // every key tileKeyString can emit
-    val grid = for (lat <- -90 to 90; lon <- -180 to 180) yield Geo.tileKeyString(lat, lon)
-    val rnd = new scala.util.Random(17)
-    val noise = Seq("/", "tiles/", ".tif", " ", "_", "é", "日本", "🌍", "ALPSMLC30_",
-      "ALPSMLC30_N", "N050", "E003_DSM", "_DSM")
-    def randKey(): String = {
-      val k = Geo.tileKeyString(rnd.nextInt(181) - 90, rnd.nextInt(361) - 180)
-      rnd.nextInt(8) match {
-        case 0 => k.updated(10, k(10).toLower)
-        case 1 => k.updated(14, k(14).toLower)
-        case 2 => k.patch(11, "", 1)
-        case 3 => k.updated(10, 'X')
-        case 4 => k.stripSuffix("_DSM")
-        case 5 => k.updated(11 + rnd.nextInt(3), 'O')
-        case _ => k
-      }
-    }
-    val random = Seq.fill(2000)(Seq.fill(1 + rnd.nextInt(5))(
-      if (rnd.nextInt(3) == 0) randKey() else noise(rnd.nextInt(noise.length))).mkString)
-    val all = (fixed ++ grid ++ random).toVector
-    val ref = all.zipWithIndex.toDF("k", "i")
-      .select(col("i"), TileKeyRegex.parseLat(col("k")), TileKeyRegex.parseLon(col("k")))
-      .collect().map(r => r.getInt(0) -> Seq(Option(r.get(1)), Option(r.get(2)))).toMap
-    val in = BoundReference(0, StringType, nullable = true)
-    val exprs = Seq(TileDegree(in, lon = false), TileDegree(in, lon = true))
-    val generated = GenerateUnsafeProjection.generate(exprs)
-    all.zipWithIndex.foreach { case (s, i) =>
-      val row = InternalRow(UTF8String.fromString(s))
-      val u = generated(row)
-      val coded = Seq(0, 1).map(j => if (u.isNullAt(j)) None else Some(u.getInt(j)))
-      assert(exprs.map(e => Option(e.eval(row))) == ref(i), s"interpreted: '$s'")
-      assert(coded == ref(i), s"generated: '$s'")
-    }
-    // the cases the generator must actually exercise
-    assert(ref(fixed.indexOf(s"${key}ALPSMLC30_S012W045_DSM")) == Seq(Some(50), Some(3)))
-    assert(ref(fixed.indexOf("ALPSMLC30_S000W000_DSM")) == Seq(Some(0), Some(0)))
-    val randomRef = random.indices.map(j => ref(fixed.length + grid.length + j))
-    assert(randomRef.count(_.head.isEmpty) > 100 && randomRef.count(_.head.nonEmpty) > 100)
-  }
-
   test("flow_accum and watershed are SQL-callable through GraftExtensions") {
     // 3×3 bowl: center lowest — all 8 ring cells would flow inward,
     // but only the center is interior, so it is a sink (code 0):

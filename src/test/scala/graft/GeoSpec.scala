@@ -98,9 +98,18 @@ class GeoSpec extends SparkSpec {
       .repartition(col("tile_key"))
     val ours = scratchDir("graft_tiled")
     val control = scratchDir("graft_tiled_control")
+    // bytes written through the in-process-chmod file system: writeTiled
+    // must reach it (its writer options select it for this job only),
+    // the default write must not
+    val viaOurs = org.apache.hadoop.fs.FileSystem.getStatistics("file",
+      classOf[graft.sources.InProcessChmodFileSystem])
+    val before = viaOurs.getBytesWritten
     Geo.writeTiled(g, ours)
+    val afterOurs = viaOurs.getBytesWritten
+    assert(afterOurs > before, "writeTiled did not write through LocalWriteFileSystem")
     g.write.mode("overwrite").option("compression", "snappy")
       .partitionBy("tile_key").parquet(control)
+    assert(viaOurs.getBytesWritten == afterOurs)
     // relative path (part-file ids folded) and POSIX mode of every entry
     def tree(root: String): Seq[(String, String)] = {
       val r = Paths.get(root)

@@ -573,38 +573,4 @@ class PlanSpec extends SparkSpec {
     val nd = a.withColumn("r", rand(7))
     assert(planFindings(nd).exists(_.startsWith("nondeterministic:")))
   }
-
-  /** Per-row slow paths left in a query's final plan (after the
-    * action, every adaptive query stage included): regex extraction
-    * and interpreted `CodegenFallback` expressions, the recurring
-    * d6/g6 pitfall.
-    */
-  private def slowRowExprs(df: DataFrame): Seq[String] = {
-    import org.apache.spark.sql.catalyst.expressions.RegExpExtract
-    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
-    df.collect()
-    val plan = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    val stages = new AdaptiveSparkPlanHelper {}
-    stages.collectWithSubqueries(plan) { case p => p }
-      .flatMap(_.expressions.flatMap(_.collect {
-        case e: RegExpExtract => e.prettyName
-        case e: CodegenFallback => e.prettyName
-      })).distinct
-  }
-
-  test("g1: the final tile-key parse plan has no RegExpExtract and no CodegenFallback") {
-    import org.apache.spark.sql.functions._
-    assert(slowRowExprs(SparkEntry.queries("g1_tile_parse")(spark, Sf)).isEmpty)
-    // the gate trips on the regexp_extract form the kernel replaced,
-    // and on a CodegenFallback expression
-    val tiles = graft.geo.Geo.tiles(spark, Sf)
-    assert(slowRowExprs(tiles.select(TileKeyRegex.parseLat(col("tile_key"))))
-      .contains("regexp_extract"))
-    assert(slowRowExprs(tiles.select(
-      org.apache.spark.sql.graft.ArrayExprs.char_gram_hashes(col("tile_key"), 3))).nonEmpty)
-  }
 }
