@@ -239,24 +239,12 @@ object Bench {
     def remainingSec: Double = budgetSec - elapsedSec
     def budgeted(need: Double): Boolean = budgetSec <= 0 || remainingSec > need
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     def newSession(): SparkSession = {
       // tmpfs shuffle/spill when available (BenchLocal: the r13
       // precision fix — the virtio disk's writeback stall was the
       // measured 1.3-3.4x fresh-run spread, not the queries)
-      val s = BenchLocal.configure(SparkSession.builder()
-        .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-        .master(s"local[$cpus]"))
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config(Tables.NanosConf._1, Tables.NanosConf._2)
-        // wide schemas (m-family structs) otherwise spam truncation
-        // WARNings into the artifact log on every plan print
-        .config("spark.sql.debug.maxToStringFields", "2000")
-        .getOrCreate()
+      val s = BenchLocal.configure(Session.builder()).getOrCreate()
       // ERROR, not WARN: bench stderr is part of the audited artifact;
       // per-query WARN noise (codegen fallbacks, AQE notices) buries
       // the gate/failure lines a reader actually needs

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Single-query fresh-PROCESS benchmark child: `BenchOne <dir> <query>`
   * builds a session, pays an untimed warm read + one untimed warm run
@@ -19,22 +18,11 @@ object BenchOne {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val name = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     // tmpfs shuffle/spill when available (BenchLocal — the child
     // pays ~18 GB of shuffle+spill writes per query at the 100x
     // proxy; on the sandbox's virtio disk that made fresh-run times
     // writeback-bound with a 1.3-3.4x spread)
-    val spark = BenchLocal.configure(SparkSession.builder()
-      .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NanosConf._1, Tables.NanosConf._2)
-      .config("spark.sql.debug.maxToStringFields", "2000")
-      .getOrCreate()
+    val spark = BenchLocal.configure(Session.builder()).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val metrics = new org.apache.spark.sql.graft.BenchMetricsListener
     spark.sparkContext.addSparkListener(metrics)

@@ -78,11 +78,7 @@ object GenScale {
     val outDir = args.lift(1).getOrElse("/root/repo/.data/sf1")
     val replicas = args.lift(2).map(_.toInt).getOrElse(Replicas)
     val ownSession = SparkSession.getActiveSession.isEmpty
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NanosConf._1, Tables.NanosConf._2)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("WARN")
     build(spark, srcDir, outDir, replicas)
     if (ownSession) spark.stop() // don't kill a caller's session (Bench)
@@ -140,7 +136,7 @@ object GenScale {
     */
   val HotUser = -1L
 
-  /** Opt-in SKEWED scale variant (TrySkew): events replicated
+  /** Opt-in SKEWED scale variant (SURVEY.md §6): events replicated
     * `replicas`× (ids shifted per replica, as in `build`), then every
     * 5th event reassigned to one hot user — so one key owns exactly
     * 20% of the fact table. The source corpus has no natural skew

@@ -1218,8 +1218,8 @@ object Ann {
     * LSH). At an equal ~5%-of-corpus exact-cosine budget at sf0.1:
     * multi-table banded buckets (8–16 tables × 12–16 bits, ≤2-flip
     * multi-probe) reach recall ≈ 0.29–0.40; the 256-bit Hamming cut
-    * measures 0.805 (0.62 at sf0.001; graft.tools.TuneS2 reproduces
-    * both). Banding throws away the margin information in
+    * measures 0.805 (0.62 at sf0.001; SURVEY.md's `s2_ann_lsh` row
+    * records both). Banding throws away the margin information in
     * all non-colliding bits; the joint 256-bit estimator keeps it.
     * Stage 1 still touches every corpus row, but through a 32-byte
     * column (pruned parquet read) with a 4-word xor+popcount kernel —

@@ -60,7 +60,7 @@ object Audio {
     * families). Writes the canonical RIFF/fmt/data layout DIRECTLY —
     * byte-identical to `AudioSystem.write` (AudioSpec pins the
     * identity) — because the JDK SPI path takes a global lock that
-    * serializes all 32 executor threads (AudioMicro: 32 threads x
+    * serializes all 32 executor threads (measured: 32 threads x
     * 20k clips = 49.5 s wall vs ~1 s for the same work single-lock-
     * free; per-clip cost 55 us -> ~1 us).
     */

@@ -284,8 +284,8 @@ object Dedup {
     // never lose one. Dropping the band column from the join key and
     // shuffle measured 1.65 vs 2.93 s cold (0.90 vs 1.02 warm) on the
     // sf0.1 candidate stage with identical candidate sets
-    // (tools.TuneD4; bucket-groupBy pair generation measured too and
-    // rejected: no better than the join).
+    // (bucket-groupBy pair generation measured too and rejected: no
+    // better than the join).
     // OPH path: ONE fused kernel from 64-bit feature hashes straight
     // to band keys (fold + slots + band mixing, no intermediate
     // per-doc arrays). Classic path: materialized fold → signature →
@@ -321,14 +321,15 @@ object Dedup {
     // optimization, paired with the two layouts): an unexecuted cached
     // AdaptiveSparkPlan reports UnknownPartitioning, so a consumer
     // planned against a COLD cache cannot see either layout and
-    // re-exchanges (and re-sorts) the fat side anyway (verified:
-    // tools.CachePartProbe — a laid-out cache satisfies joins only
-    // after materialization). The counts run exactly the featurize and
-    // banding stages the query pays anyway, merely earlier; the trade
-    // is that CONSTRUCTING a d2/d4-family frame now runs those stages
-    // (the r5 "static plan" property moves from construct-time to the
-    // two cache builds — Bench/Verify time construction inside the
-    // measured region, so nothing leaves the timed window).
+    // re-exchanges (and re-sorts) the fat side anyway (pinned by
+    // PlanSpec "a laid-out cache satisfies a self-join's distribution
+    // and ordering only once materialized"). The counts run exactly
+    // the featurize and banding stages the query pays anyway, merely
+    // earlier; the trade is that CONSTRUCTING a d2/d4-family frame now
+    // runs those stages (the r5 "static plan" property moves from
+    // construct-time to the two cache builds — Bench/Verify time
+    // construction inside the measured region, so nothing leaves the
+    // timed window).
     // hashedAll MUST materialize first: banded's own build contains
     // the rep-collapse anti-join, which plans fat-side-exchange-free
     // only against a final corpus cache.
@@ -522,7 +523,7 @@ object Dedup {
     * The signature stage uses ONE-PERMUTATION HASHING with optimal
     * densification (OphSig) by default: one hash pass per doc instead
     * of 1024 permutation scans, O(g + k) vs O(1024·g) per doc.
-    * Measured (tools.TryOph/OphStage): verified outputs IDENTICAL to
+    * Measured: verified outputs IDENTICAL to
     * the classic signature at sf0.001/0.01/0.1 (28/25/256 pairs, 0
     * missing both directions — candidate-complete); candidates 1,513
     * vs 1,227 at sf0.01 (+23%, harmless); end-to-end a wash on this
@@ -562,9 +563,9 @@ object Dedup {
   /** Bloom pre-verify width: 32×64 = 2048 bits (256 B/doc). At d4's
     * ~300-500 distinct grams/doc the bitmap stays unsaturated enough
     * that the lossless bound rejects nearly the whole sub-threshold
-    * candidate mass (measured at the 100× proxy, tools.TuneD4Sketch:
-    * 11.96M candidates, bound < 0.7 for 11.94M — 99.79% — with 0
-    * false drops against exact Jaccard); d2's smaller shingle sets
+    * candidate mass (measured at the 100× proxy: 11.96M candidates,
+    * bound < 0.7 for 11.94M — 99.79% — with 0 false drops against
+    * exact Jaccard); d2's smaller shingle sets
     * are even less saturated. Saturation only weakens the bound
     * toward KEEPING, so width tunes cost, never correctness.
     */
@@ -1197,7 +1198,7 @@ object Dedup {
     * k = 50k: the centroid matrix (k·dim floats) stays a driver-side
     * broadcast, the corpus never does.
     *
-    * Measured (tools.TryD9, defaults): recall vs d5 0.909 at the
+    * Measured (defaults): recall vs d5 0.909 at the
     * sf0.001 fixture, 0.834 at sf0.1, 0.47 at the 10× scale proxy —
     * the decay is a property of THIS corpus (embeddings are
     * deliberately gapless: qualifying pairs sit at the 0.4 threshold
@@ -1252,11 +1253,11 @@ object Dedup {
     val dim = cand.headOption.map(_.length).getOrElse(64)
     val k = coarseK(n, clusterSize, dim)
     // Train the coarse quantizer on a bounded deterministic sample
-    // once the corpus outgrows it. Measured (StageProbe, sf10 proxy,
-    // 5M vectors, k≈19.5k): the 3 Lloyd's training passes + the final
-    // assignment were 69% of d9's 1478 s CPU — each a full O(n·k·d)
-    // scan — while pair scoring was 31% and shuffle negligible
-    // (0.3 GB). Training on ~32 vectors per centroid preserves the
+    // once the corpus outgrows it. Measured (tools.Probe's stage
+    // table, sf10 proxy, 5M vectors, k≈19.5k): the 3 Lloyd's training
+    // passes + the final assignment were 69% of d9's 1478 s CPU — each
+    // a full O(n·k·d) scan — while pair scoring was 31% and shuffle
+    // negligible (0.3 GB). Training on ~32 vectors per centroid preserves the
     // cluster statistics (SemDeDup's published 5B-doc run likewise
     // trains on a subset) and cuts the 3 training passes to
     // O(sample·k·d); the full corpus is still assigned exactly once.

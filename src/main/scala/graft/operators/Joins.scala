@@ -22,9 +22,10 @@ object Joins {
     * classic nondeterministic-repartition-key failure). `saltCols`
     * names the row-distinguishing columns to hash (with `key`);
     * default = every column, which is always correct but widens the
-    * scan to the full row — SaltProbe measures the 2-column events
-    * scan growing to all 6 (props included) under the default, so
-    * pass one narrow unique column (an id) when the table has one.
+    * scan to the full row — on the skewed events (SURVEY.md §6) the
+    * 2-column events scan grew to all 6 (props included) under the
+    * default, so pass one narrow unique column (an id) when the
+    * table has one.
     * Rows identical across (key ++ saltCols) share a salt; that only
     * defeats spreading if the hot key's rows are near-all duplicates.
     */
@@ -36,9 +37,9 @@ object Joins {
       pmod(xxhash64(hashed: _*), lit(salt)).cast("int"))
     // spread the dim BEFORE exploding: a small dim often arrives as
     // 1-2 input splits, and without this those tasks generate and
-    // shuffle-write ALL salt x |small| replicated rows — TrySkew
-    // measured that straggler at the same cost as the skew being
-    // fixed. The extra exchange moves only the pre-replication rows.
+    // shuffle-write ALL salt x |small| replicated rows — a straggler
+    // measured at the same cost as the skew being fixed (SURVEY.md
+    // §6). The extra exchange moves only the pre-replication rows.
     val r = small.repartition(salt).withColumn("_salt",
       explode(sequence(lit(0), lit(salt - 1))))
     l.join(r, Seq(key, "_salt")).drop("_salt")

@@ -2011,8 +2011,8 @@ object Relational {
     * plain join under lowered thresholds) against the same frame.
     *
     * Scale shape: salt ∝ hot-key row share × reducer target; the dim
-    * exchange moves only pre-replication rows (TrySkew's straggler
-    * fix); the rollup output is nations+1 rows.
+    * exchange moves only pre-replication rows (the straggler
+    * fix in SURVEY.md §6); the rollup output is nations+1 rows.
     */
   def q69SkewJoin(s: SparkSession, dir: String, salt: Int = 16): DataFrame = {
     val fact = skewedFact(s, dir)

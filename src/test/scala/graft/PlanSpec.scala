@@ -573,4 +573,43 @@ class PlanSpec extends SparkSpec {
     val nd = a.withColumn("r", rand(7))
     assert(planFindings(nd).exists(_.startsWith("nondeterministic:")))
   }
+
+  test("a laid-out cache satisfies a self-join's distribution and ordering only once materialized") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // the Dedup banded-cache shape: repartition(k).sortWithinPartitions(k),
+    // cached, then self-joined on k (merge hint: the frame is small
+    // enough to broadcast, the band cache never is)
+    val laid = spark.range(0, 100000)
+      .select(col("id"), pmod(col("id"), lit(977)).as("k"))
+      .repartition(col("k")).sortWithinPartitions("k")
+      .cache()
+    // shuffles and sorts the join's planner added ABOVE the two
+    // InMemoryTableScans (the cache's own plan is not a child)
+    def added(): (Int, Int) = {
+      val j = laid.as("x").join(laid.as("y").hint("merge"),
+        col("x.k") === col("y.k") && col("x.id") < col("y.id"))
+      val root: SparkPlan = j.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      (root.collect { case e: ShuffleExchangeExec => e }.size,
+        root.collect { case s: SortExec => s }.size)
+    }
+    // the session default, under which Dedup's eager counts are needed
+    // (with it set true, even a materialized cache re-exchanges)
+    assert(spark.conf.get(
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "false")
+    try {
+      // cold: the cached AdaptiveSparkPlan has not run, reports
+      // UnknownPartitioning, and each side is re-shuffled and re-sorted
+      assert(added() == ((2, 2)))
+      laid.count()
+      // materialized: the cache's hash partitioning and per-partition
+      // order satisfy the sort-merge join as they are
+      assert(added() == ((0, 0)))
+    } finally laid.unpersist(blocking = true)
+  }
 }

@@ -7,14 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * session across suites in the forked test JVM).
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config(Tables.NanosConf._1, Tables.NanosConf._2)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(cpus = 8)
 
   val Sf = "/root/testdata/sf0.001"
 
