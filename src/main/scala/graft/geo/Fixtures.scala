@@ -127,19 +127,27 @@ object Fixtures {
     buf.array()
   }
 
+  /** Build-once frame shared by the per-tile raster fixtures: one
+    * `<tile_key>.<ext>` file per tile with tile_id < RasterLimit under
+    * `fixtureRoot(kind, dir)`, its bytes from `bytes(tileId, lat0,
+    * lon0)`; returns the directory's path.
+    */
+  private def ensureTileFiles(s: SparkSession, dir: String, kind: String, ext: String)(
+      bytes: (Int, Int, Int) => Array[Byte]): String = synchronized {
+    lazy val tiles = tileRows(s, dir, RasterLimit)
+    ensureAtomic(fixtureRoot(kind, dir), tiles.length) { tmp =>
+      tiles.foreach { case (id, lat0, lon0, key) =>
+        Files.write(Paths.get(tmp.toString, s"$key.$ext"), bytes(id, lat0, lon0))
+      }
+    }
+  }
+
   /** Ensure the GRFT raster directory for `dir` exists; returns its
     * path. One `<tile_key>.grft` file per tile with tile_id <
     * RasterLimit.
     */
-  def ensureRasters(s: SparkSession, dir: String): String = synchronized {
-    val out = fixtureRoot("rasters", dir)
-    lazy val tiles = tileRows(s, dir, RasterLimit)
-    ensureAtomic(out, tiles.length) { tmp =>
-      tiles.foreach { case (id, lat0, lon0, key) =>
-        Files.write(Paths.get(tmp.toString, s"$key.grft"), rasterBytes(id, lat0, lon0))
-      }
-    }
-  }
+  def ensureRasters(s: SparkSession, dir: String): String =
+    ensureTileFiles(s, dir, "rasters", "grft")(rasterBytes(_, _, _))
 
   // --- contiguous mosaic (cross-tile / halo-exchange fixtures) ------
   // The main tile universe scatters origins (id·37 % 181 …), so no two
@@ -284,15 +292,8 @@ object Fixtures {
   /** Ensure the TIFF raster directory for `dir` exists; one
     * `<tile_key>.tif` per tile with tile_id < RasterLimit.
     */
-  def ensureTiffs(s: SparkSession, dir: String): String = synchronized {
-    val out = fixtureRoot("tiffs", dir)
-    lazy val tiles = tileRows(s, dir, RasterLimit)
-    ensureAtomic(out, tiles.length) { tmp =>
-      tiles.foreach { case (id, _, _, key) =>
-        Files.write(Paths.get(tmp.toString, s"$key.tif"), tiffBytes(id))
-      }
-    }
-  }
+  def ensureTiffs(s: SparkSession, dir: String): String =
+    ensureTileFiles(s, dir, "tiffs", "tif")((id, _, _) => tiffBytes(id))
 
   /** GEOREFERENCED TIFF fixtures for g26: every tile with
     * `tile_id < RasterLimit`, three deterministic populations —
@@ -307,19 +308,14 @@ object Fixtures {
     * bare TIFF, has_geotags=false downstream. All three re-derivable
     * in SQL from tile_id arithmetic (the §3 discipline).
     */
-  def ensureGeoTiffs(s: SparkSession, dir: String): String = synchronized {
-    val out = fixtureRoot("geotiffs", dir)
-    lazy val tiles = tileRows(s, dir, RasterLimit)
-    ensureAtomic(out, tiles.length) { tmp =>
-      tiles.foreach { case (id, lat0, lon0, key) =>
-        val geo =
-          if (id % 7 == 3) Some((lon0 + 0.25, lat0.toDouble))
-          else if (id % 11 == 5) None
-          else Some((lon0.toDouble, lat0.toDouble))
-        Files.write(Paths.get(tmp.toString, s"$key.tif"), tiffBytes(id, geo = geo))
-      }
+  def ensureGeoTiffs(s: SparkSession, dir: String): String =
+    ensureTileFiles(s, dir, "geotiffs", "tif") { (id, lat0, lon0) =>
+      val geo =
+        if (id % 7 == 3) Some((lon0 + 0.25, lat0.toDouble))
+        else if (id % 11 == 5) None
+        else Some((lon0.toDouble, lat0.toDouble))
+      tiffBytes(id, geo = geo)
     }
-  }
 
   /** Grid size for the DEFLATE/tiled TIFF fixtures: 24 is NOT a
     * multiple of the 16-pixel tile size, so the 2x2 tile grid has
@@ -690,20 +686,14 @@ object Fixtures {
     * id%3==0 -> striped, no predictor; id%3==1 -> striped,
     * predictor 2; id%3==2 -> TILED 16x16, predictor 2, big-endian.
     */
-  def ensureTiffsDeflate(s: SparkSession, dir: String): String = synchronized {
-    val out = fixtureRoot("tiffs_deflate", dir)
-    lazy val tiles = tileRows(s, dir, RasterLimit)
-    ensureAtomic(out, tiles.length) { tmp =>
-      tiles.foreach { case (id, _, _, key) =>
-        val bytes = id % 3 match {
-          case 0 => tiffBytesDeflate(id, predictor = 1)
-          case 1 => tiffBytesDeflate(id)
-          case _ => tiffBytesDeflate(id, tiled = true, order = ByteOrder.BIG_ENDIAN)
-        }
-        Files.write(Paths.get(tmp.toString, s"$key.tif"), bytes)
+  def ensureTiffsDeflate(s: SparkSession, dir: String): String =
+    ensureTileFiles(s, dir, "tiffs_deflate", "tif") { (id, _, _) =>
+      id % 3 match {
+        case 0 => tiffBytesDeflate(id, predictor = 1)
+        case 1 => tiffBytesDeflate(id)
+        case _ => tiffBytesDeflate(id, tiled = true, order = ByteOrder.BIG_ENDIAN)
       }
     }
-  }
 
   /** Ensure the PackBits / Float32 TIFF fixture directory — the two
     * remaining common-in-the-wild layouts (r8 VERDICT missing #3):
@@ -718,24 +708,18 @@ object Fixtures {
     * the same integer formula (float bands carry integer-VALUED
     * floats — exact in IEEE, so the oracle stays integer-exact).
     */
-  def ensureTiffsPackbits(s: SparkSession, dir: String): String = synchronized {
-    val out = fixtureRoot("tiffs_packbits", dir)
-    lazy val tiles = tileRows(s, dir, RasterLimit)
-    ensureAtomic(out, tiles.length) { tmp =>
-      tiles.foreach { case (id, _, _, key) =>
-        val bytes = id % 5 match {
-          case 0 => tiffBytesDeflate(id, predictor = 1, compress = false, packbits = true)
-          case 1 => tiffBytesDeflate(id, predictor = 1, compress = false, packbits = true, bits = 16)
-          case 2 => tiffBytesDeflate(id, predictor = 1, compress = false, packbits = true,
-            tiled = true, order = ByteOrder.BIG_ENDIAN)
-          case 3 => tiffBytesDeflate(id, predictor = 1, compress = false, floatSamples = true)
-          case _ => tiffBytesDeflate(id, predictor = 1, compress = false, packbits = true,
-            floatSamples = true)
-        }
-        Files.write(Paths.get(tmp.toString, s"$key.tif"), bytes)
+  def ensureTiffsPackbits(s: SparkSession, dir: String): String =
+    ensureTileFiles(s, dir, "tiffs_packbits", "tif") { (id, _, _) =>
+      id % 5 match {
+        case 0 => tiffBytesDeflate(id, predictor = 1, compress = false, packbits = true)
+        case 1 => tiffBytesDeflate(id, predictor = 1, compress = false, packbits = true, bits = 16)
+        case 2 => tiffBytesDeflate(id, predictor = 1, compress = false, packbits = true,
+          tiled = true, order = ByteOrder.BIG_ENDIAN)
+        case 3 => tiffBytesDeflate(id, predictor = 1, compress = false, floatSamples = true)
+        case _ => tiffBytesDeflate(id, predictor = 1, compress = false, packbits = true,
+          floatSamples = true)
       }
     }
-  }
 
   /** Ensure the Int16-TIFF fixture directory for `dir` exists — the
     * sample format REAL AW3D30 DSM GeoTIFFs ship. One `<tile_key>.tif`
@@ -744,21 +728,15 @@ object Fixtures {
     * striped, no predictor); id%3==1 -> DEFLATE striped predictor 2;
     * id%3==2 -> DEFLATE TILED 16x16 predictor 2, big-endian.
     */
-  def ensureTiffsI16(s: SparkSession, dir: String): String = synchronized {
-    val out = fixtureRoot("tiffs_i16", dir)
-    lazy val tiles = tileRows(s, dir, RasterLimit)
-    ensureAtomic(out, tiles.length) { tmp =>
-      tiles.foreach { case (id, _, _, key) =>
-        val bytes = id % 3 match {
-          case 0 => tiffBytesDeflate(id, predictor = 1, bits = 16, compress = false)
-          case 1 => tiffBytesDeflate(id, bits = 16)
-          case _ => tiffBytesDeflate(id, tiled = true,
-            order = ByteOrder.BIG_ENDIAN, bits = 16)
-        }
-        Files.write(Paths.get(tmp.toString, s"$key.tif"), bytes)
+  def ensureTiffsI16(s: SparkSession, dir: String): String =
+    ensureTileFiles(s, dir, "tiffs_i16", "tif") { (id, _, _) =>
+      id % 3 match {
+        case 0 => tiffBytesDeflate(id, predictor = 1, bits = 16, compress = false)
+        case 1 => tiffBytesDeflate(id, bits = 16)
+        case _ => tiffBytesDeflate(id, tiled = true,
+          order = ByteOrder.BIG_ENDIAN, bits = 16)
       }
     }
-  }
 
   /** The NoData sentinel real AW3D30 DSMs carry (GDAL_NODATA). */
   val NoDataVal = -9999
@@ -771,25 +749,19 @@ object Fixtures {
     * predictor 2 (the other codec GDAL commonly writes); 3 -> DEFLATE
     * tiled 16x16 big-endian.
     */
-  def ensureTiffsNodata(s: SparkSession, dir: String): String = synchronized {
-    val out = fixtureRoot("tiffs_nodata", dir)
-    lazy val tiles = tileRows(s, dir, RasterLimit)
-    val nd = Some(NoDataVal)
-    ensureAtomic(out, tiles.length) { tmp =>
-      tiles.foreach { case (id, _, _, key) =>
-        val bytes = id % 4 match {
-          case 0 => tiffBytesDeflate(id, predictor = 1, bits = 16,
-            compress = false, noData = nd)
-          case 1 => tiffBytesDeflate(id, bits = 16, noData = nd)
-          case 2 => tiffBytesDeflate(id, bits = 16, compress = false,
-            lzw = true, noData = nd)
-          case _ => tiffBytesDeflate(id, tiled = true,
-            order = ByteOrder.BIG_ENDIAN, bits = 16, noData = nd)
-        }
-        Files.write(Paths.get(tmp.toString, s"$key.tif"), bytes)
+  def ensureTiffsNodata(s: SparkSession, dir: String): String =
+    ensureTileFiles(s, dir, "tiffs_nodata", "tif") { (id, _, _) =>
+      val nd = Some(NoDataVal)
+      id % 4 match {
+        case 0 => tiffBytesDeflate(id, predictor = 1, bits = 16,
+          compress = false, noData = nd)
+        case 1 => tiffBytesDeflate(id, bits = 16, noData = nd)
+        case 2 => tiffBytesDeflate(id, bits = 16, compress = false,
+          lzw = true, noData = nd)
+        case _ => tiffBytesDeflate(id, tiled = true,
+          order = ByteOrder.BIG_ENDIAN, bits = 16, noData = nd)
       }
     }
-  }
 
   /** Ensure the ZSTD + BigTIFF fixture directory — the two layouts a
     * user pointing the engine at arbitrary modern GeoTIFFs hits first
@@ -803,23 +775,17 @@ object Fixtures {
     * uncompressed striped (LONG8 layout arrays); 4 -> BigTIFF ZSTD
     * striped predictor 2.
     */
-  def ensureTiffsZstdBig(s: SparkSession, dir: String): String = synchronized {
-    val out = fixtureRoot("tiffs_zstdbig", dir)
-    lazy val tiles = tileRows(s, dir, RasterLimit)
-    ensureAtomic(out, tiles.length) { tmp =>
-      tiles.foreach { case (id, _, _, key) =>
-        val bytes = id % 5 match {
-          case 0 => tiffBytesDeflate(id, predictor = 1, compress = false, zstd = true)
-          case 1 => tiffBytesDeflate(id, compress = false, zstd = true, bits = 16)
-          case 2 => tiffBytesDeflate(id, predictor = 1, compress = false, zstd = true,
-            tiled = true, order = ByteOrder.BIG_ENDIAN)
-          case 3 => tiffBytesDeflate(id, predictor = 1, compress = false, bigTiff = true)
-          case _ => tiffBytesDeflate(id, compress = false, zstd = true, bigTiff = true)
-        }
-        Files.write(Paths.get(tmp.toString, s"$key.tif"), bytes)
+  def ensureTiffsZstdBig(s: SparkSession, dir: String): String =
+    ensureTileFiles(s, dir, "tiffs_zstdbig", "tif") { (id, _, _) =>
+      id % 5 match {
+        case 0 => tiffBytesDeflate(id, predictor = 1, compress = false, zstd = true)
+        case 1 => tiffBytesDeflate(id, compress = false, zstd = true, bits = 16)
+        case 2 => tiffBytesDeflate(id, predictor = 1, compress = false, zstd = true,
+          tiled = true, order = ByteOrder.BIG_ENDIAN)
+        case 3 => tiffBytesDeflate(id, predictor = 1, compress = false, bigTiff = true)
+        case _ => tiffBytesDeflate(id, compress = false, zstd = true, bigTiff = true)
       }
     }
-  }
 
   /** Ensure the JPEG-in-TIFF fixture directory — the last member of
     * the judge-listed TIFF tail (new-style JPEG, compression 7; what
@@ -832,25 +798,19 @@ object Fixtures {
     * TechNote 2); 2 -> complete streams, big-endian container;
     * 3 -> abbreviated + JPEGTables in a BIGTIFF container.
     */
-  def ensureTiffsJpeg(s: SparkSession, dir: String): String = synchronized {
-    val out = fixtureRoot("tiffs_jpeg", dir)
-    lazy val tiles = tileRows(s, dir, RasterLimit)
-    ensureAtomic(out, tiles.length) { tmp =>
-      tiles.foreach { case (id, _, _, key) =>
-        val bytes = id % 4 match {
-          case 0 => tiffBytesDeflate(id, predictor = 1, compress = false,
-            jpeg = true, bits = 8)
-          case 1 => tiffBytesDeflate(id, predictor = 1, compress = false,
-            jpeg = true, jpegTables = true, bits = 8)
-          case 2 => tiffBytesDeflate(id, predictor = 1, compress = false,
-            jpeg = true, bits = 8, order = ByteOrder.BIG_ENDIAN)
-          case _ => tiffBytesDeflate(id, predictor = 1, compress = false,
-            jpeg = true, jpegTables = true, bits = 8, bigTiff = true)
-        }
-        Files.write(Paths.get(tmp.toString, s"$key.tif"), bytes)
+  def ensureTiffsJpeg(s: SparkSession, dir: String): String =
+    ensureTileFiles(s, dir, "tiffs_jpeg", "tif") { (id, _, _) =>
+      id % 4 match {
+        case 0 => tiffBytesDeflate(id, predictor = 1, compress = false,
+          jpeg = true, bits = 8)
+        case 1 => tiffBytesDeflate(id, predictor = 1, compress = false,
+          jpeg = true, jpegTables = true, bits = 8)
+        case 2 => tiffBytesDeflate(id, predictor = 1, compress = false,
+          jpeg = true, bits = 8, order = ByteOrder.BIG_ENDIAN)
+        case _ => tiffBytesDeflate(id, predictor = 1, compress = false,
+          jpeg = true, jpegTables = true, bits = 8, bigTiff = true)
       }
     }
-  }
 
   /** Expected remote object size for the listing manifest (bytes —
     * small enough to write as real files).
@@ -876,15 +836,6 @@ object Fixtures {
   /** Tile-id bound for the partitioned-sink fixture (g11). */
   val TiledLimit = 500
 
-  /** Sink dirs already validated this JVM — ensureTiledSink's
-    * completeness check costs a Spark count job (expected rows derive
-    * from the CURRENT source corpus), which is pure overhead on every
-    * bench re-run after the first. Publication is atomic and the
-    * fixture is immutable once complete, so within-JVM memoization is
-    * sound.
-    */
-  private val tiledSinkReady = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Ensure the tile-partitioned parquet sink for `dir` exists and
     * return its path: the bounded grid written through Geo.writeTiled
     * — the reference's file-per-tile layout (main.rs:272-296) as a
@@ -898,18 +849,14 @@ object Fixtures {
     * underscore-prefixed marker when reading the root as parquet.
     */
   def ensureTiledSink(s: SparkSession, dir: String): String = synchronized {
-    val cached = tiledSinkReady.get(dir)
-    if (cached != null) return cached
     val out = fixtureRoot("tiled_sink", dir)
     lazy val tiles = Geo.tiles(s, dir).filter(col("tile_id") < TiledLimit)
     // lazy: the expected-count job runs inside ensureAtomic's timed
     // window (by-name `expected`), so the bench's fixture_sec column
     // prices it instead of the first query run absorbing it silently
     lazy val nTiles = tiles.count()
-    val path = ensureAtomic(out, (nTiles * GridN * GridN).toInt) { tmp =>
+    ensureAtomic(out, (nTiles * GridN * GridN).toInt) { tmp =>
       Geo.writeTiled(Geo.gridExpand(tiles).repartition(col("tile_key")), tmp.toString)
     }
-    tiledSinkReady.put(dir, path)
-    path
   }
 }

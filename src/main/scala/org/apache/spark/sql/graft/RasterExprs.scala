@@ -32,9 +32,8 @@ object RasterExprs {
       ExpressionUtils.expression(elev), ExpressionUtils.expression(n)))
 }
 
-/** D8 flow accumulation (O'Callaghan & Mark 1984) over one tile's
-  * row-major elevation array: for each cell, the number of cells whose
-  * steepest-descent flow path passes through it. Direction per
+/** The D8 flow graph of one tile (O'Callaghan & Mark 1984), shared by
+  * [[FlowAccum]], [[Watershed]] and [[FlowLength]]. Direction per
   * interior cell is the EXACT argmax g15 computes in SQL — score =
   * drop²·(2 for cardinal, 1 for diagonal), comparing drop/1 vs drop/√2
   * without floats (2a² = b² has no nonzero integer solutions, so
@@ -42,43 +41,20 @@ object RasterExprs {
   * break by the fixed ESRI priority E,SE,S,SW,W,NW,N,NE. Rim cells
   * have no direction (the 3×3 kernel is undefined there — gdaldem
   * nodata semantics) but still receive flow.
-  *
-  * Drops are strictly positive along every edge, so the flow graph is
-  * a forest with strictly DECREASING elevation — one sweep in
-  * descending-elevation order propagates loads in topological order:
-  * load[succ(u)] += load[u], every upstream cell of u having already
-  * been folded in (anything flowing into u sits strictly higher).
-  * O(n² log n²) per tile, no state beyond the tile: the whole
-  * computation lives inside the tile's file split, which is how
-  * raster engines distribute (a 3600×3600 production tile is one call
-  * per file row). Eval-only (CodegenFallback) is fine off the codegen
-  * hot path: one call amortizes over n² output cells, exactly like
-  * RasterDecode.
   */
-case class FlowAccum(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes with CodegenFallback {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(LongType), IntegerType)
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  // malformed (wrong-length) arrays yield null, mirroring RasterDecode
-  override def nullable: Boolean = true
-
+private object D8 {
   // ESRI D8 neighbor ring in tie-break priority order:
   // (dx, dy, diagonal)
   private val Ring: Array[(Int, Int, Boolean)] = Array(
     (1, 0, false), (1, 1, true), (0, 1, false), (-1, 1, true),
     (-1, 0, false), (-1, -1, true), (0, -1, false), (1, -1, true))
 
-  override def nullSafeEval(elevAny: Any, nAny: Any): Any = {
-    val arr = elevAny.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val n = nAny.asInstanceOf[Int]
-    if (n < 3 || arr.numElements() != n * n) return null
-    val z = arr.toLongArray()
-    val total = n * n
-    val succ = new Array[Int](total)
+  /** Row-major successor of every cell of the n×n elevation array `z`:
+    * the steepest strictly-lower neighbor, or -1 for terminals (rim
+    * cells and interior sinks, which have no positive drop).
+    */
+  def successors(z: Array[Long], n: Int): Array[Int] = {
+    val succ = new Array[Int](n * n)
     java.util.Arrays.fill(succ, -1)
     var y = 1
     while (y < n - 1) {
@@ -104,6 +80,54 @@ case class FlowAccum(left: Expression, right: Expression)
       }
       y += 1
     }
+    succ
+  }
+}
+
+/** A per-tile D8 kernel: one tile's row-major elevation array and its
+  * side n in, one bigint per cell out, computed by `sweep` over the
+  * [[D8.successors]] graph. Drops are strictly positive along every
+  * edge, so the graph is a forest with strictly DECREASING elevation
+  * and each sweep is one pass in elevation order — no iteration.
+  * O(n² log n²) per tile, no state beyond the tile: the whole
+  * computation lives inside the tile's file split, which is how
+  * raster engines distribute (a 3600×3600 production tile is one call
+  * per file row). Eval-only (CodegenFallback) is fine off the codegen
+  * hot path: one call amortizes over n² output cells, exactly like
+  * RasterDecode.
+  */
+abstract class D8Kernel extends BinaryExpression with ExpectsInputTypes with CodegenFallback {
+
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(ArrayType(LongType), IntegerType)
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  // malformed (wrong-length) arrays yield null, mirroring RasterDecode
+  override def nullable: Boolean = true
+
+  /** The per-cell output, given the elevations and their successors. */
+  protected def sweep(z: Array[Long], succ: Array[Int]): Array[Long]
+
+  override def nullSafeEval(elevAny: Any, nAny: Any): Any = {
+    val arr = elevAny.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    val n = nAny.asInstanceOf[Int]
+    if (n < 3 || arr.numElements() != n * n) return null
+    val z = arr.toLongArray()
+    new GenericArrayData(sweep(z, D8.successors(z, n)))
+  }
+}
+
+/** D8 flow accumulation: for each cell, the number of cells whose
+  * steepest-descent flow path passes through it. One sweep in
+  * descending-elevation order propagates loads in topological order:
+  * load[succ(u)] += load[u], every upstream cell of u having already
+  * been folded in (anything flowing into u sits strictly higher).
+  */
+case class FlowAccum(left: Expression, right: Expression) extends D8Kernel {
+
+  override protected def sweep(z: Array[Long], succ: Array[Int]): Array[Long] = {
+    val total = z.length
     // descending-elevation sweep = topological order of the flow forest
     val order = Array.range(0, total)
       .sortBy(i => -z(i))
@@ -116,7 +140,7 @@ case class FlowAccum(left: Expression, right: Expression)
     }
     var i = 0
     while (i < total) { load(i) -= 1; i += 1 } // acc excludes the cell itself
-    new GenericArrayData(load)
+    load
   }
 
   override protected def withNewChildrenInternal(
@@ -126,64 +150,19 @@ case class FlowAccum(left: Expression, right: Expression)
 /** D8 WATERSHED labeling (basin delineation — TauDEM/GRASS
   * `r.watershed`'s partitioning output, the step after g19's
   * accumulation): every cell labels with the row-major index of the
-  * TERMINAL cell its steepest-descent path reaches. The flow graph
-  * is [[FlowAccum]]'s exact integer argmax forest; terminals are
-  * interior sinks (no positive drop) and rim cells (kernel undefined
-  * there, but they still receive flow — gdaldem nodata semantics), so
-  * each basin is one flow tree and the label is its root.
+  * TERMINAL cell its steepest-descent path reaches. Terminals are
+  * interior sinks (no positive drop) and rim cells, so each basin is
+  * one flow tree and the label is its root.
   *
   * One ASCENDING-elevation sweep assigns labels in topological order:
   * a cell's successor sits strictly lower (drop > 0), so by the time
   * a cell is processed its successor's basin is known — the upstream
-  * mirror of FlowAccum's descending load sweep, same O(n² log n²)
-  * per-tile cost, same zero-state per-split distribution story.
+  * mirror of FlowAccum's descending load sweep.
   */
-case class Watershed(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes with CodegenFallback {
+case class Watershed(left: Expression, right: Expression) extends D8Kernel {
 
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(LongType), IntegerType)
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullable: Boolean = true
-
-  private val Ring: Array[(Int, Int, Boolean)] = Array(
-    (1, 0, false), (1, 1, true), (0, 1, false), (-1, 1, true),
-    (-1, 0, false), (-1, -1, true), (0, -1, false), (1, -1, true))
-
-  override def nullSafeEval(elevAny: Any, nAny: Any): Any = {
-    val arr = elevAny.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val n = nAny.asInstanceOf[Int]
-    if (n < 3 || arr.numElements() != n * n) return null
-    val z = arr.toLongArray()
-    val total = n * n
-    val succ = new Array[Int](total)
-    java.util.Arrays.fill(succ, -1)
-    var y = 1
-    while (y < n - 1) {
-      var x = 1
-      while (x < n - 1) {
-        val i = y * n + x
-        val z0 = z(i)
-        var bestScore = 0L
-        var bestIdx = -1
-        var k = 0
-        while (k < 8) {
-          val (dx, dy, diag) = Ring(k)
-          val j = (y + dy) * n + (x + dx)
-          val drop = z0 - z(j)
-          if (drop > 0) {
-            val score = drop * drop * (if (diag) 1L else 2L)
-            if (score > bestScore) { bestScore = score; bestIdx = j }
-          }
-          k += 1
-        }
-        succ(i) = bestIdx
-        x += 1
-      }
-      y += 1
-    }
+  override protected def sweep(z: Array[Long], succ: Array[Int]): Array[Long] = {
+    val total = z.length
     // ascending-elevation sweep: successors resolve before their
     // upstream cells (succ is strictly lower; equal-z cells are never
     // each other's successors, so tie order is irrelevant)
@@ -195,7 +174,7 @@ case class Watershed(left: Expression, right: Expression)
       basin(u) = if (succ(u) < 0) u.toLong else basin(succ(u))
       oi += 1
     }
-    new GenericArrayData(basin)
+    basin
   }
 
   override protected def withNewChildrenInternal(
@@ -205,59 +184,14 @@ case class Watershed(left: Expression, right: Expression)
 /** D8 FLOW-PATH LENGTH per cell — hops along the steepest-descent
   * path to its terminal (TauDEM `D8FlowPathExtremeUp` / GRASS
   * `r.flow`'s length output, the drainage-distance layer beside
-  * [[Watershed]]'s labels): succ() is the IDENTICAL argmax as
-  * [[FlowAccum]]/[[Watershed]] (drop²·2-for-straight score, ESRI ring
-  * priority on ties, rim cells terminal), then one ascending-elevation
-  * sweep resolves `len(u) = len(succ(u)) + 1` — successors are
-  * strictly lower so each resolves before its upstream cells, zero
-  * iteration. Same per-tile zero-shuffle distribution story as g19.
+  * [[Watershed]]'s labels): one ascending-elevation sweep resolves
+  * `len(u) = len(succ(u)) + 1` — successors are strictly lower so
+  * each resolves before its upstream cells, zero iteration.
   */
-case class FlowLength(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes with CodegenFallback {
+case class FlowLength(left: Expression, right: Expression) extends D8Kernel {
 
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(LongType), IntegerType)
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullable: Boolean = true
-
-  private val Ring: Array[(Int, Int, Boolean)] = Array(
-    (1, 0, false), (1, 1, true), (0, 1, false), (-1, 1, true),
-    (-1, 0, false), (-1, -1, true), (0, -1, false), (1, -1, true))
-
-  override def nullSafeEval(elevAny: Any, nAny: Any): Any = {
-    val arr = elevAny.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val n = nAny.asInstanceOf[Int]
-    if (n < 3 || arr.numElements() != n * n) return null
-    val z = arr.toLongArray()
-    val total = n * n
-    val succ = new Array[Int](total)
-    java.util.Arrays.fill(succ, -1)
-    var y = 1
-    while (y < n - 1) {
-      var x = 1
-      while (x < n - 1) {
-        val i = y * n + x
-        val z0 = z(i)
-        var bestScore = 0L
-        var bestIdx = -1
-        var k = 0
-        while (k < 8) {
-          val (dx, dy, diag) = Ring(k)
-          val j = (y + dy) * n + (x + dx)
-          val drop = z0 - z(j)
-          if (drop > 0) {
-            val score = drop * drop * (if (diag) 1L else 2L)
-            if (score > bestScore) { bestScore = score; bestIdx = j }
-          }
-          k += 1
-        }
-        succ(i) = bestIdx
-        x += 1
-      }
-      y += 1
-    }
+  override protected def sweep(z: Array[Long], succ: Array[Int]): Array[Long] = {
+    val total = z.length
     val order = Array.range(0, total).sortBy(i => z(i))
     val len = new Array[Long](total)
     var oi = 0
@@ -266,7 +200,7 @@ case class FlowLength(left: Expression, right: Expression)
       len(u) = if (succ(u) < 0) 0L else len(succ(u)) + 1L
       oi += 1
     }
-    new GenericArrayData(len)
+    len
   }
 
   override protected def withNewChildrenInternal(

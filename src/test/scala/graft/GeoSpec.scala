@@ -208,6 +208,17 @@ class GeoSpec extends SparkSpec {
     graft.Caches.clear()
   }
 
+  test("ensureTiledSink rebuilds a sink deleted mid-JVM instead of returning its stale path") {
+    import graft.geo.Fixtures
+    val first = new java.io.File(Fixtures.ensureTiledSink(spark, Sf))
+    Fixtures.deleteRecursively(first)
+    assert(!first.exists())
+    val again = new java.io.File(Fixtures.ensureTiledSink(spark, Sf))
+    assert(again == first && new java.io.File(again, "_COMPLETE").exists())
+    val tiles = Geo.tiles(spark, Sf).filter(col("tile_id") < Fixtures.TiledLimit).count()
+    assert(spark.read.parquet(again.toString).count() == tiles * Fixtures.GridN * Fixtures.GridN)
+  }
+
   test("Cli.run writes a tiled parquet dataset filtered to the set") {
     val out = scratchDir("graft_cli")
     val persisted = spark.sparkContext.getPersistentRDDs.size
@@ -379,38 +390,30 @@ class GeoSpec extends SparkSpec {
     }
   }
 
-  test("g10: DEFLATE TIFF ingest agrees with the formula on every stat") {
-    import spark.implicits._
-    val got = GeoQueries.rasterIngestTiffDeflate(spark, Sf)
-    assert(got.filter(!col("dims_ok")).count() == 0)
-    val n = graft.geo.Fixtures.GridN2
-    val a = got.select("tile_id", "n_pixels", "min_elev", "max_elev", "sum_elev")
-      .as[(Long, Long, Int, Int, Long)].collect().toSet
-    val ids = Geo.tiles(spark, Sf).filter(col("tile_id") < graft.geo.Fixtures.RasterLimit)
-      .select("tile_id").as[Long].collect()
-    val b = ids.map { id =>
-      val elevs = for (y <- 0 until n; x <- 0 until n)
-        yield ((id * 131 + x * 17 + y * 29) % 8848).toInt
-      (id, (n * n).toLong, elevs.min, elevs.max, elevs.map(_.toLong).sum)
-    }.toSet
-    assert(a.nonEmpty && a == b)
-  }
-
-  test("g12: Int16 TIFF ingest agrees with the formula on every stat") {
-    import spark.implicits._
-    val got = GeoQueries.rasterIngestTiffI16(spark, Sf)
-    assert(got.filter(!col("dims_ok")).count() == 0)
-    val n = graft.geo.Fixtures.GridN2
-    val a = got.select("tile_id", "n_pixels", "min_elev", "max_elev", "sum_elev")
-      .as[(Long, Long, Int, Int, Long)].collect().toSet
-    val ids = Geo.tiles(spark, Sf).filter(col("tile_id") < graft.geo.Fixtures.RasterLimit)
-      .select("tile_id").as[Long].collect()
-    val b = ids.map { id =>
-      val elevs = for (y <- 0 until n; x <- 0 until n)
-        yield ((id * 131 + x * 17 + y * 29) % 8848).toInt
-      (id, (n * n).toLong, elevs.min, elevs.max, elevs.map(_.toLong).sum)
-    }.toSet
-    assert(a.nonEmpty && a == b)
+  // One body for every TIFF-ingest query whose fixture carries the
+  // plain elevation formula on a GridN2 grid, whatever its layouts (g9
+  // uses GridN and g37 blockPix: both keep their own tests).
+  Seq(
+    ("g10", "DEFLATE", GeoQueries.rasterIngestTiffDeflate _),
+    ("g12", "Int16", GeoQueries.rasterIngestTiffI16 _),
+    ("g27", "PackBits + Float32", GeoQueries.rasterIngestTiffPackbits _),
+    ("g35", "ZSTD + BigTIFF", GeoQueries.rasterIngestTiffZstdBig _)
+  ).foreach { case (q, layouts, ingest) =>
+    test(s"$q: $layouts TIFF ingest agrees with the formula on every stat") {
+      val got = ingest(spark, Sf)
+      assert(got.filter(!col("dims_ok")).count() == 0)
+      val n = graft.geo.Fixtures.GridN2
+      val a = got.select("tile_id", "n_pixels", "min_elev", "max_elev", "sum_elev")
+        .as[(Long, Long, Int, Int, Long)].collect().toSet
+      val ids = Geo.tiles(spark, Sf).filter(col("tile_id") < graft.geo.Fixtures.RasterLimit)
+        .select("tile_id").as[Long].collect()
+      val b = ids.map { id =>
+        val elevs = for (y <- 0 until n; x <- 0 until n)
+          yield ((id * 131 + x * 17 + y * 29) % 8848).toInt
+        (id, (n * n).toLong, elevs.min, elevs.max, elevs.map(_.toLong).sum)
+      }.toSet
+      assert(a.nonEmpty && a == b)
+    }
   }
 
   test("g10: TiffDecode never throws on corrupted DEFLATE payloads; bombs are gated") {
@@ -1035,6 +1038,39 @@ class GeoSpec extends SparkSpec {
       val roots = tileCells.filter(_._2._2).map(_._2._1).toSet
       assert(tileCells.values.map(_._1).toSet == roots)
     }
+  }
+
+  test("D8 kernels: equal cardinal drops go E, equal diagonal drops go SE, a sink is its own terminal") {
+    import org.apache.spark.sql.graft.RasterExprs
+    // (flow_accum, watershed, flow_length) of one hand-built n×n grid
+    def kernels(z: Seq[Long], n: Int): (Seq[Long], Seq[Long], Seq[Long]) = {
+      val r = Seq(z).toDF("z").select(
+        RasterExprs.flow_accum(col("z"), lit(n)),
+        RasterExprs.watershed(col("z"), lit(n)),
+        RasterExprs.flow_length(col("z"), lit(n))).head()
+      (r.getSeq[Long](0), r.getSeq[Long](1), r.getSeq[Long](2))
+    }
+    // the one interior cell (index 4) of a 3×3 grid drains to `succ`;
+    // every rim cell is terminal
+    def drainsTo(z: Seq[Long], succ: Int): Unit = {
+      val (acc, basin, len) = kernels(z, 3)
+      assert(acc == (0 until 9).map(i => if (i == succ) 1L else 0L), s"flow_accum $acc")
+      assert(basin == (0 until 9).map(i => if (i == 4) succ.toLong else i.toLong), s"watershed $basin")
+      assert(len == (0 until 9).map(i => if (i == 4) 1L else 0L), s"flow_length $len")
+    }
+    // E (index 5) and S (index 7) both drop 5: E comes first in the ESRI ring
+    drainsTo(Seq(20L, 20L, 20L, 20L, 10L, 5L, 20L, 5L, 20L), succ = 5)
+    // SE (index 8) and SW (index 6) both drop 5, every cardinal rises:
+    // SE comes first
+    drainsTo(Seq(20L, 20L, 20L, 20L, 10L, 20L, 5L, 20L, 5L), succ = 8)
+    // 5×5 bowl, z = 10·(|x−2| + |y−2|): the centre (index 12) is a sink,
+    // and every other interior cell drains straight into it
+    val bowl = for (y <- 0 until 5; x <- 0 until 5) yield 10L * (math.abs(x - 2) + math.abs(y - 2))
+    def interior(i: Int) = i % 5 >= 1 && i % 5 <= 3 && i / 5 >= 1 && i / 5 <= 3
+    val (acc, basin, len) = kernels(bowl, 5)
+    assert(acc == (0 until 25).map(i => if (i == 12) 8L else 0L), s"flow_accum $acc")
+    assert(basin == (0 until 25).map(i => if (interior(i)) 12L else i.toLong), s"watershed $basin")
+    assert(len == (0 until 25).map(i => if (interior(i) && i != 12) 1L else 0L), s"flow_length $len")
   }
 
   test("g20: halo-exchanged rim numerators equal the global formula across tile boundaries") {

@@ -3,6 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.BenchMetricsListener
 import graft.{Caches, Session, SparkEntry}
 
@@ -23,8 +24,12 @@ import graft.{Caches, Session, SparkEntry}
   *
   * The action is `count()`, as in Bench, so the plan is the benched
   * one: column pruning may drop work a written result would pay.
+  * With `runs` = 0 nothing runs: the query's own optimized logical
+  * plan (no count on top) is written to
+  * `target/probe/<query>.optimized.txt`, the file a refactor that must
+  * keep plans unchanged diffs between two checkouts.
   *
-  * Usage: `sbt "Test/runMain graft.tools.Probe <query> <dir> [runs]"`.
+  * Usage: `sbt "Test/runMain graft.tools.Probe <query>[,<query>…] <dir> [runs]"`.
   * Keys the session does not set can be A/B'd as `-Dspark.…` JVM
   * properties.
   */
@@ -37,17 +42,36 @@ object Probe {
 
   def main(args: Array[String]): Unit = {
     if (args.length < 2) {
-      System.err.println("usage: graft.tools.Probe <query> <dir> [runs]")
+      System.err.println("usage: graft.tools.Probe <query>[,<query>…] <dir> [runs]")
       sys.exit(2)
     }
-    val name = args(0)
+    val names = args(0).split(",").toSeq
     val dir = args(1)
     val runs = args.lift(2).map(_.toInt).getOrElse(1)
-    val query = SparkEntry.queries(name)
+    names.foreach(SparkEntry.queries) // fail on a bad name before any work
     val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
+    names.foreach(probe(spark, _, dir, runs))
+    spark.stop()
+  }
+
+  private def write(file: String, text: String): java.nio.file.Path = {
+    val out = Paths.get(sys.props("user.dir"), "target", "probe", file)
+    Files.createDirectories(out.getParent)
+    Files.writeString(out, text)
+  }
+
+  private def probe(spark: SparkSession, name: String, dir: String, runs: Int): Unit = {
+    val query = SparkEntry.queries(name)
+    if (runs == 0) {
+      val out = write(s"$name.optimized.txt",
+        query(spark, dir).queryExecution.optimizedPlan.toString)
+      Caches.clear()
+      println(s"[probe] $name optimized logical plan: $out")
+      return
+    }
     val stages = ArrayBuffer[St]()
-    spark.sparkContext.addSparkListener(new SparkListener {
+    val listener = new SparkListener {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val si = e.stageInfo
         val m = si.taskMetrics
@@ -60,7 +84,8 @@ object Probe {
             m.memoryBytesSpilled, m.diskBytesSpilled, sub, end)
         }
       }
-    })
+    }
+    spark.sparkContext.addSparkListener(listener)
 
     var plan = ""
     for (r <- 1 to runs) {
@@ -80,6 +105,7 @@ object Probe {
         f"(construct=${(tBuilt - t0) / 1e9}%.2f s, execute=${(tDone - tBuilt) / 1e9}%.2f s)")
     }
     BenchMetricsListener.drainBus(spark.sparkContext)
+    spark.sparkContext.removeSparkListener(listener)
 
     val mb = 1024.0 * 1024
     val byWall = stages.synchronized(stages.sortBy(-_.ms).toSeq)
@@ -106,12 +132,9 @@ object Probe {
       }
     }
 
-    val out = Paths.get(sys.props("user.dir"), "target", "probe", s"$name.txt")
-    Files.createDirectories(out.getParent)
-    Files.writeString(out, plan)
+    val out = write(s"$name.txt", plan)
     println(s"[probe] final plan (full text: $out):")
     plan.linesIterator.takeWhile(!_.contains("== Initial Plan ==")).zipWithIndex
       .foreach { case (l, i) => if (PlanKeys.exists(l.contains)) println(f"$i%4d $l") }
-    spark.stop()
   }
 }
