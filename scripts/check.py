@@ -2,7 +2,9 @@
 """Local oracle check mimicking the driver: for each query output in
 OUTDIR, run the oracle SQL from oracle_sql.json in DuckDB over the
 same sf tables and compare values (columns sorted by name, rows
-sorted). Exact equality required, mirroring a hash compare."""
+sorted). Exact equality required, mirroring a hash compare. A query
+named in oracle_sql.json with no output directory (its write failed)
+is a FAIL, not a skip."""
 import sys, json, glob, os
 import duckdb, pandas as pd
 
@@ -55,6 +57,9 @@ for name in sorted(os.listdir(outdir)):
             bad.append((c, f"{int(neq.sum())} diffs, first@{i}: got={gv[i]!r} exp={ev[i]!r}"))
     if bad: fails.append((name, "; ".join(f"{c}: {m}" for c, m in bad)))
     else: okc += 1
+for name in sorted(oracle):
+    if not os.path.isdir(os.path.join(outdir, name)):
+        fails.append((name, "no output directory"))
 for n, r in rowsonly: print(f"ROWS-ONLY {n}: {r} rows")
 print(f"\nPASS {okc}  FAIL {len(fails)}")
 for n, m in fails: print(f"FAIL {n}: {m[:500]}")

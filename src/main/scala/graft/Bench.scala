@@ -671,7 +671,7 @@ object Bench {
       (System.nanoTime() - p0) / 1e9
     }
     System.err.println(f"[bench] main suite: $sfDir x $runs passes (pass-major); budget ${budgetSec}%.0f s")
-    var mainPassCost = mainPass()
+    val mainPassCost = mainPass()
     System.err.println(f"[bench] main suite pass 1/$runs done: ${results.size} queries, ${mainPassCost}%.0f s; elapsed ${elapsedSec}%.0f s")
 
     // Scale sections: median-of-n per heavy query at each scale dir,
@@ -680,11 +680,11 @@ object Bench {
     // build the proxies or time excluded queries (their exponents
     // would be meaningless anyway with no base median).
 
-    /** Resolve (and build-once if absent) a scale-proxy dir; None
-      * disables the section. The _COMPLETE marker records the built
-      * row counts — validated against the CURRENT source corpus, or
-      * a proxy built from older/different testdata would produce
-      * plausible-looking but meaningless exponents in the JSON.
+    /** Resolve (and build once) a scale-proxy dir; None disables the
+      * section. GenScale.build rebuilds a proxy built from other
+      * testdata, which would produce plausible-looking but meaningless
+      * exponents in the JSON; a failed build disables the section
+      * rather than yield unexplained per-query failures.
       */
     def resolveScaleDir(envKey: String, default: String, replicas: Int,
         wanted: Seq[String]): Option[String] = Some(())
@@ -693,26 +693,11 @@ object Bench {
         .orElse(Some(default).filter(_ => sfDir.contains("sf0.1"))))
       .filter(d => d.nonEmpty && d != "none")
       .flatMap { d =>
-        val marker = java.nio.file.Paths.get(d, "_COMPLETE")
-        try {
-          if (java.nio.file.Files.exists(marker)) {
-            val expected = Seq("documents", "embeddings", "part").map { t =>
-              s"$t=${spark.read.parquet(s"$sfDir/$t.parquet").count() * replicas}"
-            } :+ bench.GenScale.CipherTag
-            val recorded = new String(
-              java.nio.file.Files.readAllBytes(marker), "UTF-8").linesIterator.toSeq
-            if (recorded != expected) {
-              System.err.println(s"[bench] scale dir $d is stale vs $sfDir; rebuilding")
-              java.nio.file.Files.delete(marker)
-            }
-          }
-          if (!java.nio.file.Files.exists(marker))
-            bench.GenScale.build(spark, sfDir, d, replicas)
-        } catch { case e: Exception =>
-          System.err.println(s"[bench] scale-dir build failed: ${e.getMessage}") }
-        // gate on the build's completion marker, not one table: a
-        // half-built dir would yield unexplained per-query failures
-        Some(d).filter(_ => java.nio.file.Files.exists(marker))
+        try { bench.GenScale.build(spark, sfDir, d, replicas); Some(d) }
+        catch { case e: Exception =>
+          System.err.println(s"[bench] scale-dir build failed: ${e.getMessage}")
+          None
+        }
       }
     // ---- sf10 section: FRESH primaries first (the cross-round
     // numbers the 2x gate reads), in-suite witness passes LAST ----
@@ -828,14 +813,14 @@ object Bench {
     if (only.isEmpty) {
       val stressRoot = "/root/repo/.data/interop"
       val built = java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$stressRoot/iceberg100/_STRESS_COMPLETE"))
+        java.nio.file.Paths.get(stressRoot, "iceberg100", BuildOnce.Marker))
       if (!built && !budgeted(300 + finalReserveSecEarly)) {
         dropped += "interop:fixture-build"
         System.err.println(f"[bench] budget: dropping interop stress (fixtures unbuilt, remaining ${remainingSec}%.0f s)")
       } else try {
         import graft.sources.{DeltaTable, IcebergTable, StressFixtures}
         val dTbl = StressFixtures.ensureDeltaStress(spark, stressRoot)
-        val iTbl = StressFixtures.ensureIcebergStress(stressRoot)
+        val iTbl = StressFixtures.ensureIcebergStress(spark, stressRoot)
         def med3(f: => Unit): Double = (0 until 3).map { _ =>
           val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
         }.sorted.apply(1)

@@ -1,7 +1,7 @@
 package graft
 
 /** Process-wide accumulator for wall time spent ENSURING on-disk
-  * fixtures (existence checks, source-row collects, and builds) as
+  * fixtures (freshness checks and builds) as
   * opposed to executing the query under measurement.
   *
   * Why it exists (r14 VERDICT "what's wrong" #2): the driver's bench
@@ -14,8 +14,9 @@ package graft
   * `fixture_sec`, so a fixture-dominated row self-explains.
   *
   * Accounting is OUTERMOST-only per thread (a ThreadLocal depth
-  * guard): nested ensure calls (ensureTiledSink -> ensureAtomic,
-  * cowScenario -> SnapshotTable commits) must not double-count.
+  * guard): nested ensure calls (ensureIcebergStress ->
+  * ensureDeltaStress, each a [[BuildOnce.ensure]]) must not
+  * double-count.
   * Fixture ensures run on the query-construction (driver) thread, so
   * a single atomic accumulator is sufficient and cross-thread races
   * only ever under-attribute, never corrupt.

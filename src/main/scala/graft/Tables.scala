@@ -16,18 +16,21 @@ object Tables {
     */
   val NanosConf: (String, String) = "spark.sql.legacy.parquet.nanosAsLong" -> "true"
 
-  /** Schema-inference cache, keyed by parquet path. A schema-less
-    * `spark.read.parquet` runs a footer-read JOB at DataFrame
-    * construction; the tables here are immutable within a JVM, so the
-    * footer is read once per path and every later construction is
-    * job-free (matters to Bench, which rebuilds each query's frame
-    * per run, and to the no-eager-job guarantee DedupSpec asserts).
+  /** Schema-inference cache, keyed by the table's
+    * [[BuildOnce.fingerprint]] (its files' paths, lengths and mtimes).
+    * A schema-less `spark.read.parquet` runs a footer-read JOB at
+    * DataFrame construction; with the cache the footer is read once per
+    * version of a table and every later construction is job-free
+    * (matters to Bench, which rebuilds each query's frame per run, and
+    * to the no-eager-job guarantee DedupSpec asserts), while a table
+    * rewritten in the JVM is read with its new schema.
     */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
   private def read(s: SparkSession, path: String): DataFrame = {
-    val sch = schemaCache.computeIfAbsent(path, p => s.read.parquet(p).schema)
+    val sch = schemaCache.computeIfAbsent(BuildOnce.fingerprint(s, Seq(path)),
+      _ => s.read.parquet(path).schema)
     s.read.schema(sch).parquet(path)
   }
   def region(s: SparkSession, dir: String): DataFrame    = read(s, s"$dir/region.parquet")

@@ -1,8 +1,7 @@
 package graft.bench
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{BuildOnce, Tables}
 
 /** Builds the 10× scale-proxy dataset (default `.data/sf1`) from
   * sf0.1 for the scaling-exponent measurement (Bench's `sf1`
@@ -27,9 +26,10 @@ import graft.Tables
   *
   * Replica 0 is the identity — sf0.1 is a subset of the output.
   * Generation is fully distributed (N unioned selects, no driver
-  * data); a _COMPLETE marker makes it build-once. The marker carries
-  * a cipher-version tag, so dirs built by an older generator
-  * auto-rebuild (Bench validates the tag along with the counts).
+  * data) and build-once through [[graft.BuildOnce]]: the stamp carries
+  * the cipher-version tag and the replica count, and the source
+  * tables' fingerprint, so a dir built by an older generator or from
+  * other testdata rebuilds.
   *
   * `replicas` defaults to 10 (the sf1 proxy); Bench's sf10 section
   * passes 100 for the second scale decade. The per-replica bijection
@@ -84,16 +84,21 @@ object GenScale {
     if (ownSession) spark.stop() // don't kill a caller's session (Bench)
   }
 
-  /** Build the scale dataset with the caller's session; no-op if the
-    * completion marker is present.
+  /** Build the scale dataset with the caller's session; no-op if it
+    * is already built by this generator from these source tables.
     */
   def build(spark: SparkSession, srcDir: String, outDir: String,
       replicas: Int = Replicas): Unit = {
     require(replicas > 0 && replicas < 130,
       s"replicas must be in (0, 130) for distinct ciphers, got $replicas")
-    val marker = Paths.get(outDir, "_COMPLETE")
-    if (Files.exists(marker)) { println(s"[genscale] $outDir already complete"); return }
+    BuildOnce.ensure(spark, outDir, s"genscale $CipherTag replicas=$replicas",
+      Seq("documents", "embeddings", "part").map(t => s"$srcDir/$t.parquet")) { out =>
+      write(spark, srcDir, out, replicas)
+      println(s"[genscale] wrote $out")
+    }
+  }
 
+  private def write(spark: SparkSession, srcDir: String, outDir: String, replicas: Int): Unit = {
     def replicate(base: DataFrame)(f: (DataFrame, Int) => DataFrame): DataFrame =
       (0 until replicas).map(k => f(base, k)).reduce(_.unionAll(_))
 
@@ -124,10 +129,6 @@ object GenScale {
     docs.write.mode("overwrite").parquet(s"$outDir/documents.parquet")
     emb.write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
     part.write.mode("overwrite").parquet(s"$outDir/part.parquet")
-    val counts = Seq("documents", "embeddings", "part")
-      .map(t => s"$t=${spark.read.parquet(s"$outDir/$t.parquet").count()}") :+ CipherTag
-    Files.write(marker, counts.mkString("\n").getBytes("UTF-8"))
-    println(s"[genscale] wrote $outDir: ${counts.mkString(", ")}")
   }
 
   /** Synthetic hot user for the skewed variant — a value outside the
@@ -147,25 +148,22 @@ object GenScale {
     * measurement.
     */
   def buildSkewedEvents(spark: SparkSession, srcDir: String, outDir: String,
-      replicas: Int): Unit = {
-    val marker = Paths.get(outDir, "_COMPLETE")
-    if (Files.exists(marker)) { println(s"[genscale] $outDir already complete"); return }
-    val base = Tables.events(spark, srcDir)
-    val ev = (0 until replicas).map { k =>
-      base.select((col("event_id") + k * Stride).as("event_id"), col("ts"),
-        (col("user_id") + k * Stride).as("user_id"),
-        col("event_type"), col("value"), col("props"))
-    }.reduce(_.unionAll(_))
-      .withColumn("user_id",
-        when(pmod(col("event_id"), lit(5)) === 0, lit(HotUser)).otherwise(col("user_id")))
-    ev.write.mode("overwrite").parquet(s"$outDir/events.parquet")
-    spark.read.parquet(s"$outDir/events.parquet")
-      .select("user_id").distinct()
-      .withColumn("segment", pmod(col("user_id"), lit(1000)).cast("int"))
-      .write.mode("overwrite").parquet(s"$outDir/users.parquet")
-    val counts = Seq("events", "users")
-      .map(t => s"$t=${spark.read.parquet(s"$outDir/$t.parquet").count()}")
-    Files.write(marker, counts.mkString("\n").getBytes("UTF-8"))
-    println(s"[genscale] wrote $outDir: ${counts.mkString(", ")}")
-  }
+      replicas: Int): Unit =
+    BuildOnce.ensure(spark, outDir, s"skewed-events replicas=$replicas",
+        Seq(s"$srcDir/events.parquet")) { out =>
+      val base = Tables.events(spark, srcDir)
+      val ev = (0 until replicas).map { k =>
+        base.select((col("event_id") + k * Stride).as("event_id"), col("ts"),
+          (col("user_id") + k * Stride).as("user_id"),
+          col("event_type"), col("value"), col("props"))
+      }.reduce(_.unionAll(_))
+        .withColumn("user_id",
+          when(pmod(col("event_id"), lit(5)) === 0, lit(HotUser)).otherwise(col("user_id")))
+      ev.write.mode("overwrite").parquet(s"$out/events.parquet")
+      spark.read.parquet(s"$out/events.parquet")
+        .select("user_id").distinct()
+        .withColumn("segment", pmod(col("user_id"), lit(1000)).cast("int"))
+        .write.mode("overwrite").parquet(s"$out/users.parquet")
+      println(s"[genscale] wrote $out")
+    }
 }

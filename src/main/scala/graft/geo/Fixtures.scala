@@ -5,6 +5,7 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.BuildOnce
 
 /** Deterministic on-disk fixtures standing in for the reference's
   * external world (the `raster` S3 bucket): binary GRFT tiles for the
@@ -12,10 +13,11 @@ import org.apache.spark.sql.functions._
   * partially-downloaded tiles for the FS-listing manifest (g8). Both
   * derive every byte from the same integer formulas the DuckDB oracle
   * evaluates, so query results are oracle-exact while the Spark side
-  * genuinely reads files. Generation is idempotent (skipped when the
-  * directory already holds the expected file count) and bounded
-  * (≤ RasterLimit / ListingLimit tiles, collected driver-side only to
-  * WRITE the fixture — the queries themselves never collect).
+  * genuinely reads files. Generation is build-once through
+  * [[graft.BuildOnce]] (rebuilt only when the recipe tag or the source
+  * table's fingerprint changes) and bounded (≤ RasterLimit /
+  * ListingLimit tiles, collected only to WRITE the fixture — the
+  * queries themselves never collect).
   */
 object Fixtures {
 
@@ -26,79 +28,13 @@ object Fixtures {
   /** Fixtures live under the build's target/ dir (gitignored, inside
     * the repo) — keyed by the sf dir so scale factors don't collide.
     */
-  private[graft] def fixtureRoot(kind: String, dir: String): File =
+  private[graft] def fixtureRoot(kind: String, dir: String): String =
     new File(new File(sys.props("user.dir"), "target/fixtures"),
-      s"graft_${kind}_" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-
-  /** Marker file recording the file count a complete fixture holds. */
-  private val CompleteMarker = "_COMPLETE"
+      s"graft_${kind}_" + dir.replaceAll("[^A-Za-z0-9.]", "_")).toString
 
   private[graft] def deleteRecursively(f: File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete()
-  }
-
-  /** Fixture roots already verified complete this JVM. A complete
-    * fixture is immutable (tmp-then-rename publication below), so the
-    * memo is sound — and it is what keeps re-runs out of the fixture
-    * path entirely: without it every bench run re-pays the
-    * completeness check, which for the raster/ingest families is a
-    * Spark collect over the source corpus (the r14 driver artifact's
-    * stable per-run inflation on fixture-backed rows).
-    */
-  private val verified = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Build-once guard with ATOMIC publication: a fixture is complete
-    * iff its `_COMPLETE` marker holds the expected file count — a file
-    * count alone cannot distinguish a finished build from a torn one
-    * (a killed previous run can leave exactly N stale files).
-    * Rebuilds write every file into a fresh sibling temp dir, stamp
-    * the marker LAST, then swap the temp dir into place with a
-    * same-directory rename — readers only ever see no dir, a stale
-    * complete dir, or the new complete dir, never a half-written one.
-    * The guarantee is JVM-level only (`synchronized` + rename): two
-    * concurrent PROCESSES could interleave the delete/rename. Fine
-    * here — this repo runs a single sbt instance by constraint; a
-    * cross-process deployment would need Files.move(ATOMIC_MOVE)
-    * under a file lock.
-    *
-    * `expected` is BY-NAME and callers pass their source-row collects
-    * lazily: a memo hit forces nothing, and a marker-check or build
-    * forces it INSIDE the [[graft.FixtureTimer]] window, so every
-    * second of fixture work lands in the bench's `fixture_sec` column
-    * instead of masquerading as query time.
-    */
-  private[graft] def ensureAtomic(out: File, expected: => Int)(write: File => Unit): String = {
-    val memo = verified.get(out.getPath)
-    // memo hits re-check the marker EXISTS (File.exists is ~free):
-    // the JVM-lifetime memo never invalidates on its own, so a
-    // fixture dir deleted or torn mid-JVM (test cleanup, operator
-    // action) would otherwise hand later callers a stale 'complete'
-    // path and fail them on a missing directory (r15 ADVICE). A
-    // missing marker drops the memo and falls through to the full
-    // check-and-rebuild.
-    if (memo != null) {
-      if (new File(out, CompleteMarker).exists()) return memo
-      verified.remove(out.getPath)
-    }
-    graft.FixtureTimer.timed {
-      val marker = new File(out, CompleteMarker)
-      val complete = marker.exists() &&
-        new String(Files.readAllBytes(marker.toPath)).trim == expected.toString
-      if (!complete) {
-        val tmp = new File(out.getParentFile, out.getName + ".tmp")
-        deleteRecursively(tmp)
-        tmp.mkdirs()
-        write(tmp)
-        Files.write(Paths.get(tmp.toString, CompleteMarker),
-          expected.toString.getBytes("UTF-8"))
-        deleteRecursively(out)
-        if (!tmp.renameTo(out))
-          throw new java.io.IOException(s"fixture rename failed: $tmp -> $out")
-      }
-      verified.put(out.getPath, out.toString)
-      out.toString
-    }
   }
 
   private def tileRows(s: SparkSession, dir: String, limit: Int): Array[(Int, Int, Int, String)] =
@@ -133,14 +69,12 @@ object Fixtures {
     * lon0)`; returns the directory's path.
     */
   private def ensureTileFiles(s: SparkSession, dir: String, kind: String, ext: String)(
-      bytes: (Int, Int, Int) => Array[Byte]): String = synchronized {
-    lazy val tiles = tileRows(s, dir, RasterLimit)
-    ensureAtomic(fixtureRoot(kind, dir), tiles.length) { tmp =>
-      tiles.foreach { case (id, lat0, lon0, key) =>
-        Files.write(Paths.get(tmp.toString, s"$key.$ext"), bytes(id, lat0, lon0))
+      bytes: (Int, Int, Int) => Array[Byte]): String =
+    BuildOnce.ensure(s, fixtureRoot(kind, dir), s"$kind v1", Seq(s"$dir/part.parquet")) { out =>
+      tileRows(s, dir, RasterLimit).foreach { case (id, lat0, lon0, key) =>
+        Files.write(Paths.get(out, s"$key.$ext"), bytes(id, lat0, lon0))
       }
     }
-  }
 
   /** Ensure the GRFT raster directory for `dir` exists; returns its
     * path. One `<tile_key>.grft` file per tile with tile_id <
@@ -190,19 +124,16 @@ object Fixtures {
     * `<tile_key>.grft` per mosaic origin — genuine adjacency, unlike
     * the scattered main universe.
     */
-  def ensureMosaic(s: SparkSession, dir: String): String = synchronized {
-    val out = fixtureRoot("mosaic", dir)
-    val origins = for {
-      lat0 <- MosaicLat0 until (MosaicLat0 + MosaicW)
-      lon0 <- MosaicLon0 until (MosaicLon0 + MosaicW)
-    } yield (lat0, lon0)
-    ensureAtomic(out, origins.length) { tmp =>
-      origins.foreach { case (lat0, lon0) =>
+  def ensureMosaic(s: SparkSession, dir: String): String =
+    BuildOnce.ensure(s, fixtureRoot("mosaic", dir), "mosaic v1", Nil) { out =>
+      for {
+        lat0 <- MosaicLat0 until (MosaicLat0 + MosaicW)
+        lon0 <- MosaicLon0 until (MosaicLon0 + MosaicW)
+      } {
         val key = f"ALPSMLC30_N$lat0%03dE$lon0%03d_DSM"
-        Files.write(Paths.get(tmp.toString, s"$key.grft"), mosaicBytes(lat0, lon0))
+        Files.write(Paths.get(out, s"$key.grft"), mosaicBytes(lat0, lon0))
       }
     }
-  }
 
   /** Minimal REAL baseline-TIFF payload for one tile: little-endian
     * ("II"), one 32-bit SIGNED-int band (SampleFormat=2), STRIPED with
@@ -822,16 +753,13 @@ object Fixtures {
     * those with tile_id % 7 == 0 are one byte SHORT of the expected
     * size (a torn download the manifest must flag for re-fetch).
     */
-  def ensureListing(s: SparkSession, dir: String): String = synchronized {
-    val out = fixtureRoot("listing", dir)
-    lazy val tiles = tileRows(s, dir, ListingLimit).filter(_._1 % 3 == 0)
-    ensureAtomic(out, tiles.length) { tmp =>
-      tiles.foreach { case (id, _, _, key) =>
+  def ensureListing(s: SparkSession, dir: String): String =
+    BuildOnce.ensure(s, fixtureRoot("listing", dir), "listing v1", Seq(s"$dir/part.parquet")) { out =>
+      tileRows(s, dir, ListingLimit).filter(_._1 % 3 == 0).foreach { case (id, _, _, key) =>
         val size = listingSize(id) - (if (id % 7 == 0) 1 else 0)
-        Files.write(Paths.get(tmp.toString, s"$key.grft"), new Array[Byte](size))
+        Files.write(Paths.get(out, s"$key.grft"), new Array[Byte](size))
       }
     }
-  }
 
   /** Tile-id bound for the partitioned-sink fixture (g11). */
   val TiledLimit = 500
@@ -843,20 +771,12 @@ object Fixtures {
     * so every partition directory holds ONE file (without it each of
     * the 32 write tasks opens a file per key it sees — a small-files
     * explosion that at sink scale also blows write-side memory).
-    * Same atomic tmp-then-rename publication as ensureAtomic; the
-    * expected-count marker holds the deterministic ROW count (tiles ×
-    * n²), checked before trusting an existing dir. Spark ignores the
-    * underscore-prefixed marker when reading the root as parquet.
+    * Spark ignores BuildOnce's underscore-prefixed marker when reading
+    * the root as parquet.
     */
-  def ensureTiledSink(s: SparkSession, dir: String): String = synchronized {
-    val out = fixtureRoot("tiled_sink", dir)
-    lazy val tiles = Geo.tiles(s, dir).filter(col("tile_id") < TiledLimit)
-    // lazy: the expected-count job runs inside ensureAtomic's timed
-    // window (by-name `expected`), so the bench's fixture_sec column
-    // prices it instead of the first query run absorbing it silently
-    lazy val nTiles = tiles.count()
-    ensureAtomic(out, (nTiles * GridN * GridN).toInt) { tmp =>
-      Geo.writeTiled(Geo.gridExpand(tiles).repartition(col("tile_key")), tmp.toString)
+  def ensureTiledSink(s: SparkSession, dir: String): String =
+    BuildOnce.ensure(s, fixtureRoot("tiled_sink", dir), "tiled_sink v1", Seq(s"$dir/part.parquet")) { out =>
+      val tiles = Geo.tiles(s, dir).filter(col("tile_id") < TiledLimit)
+      Geo.writeTiled(Geo.gridExpand(tiles).repartition(col("tile_key")), out)
     }
-  }
 }

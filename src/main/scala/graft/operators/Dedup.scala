@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.Det._
 import graft.functions.TextFns._
 import org.apache.spark.sql.graft.ArrayExprs
 

@@ -2342,24 +2342,21 @@ object Relational {
   }
 
   /** Month-partitioned orders fixture for q75 (the ensureEvolution
-    * pattern: real Spark writer, `_built` stamp): one hive directory
-    * per `o_month = year·100 + month` — the star-schema fact layout
-    * whose directories dynamic pruning skips.
+    * pattern: real Spark writer, built once): one hive directory per
+    * `o_month = year·100 + month` — the star-schema fact layout whose
+    * directories dynamic pruning skips.
     */
-  private def ensureMonthPartitioned(s: SparkSession, dir: String): String =
-    synchronized {
-      val out = graft.geo.Fixtures.fixtureRoot("ordpart", dir)
-      val stamp = new java.io.File(out, "_built")
-      if (!stamp.exists) graft.FixtureTimer.timed {
-        Tables.orders(s, dir)
-          .withColumn("o_month",
-            (year(col("o_orderdate")) * 100 + month(col("o_orderdate"))).cast("int"))
-          .write.mode("overwrite").partitionBy("o_month")
-          .parquet(s"$out/data")
-        java.nio.file.Files.write(stamp.toPath, Array.emptyByteArray)
-      }
-      s"$out/data"
+  private def ensureMonthPartitioned(s: SparkSession, dir: String): String = {
+    val root = graft.BuildOnce.ensure(s, graft.geo.Fixtures.fixtureRoot("ordpart", dir),
+        "ordpart v1", Seq(s"$dir/orders.parquet")) { out =>
+      Tables.orders(s, dir)
+        .withColumn("o_month",
+          (year(col("o_orderdate")) * 100 + month(col("o_orderdate"))).cast("int"))
+        .write.mode("overwrite").partitionBy("o_month")
+        .parquet(s"$out/data")
     }
+    s"$root/data"
+  }
 
   /** q75: DYNAMIC PARTITION PRUNING — the join-driven complement of
     * g11's static IN-list pruning, and THE star-schema optimization

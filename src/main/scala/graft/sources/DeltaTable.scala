@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -455,7 +455,7 @@ object DeltaTable {
         else if (other.nonEmpty)
           readSubset(s, table, other, otherSnap).limit(0)
         else read(s, table, v + 1).limit(0)
-      SnapshotTable.frameDiffChanges(s,
+      SnapshotTable.frameDiffChanges(
         added = side(added, b, removed, a),
         removed = side(removed, a, added, b),
         keyCols, cache = true, commitV = v + 1)
@@ -602,7 +602,7 @@ object DeltaTable {
     if (p.startsWith("/") || p.contains(":/")) p else s"$table/$p"
 
   private def readAdds(s: SparkSession, table: String, adds: Seq[AddFile],
-      snap: Snapshot, withOrdinals: Boolean = false): DataFrame = {
+      snap: Snapshot, withOrdinals: Boolean): DataFrame = {
     require(adds.nonEmpty, s"readAdds on empty file set at $table")
     val cmMode = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
     require(cmMode == "none" || cmMode == "name" || cmMode == "id",

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{BuildOnce, Tables}
 import graft.geo.Fixtures
 
 /** Deterministic JSONL/CSV ingest fixtures — the on-disk corpora the
@@ -40,6 +40,12 @@ object IngestFixtures {
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
 
+  /** Build-once frame of every fixture here: `kind`'s root for `dir`,
+    * rebuilt in place by `build` when the documents table changes. */
+  private def ensure(s: SparkSession, dir: String, kind: String)(build: java.io.File => Unit): String =
+    BuildOnce.ensure(s, Fixtures.fixtureRoot(kind, dir), s"$kind v1",
+      Seq(s"$dir/documents.parquet"))(out => build(new java.io.File(out)))
+
   /** Spec-correct JSON string escape (quote, backslash, control). */
   private def jesc(x: String): String = {
     val b = new StringBuilder(x.length + 8)
@@ -62,10 +68,9 @@ object IngestFixtures {
     * torn doc_ids truncated to 2/3 length; a blank line every 50 docs
     * (shard padding the reader must drop, not quarantine).
     */
-  def ensureJsonl(s: SparkSession, dir: String): String = synchronized {
-    val out = Fixtures.fixtureRoot("jsonl", dir)
+  def ensureJsonl(s: SparkSession, dir: String): String = {
     lazy val rows = docRows(s, dir)
-    Fixtures.ensureAtomic(out, 1) { tmp =>
+    ensure(s, dir, "jsonl") { root =>
       val sb = new StringBuilder
       rows.zipWithIndex.foreach { case ((id, text, lang, src, nc), i) =>
         val line = s"""{"doc_id":$id,"text":"${jesc(text)}","lang":"${jesc(lang)}","source":"${jesc(src)}","n_chars":$nc}"""
@@ -75,7 +80,7 @@ object IngestFixtures {
         sb.append('\n')
         if (i % 50 == 49) sb.append('\n')
       }
-      Files.write(Paths.get(tmp.toString, "corpus.jsonl"),
+      Files.write(Paths.get(root.toString, "corpus.jsonl"),
         sb.toString.getBytes(StandardCharsets.UTF_8))
     }
   }
@@ -89,10 +94,9 @@ object IngestFixtures {
     * is how web corpora actually arrive (Common Crawl WET/WARC is
     * gzip-member-sharded for exactly this reason).
     */
-  def ensureJsonlGz(s: SparkSession, dir: String): String = synchronized {
-    val out = Fixtures.fixtureRoot("jsonlgz", dir)
+  def ensureJsonlGz(s: SparkSession, dir: String): String = {
     lazy val rows = docRows(s, dir)
-    Fixtures.ensureAtomic(out, 4) { tmp =>
+    ensure(s, dir, "jsonlgz") { root =>
       (0 until 4).foreach { shard =>
         val sb = new StringBuilder
         rows.filter(_._1 % 4 == shard).foreach { case (id, text, lang, src, nc) =>
@@ -103,7 +107,7 @@ object IngestFixtures {
           sb.append('\n')
         }
         val gz = new java.util.zip.GZIPOutputStream(
-          Files.newOutputStream(Paths.get(tmp.toString, s"shard-$shard.jsonl.gz")))
+          Files.newOutputStream(Paths.get(root.toString, s"shard-$shard.jsonl.gz")))
         try gz.write(sb.toString.getBytes(StandardCharsets.UTF_8))
         finally gz.close()
       }
@@ -114,10 +118,9 @@ object IngestFixtures {
     * torn doc_ids carry a non-numeric doc_id (type mismatch → the
     * PERMISSIVE corrupt column), never an unclosed quote.
     */
-  def ensureCsv(s: SparkSession, dir: String): String = synchronized {
-    val out = Fixtures.fixtureRoot("csv", dir)
+  def ensureCsv(s: SparkSession, dir: String): String = {
     lazy val rows = docRows(s, dir)
-    Fixtures.ensureAtomic(out, 1) { tmp =>
+    ensure(s, dir, "csv") { root =>
       val sb = new StringBuilder("doc_id,text,lang,source,n_chars\n")
       rows.foreach { case (id, text, lang, src, nc) =>
         val idField = if (id % TornMod == TornRem) s"t$id" else id.toString
@@ -125,7 +128,7 @@ object IngestFixtures {
           .append(cesc(lang)).append(',').append(cesc(src)).append(',')
           .append(nc).append('\n')
       }
-      Files.write(Paths.get(tmp.toString, "corpus.csv"),
+      Files.write(Paths.get(root.toString, "corpus.csv"),
         sb.toString.getBytes(StandardCharsets.UTF_8))
     }
   }
@@ -136,24 +139,19 @@ object IngestFixtures {
     * schema with an added `quality` column (`doc_id·7 mod 100`, the
     * §3 arithmetic rule so the oracle recomputes it from the table).
     * Batch membership = `doc_id mod 2`. Parquet written through the
-    * real Spark writer; a `_built` stamp makes the build idempotent.
+    * real Spark writer.
     */
-  def ensureEvolution(s: SparkSession, dir: String): String = synchronized {
-    val out = Fixtures.fixtureRoot("evo", dir)
-    val stamp = new java.io.File(out, "_built")
-    if (!stamp.exists) graft.FixtureTimer.timed {
+  def ensureEvolution(s: SparkSession, dir: String): String =
+    ensure(s, dir, "evo") { root =>
       val base = Tables.documents(s, dir).filter(col("doc_id") < DocLimit)
       base.filter(pmod(col("doc_id"), lit(2)) === 0)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$out/batch=0")
+        .coalesce(1).write.mode("overwrite").parquet(s"$root/batch=0")
       base.filter(pmod(col("doc_id"), lit(2)) === 1)
         .select(col("doc_id"), col("lang"), col("n_chars"),
           pmod(col("doc_id") * 7, lit(100)).cast("long").as("quality"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$out/batch=1")
-      Files.write(stamp.toPath, Array.emptyByteArray)
+        .coalesce(1).write.mode("overwrite").parquet(s"$root/batch=1")
     }
-    out.toString
-  }
 
   /** Ensure the ORC corpus for `dir`: the same doc_id < DocLimit
     * slice written through Spark's native ORC writer (the second
@@ -174,10 +172,9 @@ object IngestFixtures {
     * following row into one corrupt record (rowTag scanning has no
     * line boundary to resynchronize on).
     */
-  def ensureXml(s: SparkSession, dir: String): String = synchronized {
-    val out = Fixtures.fixtureRoot("xml", dir)
+  def ensureXml(s: SparkSession, dir: String): String = {
     lazy val rows = docRows(s, dir)
-    Fixtures.ensureAtomic(out, 1) { tmp =>
+    ensure(s, dir, "xml") { root =>
       val sb = new StringBuilder
       sb.append("<corpus>\n")
       rows.foreach { case (id, text, lang, src, nc) =>
@@ -190,7 +187,7 @@ object IngestFixtures {
           .append("</n_chars></doc>\n")
       }
       sb.append("</corpus>\n")
-      Files.write(Paths.get(tmp.toString, "corpus.xml"),
+      Files.write(Paths.get(root.toString, "corpus.xml"),
         sb.toString.getBytes(StandardCharsets.UTF_8))
     }
   }
@@ -210,10 +207,9 @@ object IngestFixtures {
     * pair, so delimiter-scan framing and Content-Length agree —
     * j7's mismatch counter would catch a violation, not mask it.
     */
-  def ensureWarc(s: SparkSession, dir: String): String = synchronized {
-    val out = Fixtures.fixtureRoot("warc", dir)
+  def ensureWarc(s: SparkSession, dir: String): String = {
     lazy val rows = docRows(s, dir)
-    Fixtures.ensureAtomic(out, 4) { tmp =>
+    ensure(s, dir, "warc") { root =>
       (0 until 4).foreach { shard =>
         val sb = new StringBuilder
         rows.filter(_._1 % 4 == shard).foreach { case (id, text, _, src, _) =>
@@ -227,7 +223,7 @@ object IngestFixtures {
             .append(text)
             .append("\r\n\r\n")
         }
-        Files.write(Paths.get(tmp.toString, s"shard-$shard.warc"),
+        Files.write(Paths.get(root.toString, s"shard-$shard.warc"),
           sb.toString.getBytes(StandardCharsets.UTF_8))
       }
     }
@@ -244,10 +240,9 @@ object IngestFixtures {
     * truncated array: one torn bracket would swallow the whole shard
     * into a single corrupt record.
     */
-  def ensureJsonArray(s: SparkSession, dir: String): String = synchronized {
-    val out = Fixtures.fixtureRoot("jsonarr", dir)
+  def ensureJsonArray(s: SparkSession, dir: String): String = {
     lazy val rows = docRows(s, dir)
-    Fixtures.ensureAtomic(out, 4) { tmp =>
+    ensure(s, dir, "jsonarr") { root =>
       (0 until 4).foreach { shard =>
         val sb = new StringBuilder("[\n")
         val mine = rows.filter(_._1 % 4 == shard)
@@ -258,7 +253,7 @@ object IngestFixtures {
           sb.append(if (i < mine.length - 1) ",\n" else "\n")
         }
         sb.append("]\n")
-        Files.write(Paths.get(tmp.toString, s"shard-$shard.json"),
+        Files.write(Paths.get(root.toString, s"shard-$shard.json"),
           sb.toString.getBytes(StandardCharsets.UTF_8))
       }
     }
@@ -282,29 +277,23 @@ object IngestFixtures {
     * text line — Avro's sync markers make the loss block-grain where
     * gzip would lose the rest of the member.
     */
-  def ensureAvro(s: SparkSession, dir: String): String = synchronized {
-    val out = Fixtures.fixtureRoot("avro", dir)
+  def ensureAvro(s: SparkSession, dir: String): String = {
     lazy val rows = docRows(s, dir)
-    Fixtures.ensureAtomic(out, 4) { tmp =>
+    ensure(s, dir, "avro") { root =>
       (0 until 4).foreach { shard =>
-        val f = new java.io.File(tmp.toString, s"shard-$shard.avro")
+        val f = new java.io.File(root.toString, s"shard-$shard.avro")
         AvroContainer.write(f, rows.filter(_._1 % 4 == shard))
         if (shard == AvroCorruptShard) AvroContainer.corruptBlock(f, AvroCorruptBlock)
       }
     }
   }
 
-  def ensureOrc(s: SparkSession, dir: String): String = synchronized {
-    val out = Fixtures.fixtureRoot("orc", dir)
-    val stamp = new java.io.File(out, "_built")
-    if (!stamp.exists) graft.FixtureTimer.timed {
+  def ensureOrc(s: SparkSession, dir: String): String =
+    ensure(s, dir, "orc") { root =>
       Tables.documents(s, dir).filter(col("doc_id") < DocLimit)
         .select("doc_id", "text", "lang", "source", "n_chars")
-        .coalesce(1).write.mode("overwrite").orc(s"$out/data")
-      Files.write(stamp.toPath, Array.emptyByteArray)
+        .coalesce(1).write.mode("overwrite").orc(s"$root/data")
     }
-    out.toString
-  }
 
   /** Reinsertion offset for the Delta fixture's v1 append — far above
     * any corpus doc_id, so the appended copies are disjoint by key. */
@@ -345,22 +334,21 @@ object IngestFixtures {
     dest.length()
   }
 
-  def ensureDelta(s: SparkSession, dir: String): String = synchronized {
+  def ensureDelta(s: SparkSession, dir: String): String = {
     import s.implicits._
-    val out = Fixtures.fixtureRoot("delta", dir)
     lazy val rows = docRows(s, dir)
     def writeOne(root: java.io.File, name: String,
         rs: Seq[(Long, String, String, String, Long)]): Long =
       writeOneParquet(s, root, name, rs)
-    Fixtures.ensureAtomic(out, 6) { tmp =>
-      val log = new java.io.File(tmp, "_delta_log"); log.mkdirs()
+    ensure(s, dir, "delta") { root =>
+      val log = new java.io.File(root, "_delta_log"); log.mkdirs()
       val shards = (0 until 4).map(k => s"file-v0-$k.parquet" ->
         rows.toSeq.filter(_._1 % 4 == k))
       val reinserted = rows.toSeq.filter(_._1 % TornMod == TornRem)
         .map { case (id, t, l, src, nc) => (id + DeltaReinsert, t, l, src, nc) }
       val sizes = (shards :+ ("file-v1-insert.parquet" -> reinserted) :+
         ("file-v2-rewrite.parquet" -> shards(1)._2))
-        .map { case (n, rs) => n -> writeOne(tmp, n, rs) }.toMap
+        .map { case (n, rs) => n -> writeOne(root, n, rs) }.toMap
       def addJson(name: String, dataChange: Boolean) =
         s"""{"add":{"path":"$name","partitionValues":{},"size":${sizes(name)},"modificationTime":1700000000000,"dataChange":$dataChange}}"""
       val rawSchema =
@@ -431,11 +419,10 @@ object IngestFixtures {
     * No checkpoint and no aged-out commit: the change feed needs
     * every version in the range to resolve.
     */
-  def ensureDeltaCdc(s: SparkSession, dir: String): String = synchronized {
-    val out = Fixtures.fixtureRoot("deltacdc", dir)
+  def ensureDeltaCdc(s: SparkSession, dir: String): String = {
     lazy val rows = docRows(s, dir)
-    Fixtures.ensureAtomic(out, 7) { tmp =>
-      val log = new java.io.File(tmp, "_delta_log"); log.mkdirs()
+    ensure(s, dir, "deltacdc") { root =>
+      val log = new java.io.File(root, "_delta_log"); log.mkdirs()
       val shards = (0 until 4).map(k => s"file-v0-$k.parquet" ->
         rows.toSeq.filter(_._1 % 4 == k))
       val s1 = shards(1)._2
@@ -455,7 +442,7 @@ object IngestFixtures {
         insByShard.map { case (k, rs) => (s"file-v1-new-$k.parquet", rs, k) } ++
         Seq(("file-v2-compact.parquet", shards(2)._2, 2))
       val sizes = files.map { case (n, rs, _) =>
-        n -> writeOneParquet(s, tmp, n, rs) }.toMap
+        n -> writeOneParquet(s, root, n, rs) }.toMap
       val shardOf = files.map { case (n, _, k) => n -> k }.toMap
       def addJson(name: String, dataChange: Boolean = true) =
         s"""{"add":{"path":"$name","partitionValues":{"shard":"${shardOf(name)}"},"size":${sizes(name)},"modificationTime":1700000000000,"dataChange":$dataChange}}"""
@@ -502,10 +489,9 @@ object IngestFixtures {
     *    the data files are untouched, deletion is metadata-only,
     *    which is exactly why ignoring the descriptor resurrects rows.
     */
-  def ensureDeltaDv(s: SparkSession, dir: String): String = synchronized {
-    val out = Fixtures.fixtureRoot("deltadv", dir)
+  def ensureDeltaDv(s: SparkSession, dir: String): String = {
     lazy val rows = docRows(s, dir)
-    Fixtures.ensureAtomic(out, 6)(tmp => writeDvTable(s, tmp, rows, gen2 = false))
+    ensure(s, dir, "deltadv")(root => writeDvTable(s, root, rows, gen2 = false))
   }
 
   /** Second-generation rule for the j16 DV-CDC fixture: shard 0's v2
@@ -513,25 +499,24 @@ object IngestFixtures {
     * deleted ordinals (`% 3 == 1` minus the already-deleted
     * `% 5 == DvRem`) are exactly what the derived change feed must
     * surface as v2 deletes. */
-  def ensureDeltaDvCdc(s: SparkSession, dir: String): String = synchronized {
-    val out = Fixtures.fixtureRoot("deltadvcdc", dir)
+  def ensureDeltaDvCdc(s: SparkSession, dir: String): String = {
     lazy val rows = docRows(s, dir)
-    Fixtures.ensureAtomic(out, 6)(tmp => writeDvTable(s, tmp, rows, gen2 = true))
+    ensure(s, dir, "deltadvcdc")(root => writeDvTable(s, root, rows, gen2 = true))
   }
 
   /** Shared DV-table writer: v0 plain shards (feature-gated protocol),
     * v1 the DV commit (two sidecar-packed + one inline descriptor);
     * `gen2` adds v2 — shard 0 re-added with a GROWN replacement DV in
     * a new sidecar (DV generations replace, never append). */
-  private def writeDvTable(s: SparkSession, tmp: java.io.File,
+  private def writeDvTable(s: SparkSession, root: java.io.File,
       rows: Array[(Long, String, String, String, Long)],
       gen2: Boolean): Unit = {
     {
-      val log = new java.io.File(tmp, "_delta_log"); log.mkdirs()
+      val log = new java.io.File(root, "_delta_log"); log.mkdirs()
       val shards = (0 until 4).map(k => s"file-v0-$k.parquet" ->
         rows.toSeq.filter(_._1 % 4 == k))
       val sizes = shards.map { case (n, rs) =>
-        n -> writeOneParquet(s, tmp, n, rs) }.toMap
+        n -> writeOneParquet(s, root, n, rs) }.toMap
       def posOf(n: Int, rule: Int => Boolean): Seq[Long] =
         (0 until n).collect { case i if rule(i) => i.toLong }
       val dv0 = posOf(shards(0)._2.size, _ % 5 == DvRem)
@@ -546,7 +531,7 @@ object IngestFixtures {
       ub.putLong(uuid.getLeastSignificantBits)
       val encUuid = DeltaDv.z85Encode(ub.array())
       val metas = DeltaDv.writeDvFile(
-        new java.io.File(tmp, s"deletion_vector_$uuid.bin"), Seq(dv0, dv2))
+        new java.io.File(root, s"deletion_vector_$uuid.bin"), Seq(dv0, dv2))
       val inlineBytes = DeltaDv.serializeBitmap(dv1)
       val encInline = DeltaDv.z85EncodePadded(inlineBytes)
       def dvJson(storage: String, payload: String, off: Int, size: Int,
@@ -590,7 +575,7 @@ object IngestFixtures {
         ub2.putLong(uuid2.getLeastSignificantBits)
         val encUuid2 = DeltaDv.z85Encode(ub2.array())
         val metas2 = DeltaDv.writeDvFile(
-          new java.io.File(tmp, s"deletion_vector_$uuid2.bin"), Seq(dv0b))
+          new java.io.File(root, s"deletion_vector_$uuid2.bin"), Seq(dv0b))
         commit(2L, Seq(
           """{"commitInfo":{"operation":"DELETE","operationParameters":{}}}""",
           removeJson(shards(0)._1),
@@ -615,16 +600,15 @@ object IngestFixtures {
     * (`numRecords`/`minValues`/`maxValues` on doc_id) — EXCEPT bucket
     * [[DeltaStatsNoStatsBucket]], whose add has no stats and must be
     * kept by every probe (readPruned's conservative contract). */
-  def ensureDeltaStats(s: SparkSession, dir: String): String = synchronized {
-    val out = Fixtures.fixtureRoot("deltastats", dir)
+  def ensureDeltaStats(s: SparkSession, dir: String): String = {
     lazy val rows = docRows(s, dir)
-    Fixtures.ensureAtomic(out, 6) { tmp =>
-      val log = new java.io.File(tmp, "_delta_log"); log.mkdirs()
+    ensure(s, dir, "deltastats") { root =>
+      val log = new java.io.File(root, "_delta_log"); log.mkdirs()
       val buckets = rows.toSeq.groupBy(_._1 / DeltaStatsBucket).toSeq
         .sortBy(_._1).filter(_._2.nonEmpty)
       val files = buckets.map { case (k, rs) =>
         (k, s"file-bucket-$k.parquet", rs,
-          writeOneParquet(s, tmp, s"file-bucket-$k.parquet", rs))
+          writeOneParquet(s, root, s"file-bucket-$k.parquet", rs))
       }
       def statsJson(rs: Seq[(Long, String, String, String, Long)]): String = {
         val ids = rs.map(_._1)
@@ -658,12 +642,11 @@ object IngestFixtures {
     * sidecars. Protocol: minReaderVersion 3 + readerFeatures
     * ["v2Checkpoint"].
     */
-  def ensureDeltaV2cp(s: SparkSession, dir: String): String = synchronized {
+  def ensureDeltaV2cp(s: SparkSession, dir: String): String = {
     import s.implicits._
-    val out = Fixtures.fixtureRoot("deltav2cp", dir)
     lazy val rows = docRows(s, dir)
-    Fixtures.ensureAtomic(out, 6) { tmp =>
-      val log = new java.io.File(tmp, "_delta_log"); log.mkdirs()
+    ensure(s, dir, "deltav2cp") { root =>
+      val log = new java.io.File(root, "_delta_log"); log.mkdirs()
       val sideDir = new java.io.File(log, "_sidecars"); sideDir.mkdirs()
       val shards = (0 until 4).map(k => s"file-v0-$k.parquet" ->
         rows.toSeq.filter(_._1 % 4 == k))
@@ -671,7 +654,7 @@ object IngestFixtures {
         .map { case (id, t, l, src, nc) => (id + DeltaReinsert, t, l, src, nc) }
       val sizes = (shards :+ ("file-v1-insert.parquet" -> reinserted) :+
         ("file-v2-rewrite.parquet" -> shards(1)._2))
-        .map { case (n, rs) => n -> writeOneParquet(s, tmp, n, rs) }.toMap
+        .map { case (n, rs) => n -> writeOneParquet(s, root, n, rs) }.toMap
       def addJson(name: String, dataChange: Boolean) =
         s"""{"add":{"path":"$name","partitionValues":{},"size":${sizes(name)},"modificationTime":1700000000000,"dataChange":$dataChange}}"""
       val rawSchema =
@@ -750,11 +733,10 @@ object IngestFixtures {
     * `version-hint.text` → v2.metadata.json with both snapshots and
     * current-snapshot-id = 2, so time travel to s1 resolves through
     * its own manifest list. Paths are absolute (the spec's rule),
-    * written against the FINAL fixture root — the atomic build dir
-    * renames into place before any reader sees it.
+    * written against the fixture root, which [[graft.BuildOnce]]
+    * builds in place.
     */
-  def ensureIceberg(s: SparkSession, dir: String): String = synchronized {
-    val out = Fixtures.fixtureRoot("iceberg", dir)
+  def ensureIceberg(s: SparkSession, dir: String): String = {
     lazy val rows = docRows(s, dir)
     val manifestListSchema =
       """{"type":"record","name":"manifest_file","fields":[
@@ -771,25 +753,25 @@ object IngestFixtures {
         |{"name":"file_format","type":"string"},
         |{"name":"record_count","type":"long"},
         |{"name":"file_size_in_bytes","type":"long"}]}}]}""".stripMargin
-    Fixtures.ensureAtomic(out, 5) { tmp =>
-      val meta = new java.io.File(tmp, "metadata"); meta.mkdirs()
+    ensure(s, dir, "iceberg") { root =>
+      val meta = new java.io.File(root, "metadata"); meta.mkdirs()
       val shards = (0 until 4).map(k => s"data/file-s1-shard-$k.parquet" ->
         rows.toSeq.filter(_._1 % 4 == k))
       val reinserted = rows.toSeq.filter(_._1 % TornMod == TornRem)
         .map { case (id, t, l, src, nc) => (id + DeltaReinsert, t, l, src, nc) }
       val written = (shards :+ ("data/file-s2-insert.parquet" -> reinserted))
         .map { case (n, rs) =>
-          n -> (writeOneParquet(s, tmp, n, rs), rs.length.toLong) }.toMap
+          n -> (writeOneParquet(s, root, n, rs), rs.length.toLong) }.toMap
       def entry(status: Int, sid: Long, name: String) = Map(
         "status" -> status, "snapshot_id" -> sid,
         "data_file" -> Map(
-          "file_path" -> s"$out/$name", "file_format" -> "PARQUET",
+          "file_path" -> s"$root/$name", "file_format" -> "PARQUET",
           "record_count" -> written(name)._2,
           "file_size_in_bytes" -> written(name)._1))
       def manifest(file: String, entries: Seq[Map[String, Any]]): (String, Long) = {
         val f = new java.io.File(meta, file)
         AvroContainer.writeGeneric(f, manifestSchema, entries)
-        (s"$out/metadata/$file", f.length())
+        (s"$root/metadata/$file", f.length())
       }
       // s1: everything ADDED in one manifest
       val ma = manifest("manifest-a.avro",
@@ -805,13 +787,13 @@ object IngestFixtures {
           manifestListSchema, ms.map { case (p, len) => Map(
             "manifest_path" -> p, "manifest_length" -> len,
             "partition_spec_id" -> 0, "added_snapshot_id" -> sid) })
-        s"$out/metadata/$file"
+        s"$root/metadata/$file"
       }
       val sl1 = manifestList("snap-1.avro", 1L, Seq(ma))
       val sl2 = manifestList("snap-2.avro", 2L, Seq(mb, mc))
       val mdJson =
         s"""{"format-version":1,"table-uuid":"graft-iceberg-fixture",
-           |"location":"${jesc(out.toString)}","last-updated-ms":1700000000000,
+           |"location":"${jesc(root.toString)}","last-updated-ms":1700000000000,
            |"current-snapshot-id":2,
            |"snapshots":[
            |{"snapshot-id":1,"timestamp-ms":1700000000000,
@@ -841,8 +823,7 @@ object IngestFixtures {
     * are ROW-level — the j11 contrast, where a delete retires a whole
     * file); the reader must subtract by position at scan time.
     */
-  def ensureIcebergV2(s: SparkSession, dir: String): String = synchronized {
-    val out = Fixtures.fixtureRoot("icebergv2", dir)
+  def ensureIcebergV2(s: SparkSession, dir: String): String = {
     lazy val rows = docRows(s, dir)
     val manifestListSchema =
       """{"type":"record","name":"manifest_file","fields":[
@@ -861,34 +842,34 @@ object IngestFixtures {
         |{"name":"file_format","type":"string"},
         |{"name":"record_count","type":"long"},
         |{"name":"file_size_in_bytes","type":"long"}]}}]}""".stripMargin
-    Fixtures.ensureAtomic(out, 5) { tmp =>
-      val meta = new java.io.File(tmp, "metadata"); meta.mkdirs()
+    ensure(s, dir, "icebergv2") { root =>
+      val meta = new java.io.File(root, "metadata"); meta.mkdirs()
       val shards = (0 until 4).map(k => s"data/file-s1-shard-$k.parquet" ->
         rows.toSeq.filter(_._1 % 4 == k))
       val sizes = shards.map { case (n, rs) =>
-        n -> (writeOneParquet(s, tmp, n, rs), rs.length.toLong) }.toMap
+        n -> (writeOneParquet(s, root, n, rs), rs.length.toLong) }.toMap
       // the position-delete parquet: (file_path, pos) rows by rule
       val posDels = shards.flatMap { case (n, rs) =>
         rs.indices.collect { case i if i % 5 == IcebergDelRem =>
-          (s"$out/$n", i.toLong) }
+          (s"$root/$n", i.toLong) }
       }
-      val pdScratch = new java.io.File(tmp, ".w_pd")
+      val pdScratch = new java.io.File(root, ".w_pd")
       s.createDataFrame(posDels).toDF("file_path", "pos")
         .coalesce(1).write.mode("overwrite").parquet(pdScratch.toString)
       val pdPart = pdScratch.listFiles().find(_.getName.endsWith(".parquet")).get
-      val pdDest = new java.io.File(tmp, "data/file-s2-posdel.parquet")
+      val pdDest = new java.io.File(root, "data/file-s2-posdel.parquet")
       Files.move(pdPart.toPath, pdDest.toPath)
       Fixtures.deleteRecursively(pdScratch)
       def entry(content: Int, sid: Long, name: String, recs: Long, len: Long) =
         Map("status" -> 1, "snapshot_id" -> sid,
           "data_file" -> Map(
-            "content" -> content, "file_path" -> s"$out/$name",
+            "content" -> content, "file_path" -> s"$root/$name",
             "file_format" -> "PARQUET",
             "record_count" -> recs, "file_size_in_bytes" -> len))
       def manifest(file: String, entries: Seq[Map[String, Any]]): (String, Long) = {
         val f = new java.io.File(meta, file)
         AvroContainer.writeGeneric(f, manifestSchema, entries)
-        (s"$out/metadata/$file", f.length())
+        (s"$root/metadata/$file", f.length())
       }
       val ma = manifest("manifest-a.avro", shards.map { case (n, _) =>
         entry(0, 1L, n, sizes(n)._2, sizes(n)._1) })
@@ -902,13 +883,13 @@ object IngestFixtures {
             "manifest_path" -> p, "manifest_length" -> len,
             "partition_spec_id" -> 0, "content" -> content,
             "added_snapshot_id" -> sid) })
-        s"$out/metadata/$file"
+        s"$root/metadata/$file"
       }
       val sl1 = manifestList("snap-1.avro", 1L, Seq((ma, 0)))
       val sl2 = manifestList("snap-2.avro", 2L, Seq((ma, 0), (mdly, 1)))
       val mdJson =
         s"""{"format-version":2,"table-uuid":"graft-iceberg-v2-fixture",
-           |"location":"${jesc(out.toString)}","last-updated-ms":1700000000000,
+           |"location":"${jesc(root.toString)}","last-updated-ms":1700000000000,
            |"current-snapshot-id":2,
            |"snapshots":[
            |{"snapshot-id":1,"timestamp-ms":1700000000000,
@@ -944,8 +925,7 @@ object IngestFixtures {
     * manifest LIST rows and inherit to entries, the spec's
     * inheritance rule.
     */
-  def ensureIcebergEq(s: SparkSession, dir: String): String = synchronized {
-    val out = Fixtures.fixtureRoot("icebergeq", dir)
+  def ensureIcebergEq(s: SparkSession, dir: String): String = {
     lazy val rows = docRows(s, dir)
     val manifestListSchema =
       """{"type":"record","name":"manifest_file","fields":[
@@ -966,8 +946,8 @@ object IngestFixtures {
         |{"name":"record_count","type":"long"},
         |{"name":"file_size_in_bytes","type":"long"},
         |{"name":"equality_ids","type":["null",{"type":"array","items":"int"}],"default":null}]}}]}""".stripMargin
-    Fixtures.ensureAtomic(out, 5) { tmp =>
-      val meta = new java.io.File(tmp, "metadata"); meta.mkdirs()
+    ensure(s, dir, "icebergeq") { root =>
+      val meta = new java.io.File(root, "metadata"); meta.mkdirs()
       val shards = (0 until 4).map(k => s"data/file-s1-shard-$k.parquet" ->
         rows.toSeq.filter(_._1 % 4 == k))
       val torn = rows.toSeq.filter(_._1 % TornMod == TornRem)
@@ -975,18 +955,18 @@ object IngestFixtures {
         (id, t, l, src, nc + 1000) } // SAME doc_id — the scoping test
       val written = (shards :+ ("data/file-s2-reinsert.parquet" -> reinserted))
         .map { case (n, rs) =>
-          n -> (writeOneParquet(s, tmp, n, rs), rs.length.toLong) }.toMap
+          n -> (writeOneParquet(s, root, n, rs), rs.length.toLong) }.toMap
       // the equality-delete parquet: just the key column (field id 1)
-      val eqScratch = new java.io.File(tmp, ".w_eq")
+      val eqScratch = new java.io.File(root, ".w_eq")
       s.createDataFrame(torn.map(r => Tuple1(r._1))).toDF("doc_id")
         .coalesce(1).write.mode("overwrite").parquet(eqScratch.toString)
       val eqPart = eqScratch.listFiles().find(_.getName.endsWith(".parquet")).get
-      val eqDest = new java.io.File(tmp, "data/file-s2-eqdel.parquet")
+      val eqDest = new java.io.File(root, "data/file-s2-eqdel.parquet")
       Files.move(eqPart.toPath, eqDest.toPath)
       Fixtures.deleteRecursively(eqScratch)
       def entry(content: Int, sid: Long, name: String, recs: Long, len: Long,
           eqIds: Seq[Int] = Nil): Map[String, Any] = {
-        val df = Map("content" -> content, "file_path" -> s"$out/$name",
+        val df = Map("content" -> content, "file_path" -> s"$root/$name",
           "file_format" -> "PARQUET", "record_count" -> recs,
           "file_size_in_bytes" -> len) ++
           (if (eqIds.isEmpty) Map.empty[String, Any]
@@ -1000,7 +980,7 @@ object IngestFixtures {
       def manifest(file: String, entries: Seq[Map[String, Any]]): (String, Long) = {
         val f = new java.io.File(meta, file)
         AvroContainer.writeGeneric(f, manifestSchema, entries)
-        (s"$out/metadata/$file", f.length())
+        (s"$root/metadata/$file", f.length())
       }
       val ma = manifest("manifest-a.avro", shards.map { case (n, _) =>
         entry(0, 1L, n, written(n)._2, written(n)._1) })
@@ -1018,7 +998,7 @@ object IngestFixtures {
             "manifest_path" -> p, "manifest_length" -> len,
             "partition_spec_id" -> 0, "content" -> content,
             "sequence_number" -> seq, "added_snapshot_id" -> sid) })
-        s"$out/metadata/$file"
+        s"$root/metadata/$file"
       }
       val sl1 = manifestList("snap-1.avro", 1L, Seq((ma, 0, 1L)))
       val sl2 = manifestList("snap-2.avro", 2L,
@@ -1033,7 +1013,7 @@ object IngestFixtures {
           .stripMargin.replace("\n", "")
       val mdJson =
         s"""{"format-version":2,"table-uuid":"graft-iceberg-eq-fixture",
-           |"location":"${jesc(out.toString)}","last-updated-ms":1700000000000,
+           |"location":"${jesc(root.toString)}","last-updated-ms":1700000000000,
            |"current-schema-id":0,
            |"schemas":[$schemaJson],
            |"current-snapshot-id":2,
@@ -1063,17 +1043,16 @@ object IngestFixtures {
     * protocol's rule. Field ids are stamped into the files by Spark's
     * own writer (`parquet.field.id` schema metadata).
     */
-  def ensureDeltaCmId(s: SparkSession, dir: String): String = synchronized {
-    val out = Fixtures.fixtureRoot("deltacmid", dir)
+  def ensureDeltaCmId(s: SparkSession, dir: String): String = {
     lazy val rows = docRows(s, dir)
-    Fixtures.ensureAtomic(out, 1) { tmp =>
-      val log = new java.io.File(tmp, "_delta_log"); log.mkdirs()
+    ensure(s, dir, "deltacmid") { root =>
+      val log = new java.io.File(root, "_delta_log"); log.mkdirs()
       import org.apache.spark.sql.types.MetadataBuilder
       def fid(id: Long) =
         new MetadataBuilder().putLong("parquet.field.id", id).build()
       def writeShard(name: String,
           rs: Seq[(Long, String, String, String, Long)]): Long = {
-        val scratch = new java.io.File(tmp, ".w_" + name.replace('/', '_'))
+        val scratch = new java.io.File(root, ".w_" + name.replace('/', '_'))
         s.createDataFrame(rs).toDF("a", "b", "c", "d", "e")
           .select(
             // MISNAMED on purpose: names rotate one physical slot
@@ -1084,7 +1063,7 @@ object IngestFixtures {
             col("e").as("col-d01", fid(5L))) // n_chars values
           .coalesce(1).write.mode("overwrite").parquet(scratch.toString)
         val part = scratch.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dest = new java.io.File(tmp, name)
+        val dest = new java.io.File(root, name)
         dest.getParentFile.mkdirs()
         Files.move(part.toPath, dest.toPath)
         Fixtures.deleteRecursively(scratch)
@@ -1120,12 +1099,11 @@ object IngestFixtures {
     * the repo: the engine's own snapshot version handed to any Delta
     * reader, and read back here by j10's. Metadata-only (absolute-
     * path) export is spec territory — its URIs pin the build
-    * location, so it cannot ride ensureAtomic's tmp-dir rename.
+    * location, which [[graft.BuildOnce]]'s in-place build keeps.
     */
-  def ensureDeltaExport(s: SparkSession, dir: String): String = synchronized {
-    val out = Fixtures.fixtureRoot("deltaexport", dir)
-    Fixtures.ensureAtomic(out, 4) { tmp =>
-      val snap = new java.io.File(tmp, "snap").toString
+  def ensureDeltaExport(s: SparkSession, dir: String): String = {
+    ensure(s, dir, "deltaexport") { root =>
+      val snap = new java.io.File(root, "snap").toString
       val docs = Tables.documents(s, dir).filter(col("doc_id") < DocLimit)
         .select("doc_id", "text", "lang", "source", "n_chars")
       SnapshotTable.commit(s, snap,
@@ -1136,7 +1114,7 @@ object IngestFixtures {
         docs.filter(pmod(col("doc_id"), lit(2)) === 1)
           .repartitionByRange(2, col("doc_id")),
         statsCols = Seq("doc_id", "n_chars"))
-      DeltaExport.export(s, snap, new java.io.File(tmp, "delta").toString)
+      DeltaExport.export(s, snap, new java.io.File(root, "delta").toString)
     }
   }
 
@@ -1145,13 +1123,12 @@ object IngestFixtures {
     * REPLACE keeping doc_id < 200) published as a Delta LOG by
     * [[DeltaExport.exportLog]] — commit v per snapshot version, adds
     * for new files, removes for dropped ones, relative
-    * `data/<uuid>/…` paths (rename-safe, so the atomic fixture swap
-    * applies). The exported table under `delta/` carries the WHOLE
-    * history: j23 CDC-reads it with DeltaTable.changes. */
-  def ensureDeltaLogExport(s: SparkSession, dir: String): String = synchronized {
-    val out = Fixtures.fixtureRoot("deltalogexport", dir)
-    Fixtures.ensureAtomic(out, 3) { tmp =>
-      val snap = new java.io.File(tmp, "snap").toString
+    * `data/<uuid>/…` paths (rename-safe). The exported table under
+    * `delta/` carries the WHOLE history: j23 CDC-reads it with
+    * DeltaTable.changes. */
+  def ensureDeltaLogExport(s: SparkSession, dir: String): String = {
+    ensure(s, dir, "deltalogexport") { root =>
+      val snap = new java.io.File(root, "snap").toString
       val docs = Tables.documents(s, dir).filter(col("doc_id") < DocLimit)
         .select("doc_id", "text", "lang", "source", "n_chars")
       SnapshotTable.commit(s, snap,
@@ -1165,50 +1142,32 @@ object IngestFixtures {
       SnapshotTable.commit(s, snap,
         docs.filter(col("doc_id") < 200).repartitionByRange(2, col("doc_id")),
         replace = true, statsCols = Seq("doc_id"))
-      DeltaExport.exportLog(s, snap, new java.io.File(tmp, "delta").toString)
+      DeltaExport.exportLog(s, snap, new java.io.File(root, "delta").toString)
     }
   }
-
-  /** Fixture roots already verified complete this JVM (the in-place
-    * builds below — Iceberg file_paths are ABSOLUTE per spec, so the
-    * export cannot ride ensureAtomic's tmp-dir rename; the marker is
-    * written LAST instead, the cowScenario pattern). */
-  private val inPlaceReady = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** ICEBERG-EXPORT round-trip fixture for j22 — [[ensureDeltaExport]]'s
     * twin for the second format: the same two-commit snapshot scenario
     * (parity halves, range-split, doc_id/n_chars stats) published as a
     * self-contained (copy-mode) Iceberg v1 Hadoop table under
-    * `iceberg/`, read back by j11's own reader. */
-  def ensureIcebergExport(s: SparkSession, dir: String): String = {
-    val out = Fixtures.fixtureRoot("icebergexport", dir).toString
-    val memo = inPlaceReady.get(out)
-    if (memo != null) return memo
-    graft.FixtureTimer.timed(synchronized {
-      val marker = new java.io.File(out, "_EXPORT_COMPLETE")
-      val want = "iceberg-export-v1"
-      val complete = marker.exists() && new String(
-        Files.readAllBytes(marker.toPath), StandardCharsets.UTF_8).trim == want
-      if (!complete) {
-        Fixtures.deleteRecursively(new java.io.File(out))
-        val snap = new java.io.File(out, "snap").toString
-        val docs = Tables.documents(s, dir).filter(col("doc_id") < DocLimit)
-          .select("doc_id", "text", "lang", "source", "n_chars")
-        SnapshotTable.commit(s, snap,
-          docs.filter(pmod(col("doc_id"), lit(2)) === 0)
-            .repartitionByRange(2, col("doc_id")),
-          statsCols = Seq("doc_id", "n_chars"))
-        SnapshotTable.commit(s, snap,
-          docs.filter(pmod(col("doc_id"), lit(2)) === 1)
-            .repartitionByRange(2, col("doc_id")),
-          statsCols = Seq("doc_id", "n_chars"))
-        IcebergExport.export(s, snap, new java.io.File(out, "iceberg").toString)
-        Files.write(marker.toPath, (want + "\n").getBytes(StandardCharsets.UTF_8))
-      }
-      inPlaceReady.put(out, out)
-      out
-    })
-  }
+    * `iceberg/`, read back by j11's own reader. Iceberg file paths
+    * are absolute (the spec's rule), so they name the final root —
+    * the one [[graft.BuildOnce]] builds in. */
+  def ensureIcebergExport(s: SparkSession, dir: String): String =
+    ensure(s, dir, "icebergexport") { root =>
+      val snap = new java.io.File(root, "snap").toString
+      val docs = Tables.documents(s, dir).filter(col("doc_id") < DocLimit)
+        .select("doc_id", "text", "lang", "source", "n_chars")
+      SnapshotTable.commit(s, snap,
+        docs.filter(pmod(col("doc_id"), lit(2)) === 0)
+          .repartitionByRange(2, col("doc_id")),
+        statsCols = Seq("doc_id", "n_chars"))
+      SnapshotTable.commit(s, snap,
+        docs.filter(pmod(col("doc_id"), lit(2)) === 1)
+          .repartitionByRange(2, col("doc_id")),
+        statsCols = Seq("doc_id", "n_chars"))
+      IcebergExport.export(s, snap, new java.io.File(root, "iceberg").toString)
+    }
 
   /** Which bucket's manifest entry carries NO bounds in the j19
     * fixture (the conservative-keep witness, the
@@ -1225,8 +1184,7 @@ object IngestFixtures {
     * Bounds ride the spec's array-of-{key: field id, value: bytes}
     * encoding (Avro maps cannot key by int).
     */
-  def ensureIcebergStats(s: SparkSession, dir: String): String = synchronized {
-    val out = Fixtures.fixtureRoot("icebergstats", dir)
+  def ensureIcebergStats(s: SparkSession, dir: String): String = {
     lazy val rows = docRows(s, dir)
     val manifestListSchema =
       """{"type":"record","name":"manifest_file","fields":[
@@ -1250,13 +1208,13 @@ object IngestFixtures {
         |{"name":"lower_bounds","type":$boundsType,"default":null},
         |{"name":"upper_bounds","type":${boundsType.replace("i64kv", "i64kv2")},"default":null}]}}]}"""
         .stripMargin
-    Fixtures.ensureAtomic(out, 8) { tmp =>
-      val meta = new java.io.File(tmp, "metadata"); meta.mkdirs()
+    ensure(s, dir, "icebergstats") { root =>
+      val meta = new java.io.File(root, "metadata"); meta.mkdirs()
       val buckets = rows.toSeq.groupBy(_._1 / DeltaStatsBucket).toSeq
         .sortBy(_._1).filter(_._2.nonEmpty)
       val files = buckets.map { case (k, rs) =>
         val name = s"data/file-bucket-$k.parquet"
-        (k, name, rs, writeOneParquet(s, tmp, name, rs))
+        (k, name, rs, writeOneParquet(s, root, name, rs))
       }
       def longBytes(v: Long): java.nio.ByteBuffer = {
         val bb = java.nio.ByteBuffer.allocate(8)
@@ -1266,7 +1224,7 @@ object IngestFixtures {
       def entry(k: Long, name: String,
           rs: Seq[(Long, String, String, String, Long)], size: Long) = {
         val ids = rs.map(_._1)
-        val base = Map[String, Any]("file_path" -> s"$out/$name",
+        val base = Map[String, Any]("file_path" -> s"$root/$name",
           "file_format" -> "PARQUET", "record_count" -> rs.size.toLong,
           "file_size_in_bytes" -> size)
         val df =
@@ -1283,7 +1241,7 @@ object IngestFixtures {
         files.map { case (k, n, rs, sz) => entry(k, n, rs, sz) })
       AvroContainer.writeGeneric(new java.io.File(meta, "snap-1.avro"),
         manifestListSchema, Seq(Map[String, Any](
-          "manifest_path" -> s"$out/metadata/manifest-a.avro",
+          "manifest_path" -> s"$root/metadata/manifest-a.avro",
           "manifest_length" -> mf.length(), "partition_spec_id" -> 0,
           "added_snapshot_id" -> 1L)))
       val schemaJson =
@@ -1296,12 +1254,12 @@ object IngestFixtures {
           .stripMargin.replace("\n", "")
       val mdJson =
         s"""{"format-version":1,"table-uuid":"graft-iceberg-stats-fixture",
-           |"location":"${jesc(out.toString)}","last-updated-ms":1700000000000,
+           |"location":"${jesc(root.toString)}","last-updated-ms":1700000000000,
            |"schema":$schemaJson,
            |"current-snapshot-id":1,
            |"snapshots":[
            |{"snapshot-id":1,"timestamp-ms":1700000000000,
-           |"manifest-list":"${jesc(s"$out/metadata/snap-1.avro")}",
+           |"manifest-list":"${jesc(s"$root/metadata/snap-1.avro")}",
            |"summary":{"operation":"append"}}]}
            |""".stripMargin
       Files.write(new java.io.File(meta, "v1.metadata.json").toPath,

@@ -449,7 +449,7 @@ object SnapshotTable {
       if (fs.nonEmpty) s.read.parquet(fs: _*)
       else if (toggled.nonEmpty) s.read.parquet(toggled: _*).limit(0)
       else fallback
-    frameDiffChanges(s, rd(addedF), rd(removedF), keyCols, cache, commitV)
+    frameDiffChanges(rd(addedF), rd(removedF), keyCols, cache, commitV)
   }
 
   /** Frame-grain change-feed core ([[DeltaTable.changes]] hands in
@@ -457,7 +457,7 @@ object SnapshotTable {
     * from the log before the diff — the data files alone cannot
     * express the row). The frames must each cover EXACTLY the
     * commit's toggled files on their side. */
-  private[sources] def frameDiffChanges(s: SparkSession, added: DataFrame,
+  private[sources] def frameDiffChanges(added: DataFrame,
       removed: DataFrame, keyCols: Seq[String], cache: Boolean,
       commitV: Long): DataFrame = {
     import org.apache.spark.sql.functions._

@@ -1,8 +1,9 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
+import graft.BuildOnce
 
 /** METADATA-SCALE stress fixtures for the interop readers (r13
   * VERDICT #6): the j10/j11 correctness fixtures are 3-commit /
@@ -35,146 +36,135 @@ object StressFixtures {
   val IcebergManifests = 100
   val FilesPerManifest = 10
 
-  private def marker(dir: String) = Paths.get(dir, "_STRESS_COMPLETE")
-
   /** 1,000-commit Delta table: v0 carries protocol/metaData/add-0,
     * each later commit one add; checkpoints at v9, v19, …, v989
     * (latest checkpoint BEHIND the head so resolution pays a real
     * 10-commit JSON tail); commits 0..989 AGED OUT (metadata
     * cleanup), so the checkpoint path is load-bearing exactly as in
     * the j10 fixture. */
-  def ensureDeltaStress(s: SparkSession, root: String): String = synchronized {
-    import s.implicits._
-    val out = s"$root/delta1000"
-    if (Files.exists(marker(out))) return out
-    val dir = new java.io.File(out)
-    if (dir.exists()) graft.geo.Fixtures.deleteRecursively(dir)
-    val log = new java.io.File(dir, "_delta_log")
-    log.mkdirs()
-    // donor: one tiny parquet, copied per commit (metadata pricing —
-    // content is irrelevant, existence lets read() scan for real)
-    val scratch = new java.io.File(dir, ".w_donor")
-    Seq((1L, 10L), (2L, 20L)).toDF("doc_id", "n_chars")
-      .coalesce(1).write.mode("overwrite").parquet(scratch.toString)
-    val donor = scratch.listFiles().find(_.getName.endsWith(".parquet")).get
-    val names = (0 until Commits).map(i => f"file-$i%04d.parquet")
-    names.foreach { n =>
-      Files.copy(donor.toPath, new java.io.File(dir, n).toPath)
-    }
-    graft.geo.Fixtures.deleteRecursively(scratch)
-    val size = new java.io.File(dir, names.head).length()
-    val rawSchema =
-      """{"type":"struct","fields":[{"name":"doc_id","type":"long","nullable":false,"metadata":{}},{"name":"n_chars","type":"long","nullable":true,"metadata":{}}]}"""
-    val esc = rawSchema.replace("\\", "\\\\").replace("\"", "\\\"")
-    def addJson(n: String) =
-      s"""{"add":{"path":"$n","partitionValues":{},"size":$size,"modificationTime":1700000000000,"dataChange":true}}"""
-    (0 until Commits).foreach { v =>
-      val lines =
-        if (v == 0) Seq(
-          """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
-          s"""{"metaData":{"id":"graft-delta-stress","format":{"provider":"parquet","options":{}},"schemaString":"$esc","partitionColumns":[],"configuration":{},"createdTime":1700000000000}}""",
-          addJson(names(0)))
-        else Seq(addJson(names(v)))
-      Files.write(new java.io.File(log, f"$v%020d.json").toPath,
-        (lines.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
-    }
-    // checkpoints every 10 commits; each is the full replayed state
-    var lastCp = -1
-    (CheckpointEvery - 1 until Commits - CheckpointEvery by CheckpointEvery)
-      .foreach { v =>
-        val rows =
-          CpRow(Some(CpProtocol(1, 2)), None, None, None) +:
-          CpRow(None, Some(CpMeta("graft-delta-stress", rawSchema, Nil)),
-            None, None) +:
-          (0 to v).map(i => CpRow(None, None,
-            Some(CpAdd(names(i), Map.empty, size, 1700000000000L,
-              dataChange = true)), None))
-        val cps = new java.io.File(log, ".w_cp")
-        rows.toDS().coalesce(1).write.mode("overwrite").parquet(cps.toString)
-        val part = cps.listFiles().find(_.getName.endsWith(".parquet")).get
-        Files.move(part.toPath,
-          new java.io.File(log, f"$v%020d.checkpoint.parquet").toPath)
-        graft.geo.Fixtures.deleteRecursively(cps)
-        lastCp = v
+  def ensureDeltaStress(s: SparkSession, root: String): String =
+    BuildOnce.ensure(s, s"$root/delta1000", "delta1000 v1", Nil) { out =>
+      import s.implicits._
+      val dir = new java.io.File(out)
+      val log = new java.io.File(dir, "_delta_log")
+      log.mkdirs()
+      // donor: one tiny parquet, copied per commit (metadata pricing —
+      // content is irrelevant, existence lets read() scan for real)
+      val scratch = new java.io.File(dir, ".w_donor")
+      Seq((1L, 10L), (2L, 20L)).toDF("doc_id", "n_chars")
+        .coalesce(1).write.mode("overwrite").parquet(scratch.toString)
+      val donor = scratch.listFiles().find(_.getName.endsWith(".parquet")).get
+      val names = (0 until Commits).map(i => f"file-$i%04d.parquet")
+      names.foreach { n =>
+        Files.copy(donor.toPath, new java.io.File(dir, n).toPath)
       }
-    Files.write(new java.io.File(log, "_last_checkpoint").toPath,
-      s"""{"version":$lastCp,"size":${lastCp + 3}}"""
-        .getBytes(StandardCharsets.UTF_8))
-    // metadata cleanup: every pre-checkpoint commit ages out — only
-    // the tail past the last checkpoint remains as JSON
-    (0 to lastCp).foreach { v =>
-      Files.deleteIfExists(new java.io.File(log, f"$v%020d.json").toPath)
+      graft.geo.Fixtures.deleteRecursively(scratch)
+      val size = new java.io.File(dir, names.head).length()
+      val rawSchema =
+        """{"type":"struct","fields":[{"name":"doc_id","type":"long","nullable":false,"metadata":{}},{"name":"n_chars","type":"long","nullable":true,"metadata":{}}]}"""
+      val esc = rawSchema.replace("\\", "\\\\").replace("\"", "\\\"")
+      def addJson(n: String) =
+        s"""{"add":{"path":"$n","partitionValues":{},"size":$size,"modificationTime":1700000000000,"dataChange":true}}"""
+      (0 until Commits).foreach { v =>
+        val lines =
+          if (v == 0) Seq(
+            """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
+            s"""{"metaData":{"id":"graft-delta-stress","format":{"provider":"parquet","options":{}},"schemaString":"$esc","partitionColumns":[],"configuration":{},"createdTime":1700000000000}}""",
+            addJson(names(0)))
+          else Seq(addJson(names(v)))
+        Files.write(new java.io.File(log, f"$v%020d.json").toPath,
+          (lines.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
+      }
+      // checkpoints every 10 commits; each is the full replayed state
+      var lastCp = -1
+      (CheckpointEvery - 1 until Commits - CheckpointEvery by CheckpointEvery)
+        .foreach { v =>
+          val rows =
+            CpRow(Some(CpProtocol(1, 2)), None, None, None) +:
+            CpRow(None, Some(CpMeta("graft-delta-stress", rawSchema, Nil)),
+              None, None) +:
+            (0 to v).map(i => CpRow(None, None,
+              Some(CpAdd(names(i), Map.empty, size, 1700000000000L,
+                dataChange = true)), None))
+          val cps = new java.io.File(log, ".w_cp")
+          rows.toDS().coalesce(1).write.mode("overwrite").parquet(cps.toString)
+          val part = cps.listFiles().find(_.getName.endsWith(".parquet")).get
+          Files.move(part.toPath,
+            new java.io.File(log, f"$v%020d.checkpoint.parquet").toPath)
+          graft.geo.Fixtures.deleteRecursively(cps)
+          lastCp = v
+        }
+      Files.write(new java.io.File(log, "_last_checkpoint").toPath,
+        s"""{"version":$lastCp,"size":${lastCp + 3}}"""
+          .getBytes(StandardCharsets.UTF_8))
+      // metadata cleanup: every pre-checkpoint commit ages out — only
+      // the tail past the last checkpoint remains as JSON
+      (0 to lastCp).foreach { v =>
+        Files.deleteIfExists(new java.io.File(log, f"$v%020d.json").toPath)
+      }
     }
-    Files.write(marker(out), Array.emptyByteArray)
-    out
-  }
 
   /** 100-manifest Iceberg snapshot (10 data files each, pointing at
-    * the Delta stress donors by absolute path) plus an older 50-
-    * manifest snapshot — resolving the current snapshot must never
-    * touch the older one's metadata. */
-  def ensureIcebergStress(root: String): String = synchronized {
-    val out = s"$root/iceberg100"
-    if (Files.exists(marker(out))) return out
-    val dir = new java.io.File(out)
-    if (dir.exists()) graft.geo.Fixtures.deleteRecursively(dir)
-    val meta = new java.io.File(dir, "metadata")
-    meta.mkdirs()
-    val donorDir = s"$root/delta1000"
-    require(Files.exists(marker(donorDir)),
-      "build the delta stress fixture first (shared donor files)")
-    val manifestListSchema =
-      """{"type":"record","name":"manifest_file","fields":[
-        |{"name":"manifest_path","type":"string"},
-        |{"name":"manifest_length","type":"long"},
-        |{"name":"partition_spec_id","type":"int"},
-        |{"name":"added_snapshot_id","type":"long"}]}""".stripMargin
-    val manifestSchema =
-      """{"type":"record","name":"manifest_entry","fields":[
-        |{"name":"status","type":"int"},
-        |{"name":"snapshot_id","type":"long"},
-        |{"name":"data_file","type":{"type":"record","name":"data_file","fields":[
-        |{"name":"file_path","type":"string"},
-        |{"name":"file_format","type":"string"},
-        |{"name":"record_count","type":"long"},
-        |{"name":"file_size_in_bytes","type":"long"}]}}]}""".stripMargin
-    val manifests = (0 until IcebergManifests).map { m =>
-      val f = new java.io.File(meta, f"manifest-$m%03d.avro")
-      val entries = (0 until FilesPerManifest).map { k =>
-        val donor = f"$donorDir/file-${m * FilesPerManifest + k}%04d.parquet"
-        Map[String, Any]("status" -> 1, "snapshot_id" -> 2L,
-          "data_file" -> Map[String, Any](
-            "file_path" -> donor, "file_format" -> "PARQUET",
-            "record_count" -> 2L, "file_size_in_bytes" -> 1L))
+    * the Delta stress donors by absolute path, so it is rebuilt with
+    * them) plus an older 50-manifest snapshot — resolving the current
+    * snapshot must never touch the older one's metadata. */
+  def ensureIcebergStress(s: SparkSession, root: String): String = {
+    val donorDir = ensureDeltaStress(s, root)
+    BuildOnce.ensure(s, s"$root/iceberg100", "iceberg100 v1",
+        Seq(s"$donorDir/${BuildOnce.Marker}")) { out =>
+      val meta = new java.io.File(out, "metadata")
+      meta.mkdirs()
+      val manifestListSchema =
+        """{"type":"record","name":"manifest_file","fields":[
+          |{"name":"manifest_path","type":"string"},
+          |{"name":"manifest_length","type":"long"},
+          |{"name":"partition_spec_id","type":"int"},
+          |{"name":"added_snapshot_id","type":"long"}]}""".stripMargin
+      val manifestSchema =
+        """{"type":"record","name":"manifest_entry","fields":[
+          |{"name":"status","type":"int"},
+          |{"name":"snapshot_id","type":"long"},
+          |{"name":"data_file","type":{"type":"record","name":"data_file","fields":[
+          |{"name":"file_path","type":"string"},
+          |{"name":"file_format","type":"string"},
+          |{"name":"record_count","type":"long"},
+          |{"name":"file_size_in_bytes","type":"long"}]}}]}""".stripMargin
+      val manifests = (0 until IcebergManifests).map { m =>
+        val f = new java.io.File(meta, f"manifest-$m%03d.avro")
+        val entries = (0 until FilesPerManifest).map { k =>
+          val donor = f"$donorDir/file-${m * FilesPerManifest + k}%04d.parquet"
+          Map[String, Any]("status" -> 1, "snapshot_id" -> 2L,
+            "data_file" -> Map[String, Any](
+              "file_path" -> donor, "file_format" -> "PARQUET",
+              "record_count" -> 2L, "file_size_in_bytes" -> 1L))
+        }
+        AvroContainer.writeGeneric(f, manifestSchema, entries)
+        (s"$out/metadata/${f.getName}", f.length())
       }
-      AvroContainer.writeGeneric(f, manifestSchema, entries)
-      (s"$out/metadata/${f.getName}", f.length())
+      def manifestList(file: String, ms: Seq[(String, Long)]): String = {
+        AvroContainer.writeGeneric(new java.io.File(meta, file),
+          manifestListSchema, ms.map { case (p, len) => Map[String, Any](
+            "manifest_path" -> p, "manifest_length" -> len,
+            "partition_spec_id" -> 0, "added_snapshot_id" -> 2L) })
+        s"$out/metadata/$file"
+      }
+      val sl1 = manifestList("snap-1.avro", manifests.take(IcebergManifests / 2))
+      val sl2 = manifestList("snap-2.avro", manifests)
+      def jesc(x: String) = x.replace("\\", "\\\\").replace("\"", "\\\"")
+      val mdJson =
+        s"""{"format-version":1,"table-uuid":"graft-iceberg-stress",
+           |"location":"${jesc(out)}","last-updated-ms":1700000000000,
+           |"current-snapshot-id":2,
+           |"snapshots":[
+           |{"snapshot-id":1,"timestamp-ms":1700000000000,
+           |"manifest-list":"${jesc(sl1)}","summary":{"operation":"append"}},
+           |{"snapshot-id":2,"timestamp-ms":1700000001000,
+           |"manifest-list":"${jesc(sl2)}","summary":{"operation":"append"}}]}
+           |""".stripMargin
+      Files.write(new java.io.File(meta, "v1.metadata.json").toPath,
+        mdJson.getBytes(StandardCharsets.UTF_8))
+      Files.write(new java.io.File(meta, "version-hint.text").toPath,
+        "1\n".getBytes(StandardCharsets.UTF_8))
     }
-    def manifestList(file: String, ms: Seq[(String, Long)]): String = {
-      AvroContainer.writeGeneric(new java.io.File(meta, file),
-        manifestListSchema, ms.map { case (p, len) => Map[String, Any](
-          "manifest_path" -> p, "manifest_length" -> len,
-          "partition_spec_id" -> 0, "added_snapshot_id" -> 2L) })
-      s"$out/metadata/$file"
-    }
-    val sl1 = manifestList("snap-1.avro", manifests.take(IcebergManifests / 2))
-    val sl2 = manifestList("snap-2.avro", manifests)
-    def jesc(x: String) = x.replace("\\", "\\\\").replace("\"", "\\\"")
-    val mdJson =
-      s"""{"format-version":1,"table-uuid":"graft-iceberg-stress",
-         |"location":"${jesc(out)}","last-updated-ms":1700000000000,
-         |"current-snapshot-id":2,
-         |"snapshots":[
-         |{"snapshot-id":1,"timestamp-ms":1700000000000,
-         |"manifest-list":"${jesc(sl1)}","summary":{"operation":"append"}},
-         |{"snapshot-id":2,"timestamp-ms":1700000001000,
-         |"manifest-list":"${jesc(sl2)}","summary":{"operation":"append"}}]}
-         |""".stripMargin
-    Files.write(new java.io.File(meta, "v1.metadata.json").toPath,
-      mdJson.getBytes(StandardCharsets.UTF_8))
-    Files.write(new java.io.File(meta, "version-hint.text").toPath,
-      "1\n".getBytes(StandardCharsets.UTF_8))
-    Files.write(marker(out), Array.emptyByteArray)
-    out
   }
 }

@@ -468,7 +468,7 @@ object EventStreams {
   }
 
   private[graft] def nearDupFn(tauNum: Int, ttlMs: Long)(
-      bkey: Long, rows: Iterator[BandRow],
+      @annotation.unused bkey: Long, rows: Iterator[BandRow],
       state: GroupState[BandBucket]): Iterator[PairOut] = {
     if (state.hasTimedOut) {
       // age out members the watermark has passed; drop empty buckets

@@ -550,7 +550,7 @@ case class TiffDecode(child: Expression)
       * must consume its input and produce neither more nor less.
       */
     def segment(off: Long, len: Long, expectedLen: Int,
-        segW: Int = 0, segH: Int = 0): Array[Byte] = {
+        segW: Int, segH: Int): Array[Byte] = {
       if (off < 0 || len <= 0 || off + len > bytes.length || off > Int.MaxValue) return null
       if (compression == 7L) {
         // new-style JPEG (TechNote 2): the segment is a JPEG stream —

@@ -258,7 +258,13 @@ class AnnSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
     val auto1 = Ann.graphSearchTopKAuto(spark, Sf).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
-    val auto2 = Ann.graphSearchTopKAuto(spark, Sf).collect()
+    // the reuse costs no job beyond the search's own construction
+    val (_, searchJobs) = withJobCount(Ann.graphSearchTopK(spark, Sf, prebuiltEdges = Some(
+      spark.read.parquet(graft.geo.Fixtures.fixtureRoot("knng", Sf) + "/edges")
+        .selectExpr("q_id AS src", "neighbor_id AS dst"))))
+    val (again, jobs) = withJobCount(Ann.graphSearchTopKAuto(spark, Sf))
+    assert(jobs == searchJobs, s"reuse ran $jobs jobs, the search alone $searchJobs")
+    val auto2 = again.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
     assert(auto1 == self && auto2 == self)
   }
@@ -277,11 +283,11 @@ class AnnSpec extends SparkSpec {
   test("persisted sketch index: pruned 32-byte stage-1 scan, same neighbors") {
     val idx = scratchDir("graft_sketch")
     Ann.buildSketchIndex(spark, Sf, idx)
-    val fromIndex = Ann.lshTopKIndexed(spark, Sf, idx).collect().map(_.toSeq).toSeq
+    val fromIndex = Ann.lshTopKIndexed(spark, idx).collect().map(_.toSeq).toSeq
     val inSession = Ann.lshTopK(spark, Sf).collect().map(_.toSeq).toSeq
     assert(fromIndex.nonEmpty && fromIndex == inSession)
     // the prefilter scan must NOT read the embedding column
-    val plan = Ann.lshTopKIndexed(spark, Sf, idx).queryExecution
+    val plan = Ann.lshTopKIndexed(spark, idx).queryExecution
       .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     val sketchScans = plan.linesIterator
       .filter(l => l.startsWith("ReadSchema") && l.contains("sk:")).toSeq
@@ -406,8 +412,12 @@ class AnnSpec extends SparkSpec {
     // the searched corpus scan prunes to the probed bucket partitions
     val scan = got.queryExecution.executedPlan.toString
     assert(scan.contains("PartitionFilters"), scan)
-    // second call hits the build-once gate (no rebuild) and agrees
-    assert(Ann.ivfTopKAuto(spark, Sf).collect().map(_.toSeq).toSeq == ref)
+    // second call hits the build-once gate (no rebuild, no gate job) and agrees
+    val (_, searchJobs) = withJobCount(
+      Ann.ivfTopKIndexed(spark, Sf, graft.geo.Fixtures.fixtureRoot("ivf", Sf)))
+    val (again, jobs) = withJobCount(Ann.ivfTopKAuto(spark, Sf))
+    assert(jobs == searchJobs, s"reuse ran $jobs jobs, the search alone $searchJobs")
+    assert(again.collect().map(_.toSeq).toSeq == ref)
   }
 
   test("s5 wrapper: self-contained ivfPqTopK equals a fresh indexed query") {
@@ -416,8 +426,12 @@ class AnnSpec extends SparkSpec {
     val ref = Ann.ivfPqTopKIndexed(spark, Sf, idx).collect().map(_.toSeq).toSeq
     val got = Ann.ivfPqTopK(spark, Sf).collect().map(_.toSeq).toSeq
     assert(got.nonEmpty && got == ref)
-    // second call hits the build-once gate (no rebuild) and agrees
-    assert(Ann.ivfPqTopK(spark, Sf).collect().map(_.toSeq).toSeq == got)
+    // second call hits the build-once gate (no rebuild, no gate job) and agrees
+    val (_, searchJobs) = withJobCount(
+      Ann.ivfPqTopKIndexed(spark, Sf, graft.geo.Fixtures.fixtureRoot("ivfpq", Sf)))
+    val (again, jobs) = withJobCount(Ann.ivfPqTopK(spark, Sf))
+    assert(jobs == searchJobs, s"reuse ran $jobs jobs, the search alone $searchJobs")
+    assert(again.collect().map(_.toSeq).toSeq == got)
   }
 
   test("fused PQ codebook training equals the per-subspace reference") {

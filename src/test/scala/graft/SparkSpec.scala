@@ -19,4 +19,21 @@ trait SparkSpec extends AnyFunSuite {
     java.nio.file.Files.createDirectories(base)
     java.nio.file.Files.createTempDirectory(base, prefix).toString
   }
+
+  /** `body`'s result and the number of Spark jobs started while it ran. */
+  def withJobCount[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graft.BenchMetricsListener.drainBus(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.sql.graft.BenchMetricsListener.drainBus(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
 }
