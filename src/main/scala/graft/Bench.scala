@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.Trace
 
 /** Benchmark entrypoint: times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR and prints one JSON line. Each query runs
@@ -223,6 +224,24 @@ object Bench {
     4.0 * 2 * 8 * n / sec / 1e9
   }
 
+  /** The cgroup memory ceiling, if one is imposed and readable —
+    * cgroup v2 (`memory.max`) first, v1 fallback. A container cap
+    * below the JVM's -Xmx is exactly the invisible-to-probes
+    * environment difference r15 could not name.
+    */
+  private def cgroupMemMaxBytes(): Option[Long] = {
+    def rd(p: String): Option[String] =
+      try Some(new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(p)), "UTF-8").trim)
+      catch { case _: Exception => None }
+    rd("/sys/fs/cgroup/memory.max")
+      .orElse(rd("/sys/fs/cgroup/memory/memory.limit_in_bytes"))
+      .filter(_ != "max")
+      .flatMap(s => scala.util.Try(s.toLong).toOption)
+  }
+
+  private def mb(bytes: Long): Double = math.rint(bytes / 1e6 * 10) / 10
+
   private def jnum(v: Double): String = if (v.isNaN) "null" else v.toString
 
   private def jarr(xs: Seq[Double]): String = xs.map(jnum).mkString("[", ",", "]")
@@ -255,11 +274,6 @@ object Bench {
     // here is gone — isolated numbers now come from BenchOne child
     // JVMs, the only reset that also clears JIT call-site profiles.)
     val spark = newSession()
-    // per-run task-metric attribution (r15 VERDICT #1): shuffle-write
-    // + spill bytes per query, so a row inflated by a smaller
-    // execution-memory ceiling or a slower spill medium SAYS so
-    val metrics = new org.apache.spark.sql.graft.BenchMetricsListener
-    spark.sparkContext.addSparkListener(metrics)
     // contention gate: wait (bounded) for a quiet box; stamp the
     // artifact if it never quiets down rather than committing numbers
     // that only reproduce under the same background load.
@@ -302,67 +316,6 @@ object Bench {
     // optional comma-separated subset for local iteration
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     var failed = List.empty[String]
-
-    /** Total JVM GC milliseconds so far (all collectors). */
-    def gcMs(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
-        .map(_.getCollectionTime.max(0L)).sum
-    }
-    // per-query GC seconds (summed over main-suite runs) — the r7
-    // sf10 finding: late-suite queries inflated up to 10x over their
-    // isolated cost (g6: 53-82 s in-suite vs 4.6-10.7 isolated) and
-    // nothing in the artifact said WHY. GC time riding next to wall
-    // time makes a JVM-state artifact self-diagnosing: slow + high
-    // gc_sec = heap inheritance, slow + low gc_sec = the query itself.
-    val gcByQuery = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // per-query fixture-ensure seconds (summed over runs) — the r14
-    // driver-vs-builder finding: a handful of fixture-backed rows
-    // inflated by stable 8-22x multiples and the artifact could not
-    // say whether query plans or fixture (re)construction paid them.
-    // FixtureTimer deltas around each run make the split explicit.
-    val fxByQuery = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // per-query spill/shuffle bytes (r15 VERDICT #1): the axis the
-    // spin/bandwidth probes cannot see
-    val spillDByQuery = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val spillMByQuery = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val shufWByQuery = scala.collection.mutable.LinkedHashMap[String, Double]()
-
-    /** One timed run's wall seconds plus its attributed diagnostics:
-      * process GC, fixture-ensure seconds, and the run's task-summed
-      * spill/shuffle-write megabytes.
-      */
-    case class RunDiag(sec: Double, gcSec: Double, fxSec: Double,
-      spillDiskMb: Double, spillMemMb: Double, shufWriteMb: Double)
-
-    def time(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        dir: String, n: Int, gcFirst: Boolean = false): Seq[RunDiag] =
-      (0 until n).flatMap { _ =>
-        // scale sections opt in to a pre-run System.gc(): hundreds of
-        // earlier query executions leave the old gen full of dead
-        // cache blocks, and a 20-80 s scale query otherwise pays the
-        // inherited collection mid-measurement
-        if (gcFirst) System.gc()
-        val m0 = metrics.snapshot(spark.sparkContext)
-        val g0 = gcMs()
-        val f0 = FixtureTimer.totalNanos
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, dir).count(); true }
-          catch { case e: Throwable =>
-            if (!failed.contains(name)) failed ::= name
-            System.err.println(s"[bench] $name failed: ${e.getMessage.take(200)}")
-            false
-          }
-          finally Caches.clear() // release per-query caches between runs
-        val sec = (System.nanoTime() - t0) / 1e9
-        val md = metrics.snapshot(spark.sparkContext).minus(m0)
-        def mbv(b: Long): Double = math.rint(b / 1e6 * 10) / 10
-        if (ok) Some(RunDiag(sec, (gcMs() - g0) / 1e3,
-          (FixtureTimer.totalNanos - f0) / 1e9, mbv(md.spillDiskBytes),
-          mbv(md.spillMemBytes), mbv(md.shuffleWriteBytes)))
-        else None
-      }
 
     def median(times: Seq[Double]): Double =
       if (times.isEmpty) Double.NaN
@@ -423,6 +376,28 @@ object Bench {
     // left. Dropped work lands in "budget_dropped": a degraded
     // artifact SAYS what it gave up rather than silently thinning.
     val results = scala.collection.mutable.LinkedHashMap[String, Vector[Double]]()
+    // per-query sum of every main-suite run, rendered as gc_sec (r7:
+    // slow + high gc = heap inheritance, slow + low gc = the query
+    // itself), fixture_sec (r14: fixture (re)construction or plan?)
+    // and spill/shuffle-write MB (r15 VERDICT #1: the axis the spin
+    // and bandwidth probes cannot see)
+    val byQuery = scala.collection.mutable.LinkedHashMap[String, Trace.Run]()
+
+    /** One timed run of `name` over `dir`; None, and `name` listed as
+      * failed, if it throws. */
+    def traced(name: String, dir: String): Option[Trace.Run] =
+      try Some(Trace.run(spark)(SparkEntry.queries(name)(spark, dir)))
+      catch { case e: Throwable =>
+        if (!failed.contains(name)) failed ::= name
+        System.err.println(s"[bench] $name failed: ${e.getMessage.take(200)}")
+        None
+      }
+
+    def record(name: String, rs: Seq[Trace.Run]): Unit = {
+      results(name) = results.getOrElse(name, Vector.empty) ++ rs.map(_.sec)
+      rs.foreach(r => byQuery(name) = byQuery.get(name).fold(r)(_ + r))
+    }
+
     val dropped = scala.collection.mutable.ArrayBuffer[String]()
     var probeEndV = Double.NaN
     var bwEndV = Double.NaN
@@ -443,7 +418,7 @@ object Bench {
         val runsN: Int, val interleaved: Boolean, val freshPrimary: Boolean,
         val decades: Double, val wanted: Seq[String]) {
       val byName = scala.collection.mutable.LinkedHashMap[String, Vector[Double]]()
-      val suiteDiag = scala.collection.mutable.LinkedHashMap[String, Vector[RunDiag]]()
+      val suiteDiag = scala.collection.mutable.LinkedHashMap[String, Vector[Trace.Run]]()
       val freshRuns = scala.collection.mutable.LinkedHashMap[String, Vector[FreshRun]]()
       val loadPasses = scala.collection.mutable.ArrayBuffer[Double]()
       val probePasses = scala.collection.mutable.ArrayBuffer[Double]()
@@ -501,9 +476,9 @@ object Bench {
               ",\"xmx_bytes\":" + jarr(fr.map(_.xmxBytes))
             } else {
               ",\"gc_raw\":" + jarr(sdg.map(_.gcSec)) +
-              ",\"spill_disk_mb_raw\":" + jarr(sdg.map(_.spillDiskMb)) +
-              ",\"spill_mem_mb_raw\":" + jarr(sdg.map(_.spillMemMb)) +
-              ",\"shuffle_write_mb_raw\":" + jarr(sdg.map(_.shufWriteMb))
+              ",\"spill_disk_mb_raw\":" + jarr(sdg.map(r => mb(r.spillDiskBytes))) +
+              ",\"spill_mem_mb_raw\":" + jarr(sdg.map(r => mb(r.spillMemBytes))) +
+              ",\"shuffle_write_mb_raw\":" + jarr(sdg.map(r => mb(r.shuffleWriteBytes)))
             }
             val secondary = if (freshPrimary)
               ",\"fresh_median\":" + jnum(median(primary)) +
@@ -511,8 +486,8 @@ object Bench {
               ",\"in_suite_min\":" + jnum(if (suite.isEmpty) Double.NaN else suite.min) +
               ",\"in_suite_raw\":" + jarr(suite) +
               ",\"in_suite_gc_raw\":" + jarr(sdg.map(_.gcSec)) +
-              ",\"in_suite_spill_disk_mb_raw\":" + jarr(sdg.map(_.spillDiskMb)) +
-              ",\"in_suite_shuffle_write_mb_raw\":" + jarr(sdg.map(_.shufWriteMb))
+              ",\"in_suite_spill_disk_mb_raw\":" + jarr(sdg.map(r => mb(r.spillDiskBytes))) +
+              ",\"in_suite_shuffle_write_mb_raw\":" + jarr(sdg.map(r => mb(r.shuffleWriteBytes)))
             else ""
             "\"" + name + "\":{\"sec\":" + jnum(t) + ",\"min\":" + jnum(pmin) +
               ",\"exponent\":" + jnum(exp) + diag + secondary +
@@ -557,8 +532,7 @@ object Bench {
     // states both outright; two artifacts disagreeing on spill-heavy
     // rows are compared by these fields FIRST)
     val heapMaxBytes = Runtime.getRuntime.maxMemory
-    val cgroupMemMax = org.apache.spark.sql.graft.BenchMetricsListener
-      .cgroupMemMaxBytes()
+    val cgroupMemMax = cgroupMemMaxBytes()
     val driverMemConf = sys.env.getOrElse("SPARK_DRIVER_MEM", "(unset)")
     var mainPassesDone = 0
 
@@ -577,20 +551,19 @@ object Bench {
       val sfl = (mainFlags ++ sections.toSeq.flatMap(_.flags))
         .map("\"" + _ + "\"").mkString("[", ",", "]")
       val fs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val gcs = gcByQuery.map { case (k, v) =>
-        "\"" + k + "\":" + jnum(math.rint(v * 1000) / 1000) }.mkString("{", ",", "}")
-      def mbMap(m: scala.collection.Map[String, Double]): String =
-        m.collect { case (k, v) if v >= 0.05 =>
-          "\"" + k + "\":" + jnum(math.rint(v * 10) / 10) }.mkString("{", ",", "}")
+      def secMap(f: Trace.Run => Double, min: Double): String =
+        byQuery.collect { case (k, r) if f(r) >= min =>
+          "\"" + k + "\":" + jnum(math.rint(f(r) * 1000) / 1000) }.mkString("{", ",", "}")
+      def mbMap(f: Trace.Run => Long): String =
+        byQuery.collect { case (k, r) if mb(f(r)) > 0 =>
+          "\"" + k + "\":" + jnum(mb(f(r))) }.mkString("{", ",", "}")
       val drp = dropped.map("\"" + _ + "\"").mkString("[", ",", "]")
       val partialField = partialReason.map(r => s""","partial":"$r"""").getOrElse("")
       val sects = interopChunk + sections.toSeq.map(_.render()).mkString
-      val fxs = fxByQuery.collect { case (k, v) if v >= 0.005 =>
-        "\"" + k + "\":" + jnum(math.rint(v * 1000) / 1000) }.mkString("{", ",", "}")
       val cby = contendedBy
       val cbyJson = cby.map("\"" + _ + "\"").mkString("[", ",", "]")
       val cgJson = cgroupMemMax.map(_.toString).getOrElse("null")
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_min":$mins,"runs_raw":$raw,"gc_sec":$gcs,"spill_disk_mb":${mbMap(spillDByQuery)},"spill_mem_mb":${mbMap(spillMByQuery)},"shuffle_write_mb":${mbMap(shufWByQuery)},"fixture_sec":$fxs,"spread_flags":$sfl,"failed":$fs,"runs":$runs,"main_passes":$mainPassesDone,"contended":${cby.nonEmpty},"contended_by":$cbyJson,"load_start":$loadStart,"load_end":${loadAvg()},"probe_start":${jnum(probeStart)},"probe_end":${jnum(probeEndV)},"bw_start_gbs":${jnum(bwStart)},"bw_end_gbs":${jnum(bwEndV)},"spin_quiet_max_sec":$SpinQuietMaxSec,"bw_quiet_min_gbs":$BwQuietMinGBs,"heap_max_bytes":$heapMaxBytes,"cgroup_mem_max_bytes":$cgJson,"driver_mem_conf":"$driverMemConf","local_dir":"$localDir","local_dir_tmpfs":$localDirTmpfs,"budget_sec":$budgetSec,"budget_dropped":$drp,"elapsed_sec":${jnum(math.rint(elapsedSec * 10) / 10)},"sf":"$sfDir"$partialField$sects}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_min":$mins,"runs_raw":$raw,"gc_sec":${secMap(_.gcSec, 0.0)},"spill_disk_mb":${mbMap(_.spillDiskBytes)},"spill_mem_mb":${mbMap(_.spillMemBytes)},"shuffle_write_mb":${mbMap(_.shuffleWriteBytes)},"fixture_sec":${secMap(_.fixtureSec, 0.005)},"spread_flags":$sfl,"failed":$fs,"runs":$runs,"main_passes":$mainPassesDone,"contended":${cby.nonEmpty},"contended_by":$cbyJson,"load_start":$loadStart,"load_end":${loadAvg()},"probe_start":${jnum(probeStart)},"probe_end":${jnum(probeEndV)},"bw_start_gbs":${jnum(bwStart)},"bw_end_gbs":${jnum(bwEndV)},"spin_quiet_max_sec":$SpinQuietMaxSec,"bw_quiet_min_gbs":$BwQuietMinGBs,"heap_max_bytes":$heapMaxBytes,"cgroup_mem_max_bytes":$cgJson,"driver_mem_conf":"$driverMemConf","local_dir":"$localDir","local_dir_tmpfs":$localDirTmpfs,"budget_sec":$budgetSec,"budget_dropped":$drp,"elapsed_sec":${jnum(math.rint(elapsedSec * 10) / 10)},"sf":"$sfDir"$partialField$sects}"""
     }
 
     /** COMPACT summary as the FINAL stdout line (r8 VERDICT #5): the
@@ -650,20 +623,12 @@ object Bench {
     // primaries (the cross-round gate numbers) a min-of-1. Priority
     // now: main pass 1 → ALL sf10 fresh passes → interop → main
     // passes 2..n → sf1 → sf10 in-suite.
-    val mainWanted = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    val mainWanted = SparkEntry.queries.keys.toSeq.sorted
+      .filter(name => only.forall(_.contains(name)))
     def mainPass(): Double = {
       val p0 = System.nanoTime()
-      mainWanted.foreach { case (name, fn) =>
-        val ds = time(name, fn, sfDir, 1)
-        results(name) = results.getOrElse(name, Vector.empty) ++ ds.map(_.sec)
-        ds.foreach { d =>
-          gcByQuery(name) = gcByQuery.getOrElse(name, 0.0) + d.gcSec
-          fxByQuery(name) = fxByQuery.getOrElse(name, 0.0) + d.fxSec
-          spillDByQuery(name) = spillDByQuery.getOrElse(name, 0.0) + d.spillDiskMb
-          spillMByQuery(name) = spillMByQuery.getOrElse(name, 0.0) + d.spillMemMb
-          shufWByQuery(name) = shufWByQuery.getOrElse(name, 0.0) + d.shufWriteMb
-        }
+      mainWanted.foreach { name =>
+        record(name, traced(name, sfDir).toSeq)
         if (results.size % 25 == 0) flush(Some("in-progress"))
       }
       mainPassesDone += 1
@@ -737,7 +702,11 @@ object Bench {
       val rotated = sd.wanted.drop(off) ++ sd.wanted.take(off)
       val order = if (pass % 2 == 1) rotated.reverse else rotated
       order.foreach { name =>
-        val ds = time(name, SparkEntry.queries(name), sd.dir, 1, gcFirst = true)
+        // hundreds of earlier query executions leave the old gen full
+        // of dead cache blocks, and a 20-80 s scale query otherwise
+        // pays the inherited collection mid-measurement
+        System.gc()
+        val ds = traced(name, sd.dir).toSeq
         sd.byName(name) = sd.byName.getOrElse(name, Vector.empty) ++ ds.map(_.sec)
         sd.suiteDiag(name) = sd.suiteDiag.getOrElse(name, Vector.empty) ++ ds
       }
@@ -812,8 +781,7 @@ object Bench {
     // budget drops.
     if (only.isEmpty) {
       val stressRoot = "/root/repo/.data/interop"
-      val built = java.nio.file.Files.exists(
-        java.nio.file.Paths.get(stressRoot, "iceberg100", BuildOnce.Marker))
+      val built = sources.StressFixtures.built(spark, stressRoot)
       if (!built && !budgeted(300 + finalReserveSecEarly)) {
         dropped += "interop:fixture-build"
         System.err.println(f"[bench] budget: dropping interop stress (fixtures unbuilt, remaining ${remainingSec}%.0f s)")
@@ -874,24 +842,15 @@ object Bench {
     if (runs > 1) {
       val perQueryEst = mainPassCost / math.max(1, mainWanted.size)
       var degradedFrom: Option[String] = None
-      mainWanted.foreach { case (name, fn) =>
+      mainWanted.foreach { name =>
         if (degradedFrom.isEmpty &&
             !budgeted(perQueryEst * (runs - 1) * 1.5 + finalReserveSec)) {
           degradedFrom = Some(name)
           dropped += s"main:runs-2-to-$runs-from-$name"
           System.err.println(f"[bench] budget: dropping main runs 2-$runs from $name on (remaining ${remainingSec}%.0f s)")
         }
-        if (degradedFrom.isEmpty) {
-          val ds = time(name, fn, sfDir, runs - 1)
-          results(name) = results.getOrElse(name, Vector.empty) ++ ds.map(_.sec)
-          ds.foreach { d =>
-            gcByQuery(name) = gcByQuery.getOrElse(name, 0.0) + d.gcSec
-            fxByQuery(name) = fxByQuery.getOrElse(name, 0.0) + d.fxSec
-            spillDByQuery(name) = spillDByQuery.getOrElse(name, 0.0) + d.spillDiskMb
-            spillMByQuery(name) = spillMByQuery.getOrElse(name, 0.0) + d.spillMemMb
-            shufWByQuery(name) = shufWByQuery.getOrElse(name, 0.0) + d.shufWriteMb
-          }
-        }
+        if (degradedFrom.isEmpty)
+          record(name, (1 until runs).flatMap(_ => traced(name, sfDir)))
       }
       if (degradedFrom.isEmpty) mainPassesDone = runs
       flush(Some("in-progress"))

@@ -24,8 +24,6 @@ object BenchOne {
     // writeback-bound with a 1.3-3.4x spread)
     val spark = BenchLocal.configure(Session.builder()).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val metrics = new org.apache.spark.sql.graft.BenchMetricsListener
-    spark.sparkContext.addSparkListener(metrics)
     val fn = SparkEntry.queries(name)
     try spark.read.parquet(s"$dir/documents.parquet").count()
     catch { case _: Exception => () }
@@ -35,19 +33,7 @@ object BenchOne {
     val warmSec = (System.nanoTime() - w0) / 1e9
     Caches.clear()
     System.gc()
-    def gcMs(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
-    val g0 = gcMs()
-    val f0 = FixtureTimer.totalNanos
-    val m0 = metrics.snapshot(spark.sparkContext)
-    val t0 = System.nanoTime()
-    fn(spark, dir).count()
-    val sec = (System.nanoTime() - t0) / 1e9
-    val m1 = metrics.snapshot(spark.sparkContext).minus(m0)
-    Caches.clear()
+    val r = org.apache.spark.sql.graft.Trace.run(spark)(fn(spark, dir))
     def mb(bytes: Long): Double = math.rint(bytes / 1e6 * 10) / 10
     // marker line the parent greps from child stdout; gc_sec rides
     // along so a parent (or a human) can tell a GC-bound run from a
@@ -58,11 +44,11 @@ object BenchOne {
     // spillm/shufw (MB, timed run only) + xmx: the r15 driver/builder
     // split was on spill-heavy rows and nothing in the row could name
     // heap or spill as the axis — now every fresh primary carries both.
-    println(s"BENCHONE $name $sec gc=${(gcMs() - g0) / 1e3} warm=$warmSec " +
-      s"fx=${(FixtureTimer.totalNanos - f0) / 1e9} " +
+    println(s"BENCHONE $name ${r.sec} gc=${r.gcSec} warm=$warmSec " +
+      s"fx=${r.fixtureSec} " +
       s"local=${spark.conf.get("spark.local.dir", "spark-default")} " +
-      s"spilld=${mb(m1.spillDiskBytes)} spillm=${mb(m1.spillMemBytes)} " +
-      s"shufw=${mb(m1.shuffleWriteBytes)} xmx=${Runtime.getRuntime.maxMemory}")
+      s"spilld=${mb(r.spillDiskBytes)} spillm=${mb(r.spillMemBytes)} " +
+      s"shufw=${mb(r.shuffleWriteBytes)} xmx=${Runtime.getRuntime.maxMemory}")
     spark.stop()
   }
 }

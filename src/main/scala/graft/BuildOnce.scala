@@ -43,15 +43,11 @@ object BuildOnce {
   def ensure(s: SparkSession, out: String, tag: String, sources: Seq[String])(
       build: String => Unit): String = FixtureTimer.timed {
     val root = new Path(out)
-    // the raw store under a checksummed one: the marker gets no `.crc`
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration) match {
-      case c: ChecksumFileSystem => c.getRawFileSystem
-      case f => f
-    }
+    val fs = rawFs(s, root)
     val marker = new Path(root, Marker)
     locks.computeIfAbsent(fs.makeQualified(root).toString, _ => new AnyRef).synchronized {
-      val stamp = s"$tag\n${fingerprint(s, sources)}\n"
-      if (!read(fs, marker).contains(stamp)) {
+      val stamp = stampOf(s, tag, sources)
+      if (!fresh(fs, root, stamp)) {
         fs.delete(marker, false)
         fs.delete(root, true)
         fs.mkdirs(root)
@@ -63,6 +59,28 @@ object BuildOnce {
     }
     out
   }
+
+  /** Whether `out` holds the stamp of recipe `tag` over `sources`, the
+    * check [[ensure]] makes before it builds: one listing per source
+    * and one marker read, no Spark job.
+    */
+  def fresh(s: SparkSession, out: String, tag: String, sources: Seq[String]): Boolean = {
+    val root = new Path(out)
+    fresh(rawFs(s, root), root, stampOf(s, tag, sources))
+  }
+
+  private def fresh(fs: FileSystem, root: Path, stamp: String): Boolean =
+    read(fs, new Path(root, Marker)).contains(stamp)
+
+  private def stampOf(s: SparkSession, tag: String, sources: Seq[String]): String =
+    s"$tag\n${fingerprint(s, sources)}\n"
+
+  /** The raw store under a checksummed one: the marker gets no `.crc`. */
+  private def rawFs(s: SparkSession, root: Path): FileSystem =
+    root.getFileSystem(s.sparkContext.hadoopConfiguration) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case f => f
+    }
 
   /** One line per source file, `path length mtime`, in path order: a
     * directory contributes every file under it, a missing source the

@@ -28,18 +28,19 @@ object Tables {
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
-  private def read(s: SparkSession, path: String): DataFrame = {
+  /** The parquet table at `path`, its schema read once per version. */
+  private[graft] def parquet(s: SparkSession, path: String): DataFrame = {
     val sch = schemaCache.computeIfAbsent(BuildOnce.fingerprint(s, Seq(path)),
       _ => s.read.parquet(path).schema)
     s.read.schema(sch).parquet(path)
   }
-  def region(s: SparkSession, dir: String): DataFrame    = read(s, s"$dir/region.parquet")
-  def nation(s: SparkSession, dir: String): DataFrame    = read(s, s"$dir/nation.parquet")
-  def customer(s: SparkSession, dir: String): DataFrame  = read(s, s"$dir/customer.parquet")
-  def supplier(s: SparkSession, dir: String): DataFrame  = read(s, s"$dir/supplier.parquet")
-  def part(s: SparkSession, dir: String): DataFrame      = read(s, s"$dir/part.parquet")
-  def orders(s: SparkSession, dir: String): DataFrame    = read(s, s"$dir/orders.parquet")
-  def lineitem(s: SparkSession, dir: String): DataFrame  = read(s, s"$dir/lineitem.parquet")
+  def region(s: SparkSession, dir: String): DataFrame    = parquet(s, s"$dir/region.parquet")
+  def nation(s: SparkSession, dir: String): DataFrame    = parquet(s, s"$dir/nation.parquet")
+  def customer(s: SparkSession, dir: String): DataFrame  = parquet(s, s"$dir/customer.parquet")
+  def supplier(s: SparkSession, dir: String): DataFrame  = parquet(s, s"$dir/supplier.parquet")
+  def part(s: SparkSession, dir: String): DataFrame      = parquet(s, s"$dir/part.parquet")
+  def orders(s: SparkSession, dir: String): DataFrame    = parquet(s, s"$dir/orders.parquet")
+  def lineitem(s: SparkSession, dir: String): DataFrame  = parquet(s, s"$dir/lineitem.parquet")
   /** events.ts normalization — the loader owns the physical-type
     * contract so a testdata regeneration can never break an operator.
     * Three parquet encodings are accepted, all normalized to
@@ -53,7 +54,7 @@ object Tables {
     *   - timestamp[us] WITH timezone (TimestampType) → passthrough.
     */
   def events(s: SparkSession, dir: String): DataFrame = {
-    val raw = read(s, s"$dir/events.parquet")
+    val raw = parquet(s, s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
@@ -71,14 +72,14 @@ object Tables {
     * current testdata.
     */
   def documents(s: SparkSession, dir: String): DataFrame = {
-    val raw = read(s, s"$dir/documents.parquet")
+    val raw = parquet(s, s"$dir/documents.parquet")
     Seq("doc_id", "n_chars").foldLeft(raw) { (df, c) =>
       if (df.schema(c).dataType == IntegerType) df.withColumn(c, col(c).cast(LongType))
       else df
     }
   }
   def embeddings(s: SparkSession, dir: String): DataFrame = {
-    val raw = read(s, s"$dir/embeddings.parquet")
+    val raw = parquet(s, s"$dir/embeddings.parquet")
     val idFixed =
       if (raw.schema("vec_id").dataType == IntegerType)
         raw.withColumn("vec_id", col("vec_id").cast(LongType))

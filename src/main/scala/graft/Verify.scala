@@ -21,18 +21,9 @@ object Verify {
       }
       finally Caches.clear() // release per-query caches between queries
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // every control char escaped: a tab or CR in the SQL would
+    // otherwise make the oracle's json.load fail
+    def q(s: String): String = "\"" + sources.Json.jesc(s) + "\""
     // a spot run's oracles name only the queries it ran: check.py
     // fails every named query that has no output
     val json = SparkEntry.oracleSql

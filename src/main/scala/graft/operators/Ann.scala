@@ -540,7 +540,7 @@ object Ann {
     val (kk, np) = (ik, inprobe)
     val cents: Array[Array[Float]] = s.read.parquet(s"$indexPath/centroids")
       .orderBy("bucket").select("centroid").as[Seq[Float]].collect().map(_.toArray)
-    val base = s.read.parquet(s"$indexPath/corpus")
+    val base = Tables.parquet(s, s"$indexPath/corpus")
       .select(col("vec_id"), col("embedding"), col("nrm"), col("bucket"), col("probes"))
     val delta = graft.Caches.track(Tables.embeddings(s, dir).filter(deltaFilter)
       .join(base.select(col("vec_id")), Seq("vec_id"), "left_anti")
@@ -559,7 +559,7 @@ object Ann {
         col("nrm").as("q_nrm"), explode(col("probes")).as("bucket"))
     val fresh = knnEdges(union.select(col("vec_id"), col("embedding"),
       col("nrm"), col("bucket")), probes, kk)
-    val kept = s.read.parquet(s"$indexPath/edges")
+    val kept = Tables.parquet(s, s"$indexPath/edges")
       .join(requeryIds.select(col("vec_id").as("q_id")), Seq("q_id"), "left_anti")
     graft.Caches.ordered(kept.unionByName(fresh), col("q_id"), col("rank"))
   }
@@ -639,7 +639,7 @@ object Ann {
   def graphSearchTopKAuto(s: SparkSession, dir: String, k: Int = K): DataFrame = {
     val indexPath = ensureIndex(s, dir, "knng")(buildKnnGraphIndex(s, dir, _, k = 8, nprobe = 4))
     graphSearchTopK(s, dir, k, prebuiltEdges = Some(
-      s.read.parquet(s"$indexPath/edges")
+      Tables.parquet(s, s"$indexPath/edges")
         .select(col("q_id").as("src"), col("neighbor_id").as("dst"))))
   }
 
@@ -724,7 +724,7 @@ object Ann {
     val probes = queries.select(col("q_id"), col("q_emb"), col("q_nrm"),
       explode(col("buckets")).as("bucket"))
     val probedBuckets = probes.select("bucket").distinct().as[Int].collect()
-    val corpus = s.read.parquet(s"$indexPath/corpus")
+    val corpus = Tables.parquet(s, s"$indexPath/corpus")
       .filter(col("bucket").isin(probedBuckets.map(Integer.valueOf): _*))
     rankTopK(
       broadcast(probes).join(corpus, Seq("bucket"))
@@ -991,7 +991,7 @@ object Ann {
       .as[(Long, Seq[Float], Double)].collect()
     val qdf = qs.map { case (qid, emb, qnrm) => (qid, adcLut(emb, books), qnrm) }
       .toSeq.toDF("q_id", "lut", "q_nrm")
-    val codes = s.read.parquet(s"$indexPath/codes")
+    val codes = Tables.parquet(s, s"$indexPath/codes")
     val adcCands = broadcast(qdf).join(codes, col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id"),
         (adcSum(books.length, books(0).length) /
@@ -1100,7 +1100,7 @@ object Ann {
     }.toSeq
     val probes = probeRows.toDF("q_id", "bucket", "qc", "lut", "q_nrm")
     val probedBuckets = probeRows.map(_._2).distinct
-    val codes = s.read.parquet(s"$indexPath/codes")
+    val codes = Tables.parquet(s, s"$indexPath/codes")
       .filter(col("bucket").isin(probedBuckets.map(Integer.valueOf): _*))
     // residual ADC: q·x̂ = q·c_bucket (driver-computed `qc`) + LUT sum
     val adcCands = broadcast(probes).join(codes, Seq("bucket"))

@@ -2294,21 +2294,15 @@ object Relational {
     // the walk emits each customer exactly once, so total recursion
     // output = |customer| — past the default cteRecursionRowLimit of
     // 10^6 at sf ≥ ~7. The raise is QUERY-SCOPED: the recursion
-    // executes eagerly inside the save/restore below (localCheckpoint
+    // executes eagerly inside [[withConfs]] (localCheckpoint
     // materializes the depth-grain census, ≤ ~10 rows), so the
     // runaway-recursion guard stays at its default for every other
     // recursive query in the session. The temp view is per-call
     // unique and dropped on the way out.
-    val saved = s.conf.getOption("spark.sql.cteRecursionRowLimit")
-    s.conf.set("spark.sql.cteRecursionRowLimit", "2000000000")
-    val (df, view) = q74Lazy(s, dir)
-    try df.localCheckpoint()
-    finally {
-      saved match {
-        case Some(v) => s.conf.set("spark.sql.cteRecursionRowLimit", v)
-        case None => s.conf.unset("spark.sql.cteRecursionRowLimit")
-      }
-      s.catalog.dropTempView(view)
+    withConfs(s, Seq("spark.sql.cteRecursionRowLimit" -> "2000000000")) {
+      val (df, view) = q74Lazy(s, dir)
+      try df.localCheckpoint()
+      finally s.catalog.dropTempView(view)
     }
   }
 

@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.SparkSession
+import Json.jesc
 
 /** Write-side table-format interop: publish a [[SnapshotTable]]
   * version as a MINIMAL DELTA TABLE (delta.io PROTOCOL.md, protocol
@@ -43,20 +44,6 @@ import org.apache.spark.sql.SparkSession
   * of scope the same way it is for [[IcebergTable]]'s write side).
   */
 object DeltaExport {
-
-  private def jesc(x: String): String = {
-    val b = new StringBuilder(x.length + 8)
-    x.foreach {
-      case '"' => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case '\n' => b.append("\\n")
-      case '\r' => b.append("\\r")
-      case '\t' => b.append("\\t")
-      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
-    }
-    b.toString
-  }
 
   /** Where an export lands: local java.nio (tmp-then-ATOMIC_MOVE is
     * the commit point) or, when `out` carries a URI scheme

@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.SparkSession
+import Json.jesc
 
 /** Write-side interop, second format: publish a [[SnapshotTable]]
   * version as a MINIMAL APACHE ICEBERG v1 Hadoop table
@@ -38,20 +39,6 @@ import org.apache.spark.sql.SparkSession
   *    [[DeltaExport]]).
   */
 object IcebergExport {
-
-  private def jesc(x: String): String = {
-    val b = new StringBuilder(x.length + 8)
-    x.foreach {
-      case '"' => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case '\n' => b.append("\\n")
-      case '\r' => b.append("\\r")
-      case '\t' => b.append("\\t")
-      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
-    }
-    b.toString
-  }
 
   private val ManifestListSchema =
     """{"type":"record","name":"manifest_file","fields":[

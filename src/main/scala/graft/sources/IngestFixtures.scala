@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
+import Json.jesc
 import org.apache.spark.sql.functions._
 import graft.{BuildOnce, Tables}
 import graft.geo.Fixtures
@@ -45,21 +46,6 @@ object IngestFixtures {
   private def ensure(s: SparkSession, dir: String, kind: String)(build: java.io.File => Unit): String =
     BuildOnce.ensure(s, Fixtures.fixtureRoot(kind, dir), s"$kind v1",
       Seq(s"$dir/documents.parquet"))(out => build(new java.io.File(out)))
-
-  /** Spec-correct JSON string escape (quote, backslash, control). */
-  private def jesc(x: String): String = {
-    val b = new StringBuilder(x.length + 8)
-    x.foreach {
-      case '"' => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case '\n' => b.append("\\n")
-      case '\r' => b.append("\\r")
-      case '\t' => b.append("\\t")
-      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
-    }
-    b.toString
-  }
 
   /** RFC-4180 field: always quoted, inner quotes doubled. */
   private def cesc(x: String): String = "\"" + x.replace("\"", "\"\"") + "\""

@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
+import Json.jesc
 import graft.BuildOnce
 
 /** METADATA-SCALE stress fixtures for the interop readers (r13
@@ -36,6 +37,18 @@ object StressFixtures {
   val IcebergManifests = 100
   val FilesPerManifest = 10
 
+  private val DeltaTag = "delta1000 v1"
+  private val IcebergTag = "iceberg100 v1"
+  /** The Iceberg table's one source: the Delta table's marker, so it
+    * is rebuilt with its donors. */
+  private def donorMarker(root: String) = Seq(s"$root/delta1000/${BuildOnce.Marker}")
+
+  /** Whether both stress tables under `root` are fresh by their
+    * current recipes — a check that builds nothing. */
+  def built(s: SparkSession, root: String): Boolean =
+    BuildOnce.fresh(s, s"$root/delta1000", DeltaTag, Nil) &&
+      BuildOnce.fresh(s, s"$root/iceberg100", IcebergTag, donorMarker(root))
+
   /** 1,000-commit Delta table: v0 carries protocol/metaData/add-0,
     * each later commit one add; checkpoints at v9, v19, …, v989
     * (latest checkpoint BEHIND the head so resolution pays a real
@@ -43,7 +56,7 @@ object StressFixtures {
     * cleanup), so the checkpoint path is load-bearing exactly as in
     * the j10 fixture. */
   def ensureDeltaStress(s: SparkSession, root: String): String =
-    BuildOnce.ensure(s, s"$root/delta1000", "delta1000 v1", Nil) { out =>
+    BuildOnce.ensure(s, s"$root/delta1000", DeltaTag, Nil) { out =>
       import s.implicits._
       val dir = new java.io.File(out)
       val log = new java.io.File(dir, "_delta_log")
@@ -110,8 +123,7 @@ object StressFixtures {
     * snapshot must never touch the older one's metadata. */
   def ensureIcebergStress(s: SparkSession, root: String): String = {
     val donorDir = ensureDeltaStress(s, root)
-    BuildOnce.ensure(s, s"$root/iceberg100", "iceberg100 v1",
-        Seq(s"$donorDir/${BuildOnce.Marker}")) { out =>
+    BuildOnce.ensure(s, s"$root/iceberg100", IcebergTag, donorMarker(root)) { out =>
       val meta = new java.io.File(out, "metadata")
       meta.mkdirs()
       val manifestListSchema =
@@ -150,7 +162,6 @@ object StressFixtures {
       }
       val sl1 = manifestList("snap-1.avro", manifests.take(IcebergManifests / 2))
       val sl2 = manifestList("snap-2.avro", manifests)
-      def jesc(x: String) = x.replace("\\", "\\\\").replace("\"", "\\\"")
       val mdJson =
         s"""{"format-version":1,"table-uuid":"graft-iceberg-stress",
            |"location":"${jesc(out)}","last-updated-ms":1700000000000,

@@ -164,7 +164,6 @@ class AnnSpec extends SparkSpec {
   }
 
   test("s9 MIPS: diverges from cosine where norms vary; norm-augmentation reduction is exact") {
-    import org.apache.spark.sql.functions.col
     import spark.implicits._
     // the driver corpus ships UNIT-normalized embeddings (MIPS ≡
     // cosine there by construction — measured norm spread 4e-8), so
@@ -258,10 +257,12 @@ class AnnSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
     val auto1 = Ann.graphSearchTopKAuto(spark, Sf).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
-    // the reuse costs no job beyond the search's own construction
-    val (_, searchJobs) = withJobCount(Ann.graphSearchTopK(spark, Sf, prebuiltEdges = Some(
-      spark.read.parquet(graft.geo.Fixtures.fixtureRoot("knng", Sf) + "/edges")
-        .selectExpr("q_id AS src", "neighbor_id AS dst"))))
+    // the reuse costs exactly the search's own construction jobs: the
+    // gate and the edge read start none
+    val edges = spark.read.parquet(graft.geo.Fixtures.fixtureRoot("knng", Sf) + "/edges")
+      .selectExpr("q_id AS src", "neighbor_id AS dst")
+    val (_, searchJobs) = withJobCount(
+      Ann.graphSearchTopK(spark, Sf, prebuiltEdges = Some(edges)))
     val (again, jobs) = withJobCount(Ann.graphSearchTopKAuto(spark, Sf))
     assert(jobs == searchJobs, s"reuse ran $jobs jobs, the search alone $searchJobs")
     val auto2 = again.collect()

@@ -1,6 +1,5 @@
 package graft
 
-import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -37,7 +36,7 @@ class AsofJoinSpec extends SparkSpec {
       (i.toLong, rnd.nextInt(20).toLong, rnd.nextInt(1000).toLong))
       .toDF("ev_id", "k", "tl").select(col("ev_id"), col("k"),
         timestamp_seconds(col("tl")).as("t"))
-    val ord = (1 to 300).map { i => (rnd.nextInt(25).toLong, rnd.nextInt(1000).toLong) }
+    val ord = (1 to 300).map { _ => (rnd.nextInt(25).toLong, rnd.nextInt(1000).toLong) }
       .distinct.zipWithIndex
       .map { case ((k, tl), i) => (k, tl, i.toLong) }
       .toDF("k", "tl", "payload").select(col("k"),
@@ -57,7 +56,7 @@ class AsofJoinSpec extends SparkSpec {
     val ev = (1 to 200).map(i => (i.toLong, keys(rnd.nextInt(keys.size)), rnd.nextInt(500).toLong))
       .toDF("ev_id", "k", "tl")
       .select(col("ev_id"), col("k"), timestamp_seconds(col("tl")).as("t"))
-    val ord = (1 to 120).map(i => (keys(rnd.nextInt(keys.size)), rnd.nextInt(500).toLong))
+    val ord = (1 to 120).map(_ => (keys(rnd.nextInt(keys.size)), rnd.nextInt(500).toLong))
       .distinct.zipWithIndex.map { case ((k, t), i) => (k, t, i.toLong) }
       .toDF("k", "tl", "payload")
       .select(col("k"), timestamp_seconds(col("tl")).as("t"), col("payload"))

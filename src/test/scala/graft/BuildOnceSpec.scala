@@ -43,6 +43,22 @@ class BuildOnceSpec extends SparkSpec {
     assert(builds == 4 && spark.read.parquet(s"$dir/out/data").count() == 3)
   }
 
+  test("fresh holds after a build and fails for a new tag or a touched source") {
+    val dir = scratchDir("graft_bo_fresh")
+    val src = Paths.get(dir, "src.parquet")
+    spark.range(10).coalesce(1).write.parquet(src.toString)
+    val srcs = Seq(src.toString)
+    val out = s"$dir/out"
+    assert(!BuildOnce.fresh(spark, out, "t v1", srcs))
+    BuildOnce.ensure(spark, out, "t v1", srcs)(o => spark.range(3).write.parquet(s"$o/data"))
+    assert(BuildOnce.fresh(spark, out, "t v1", srcs))
+    assert(!BuildOnce.fresh(spark, out, "t v2", srcs))
+    val part = Files.list(src).filter(_.toString.endsWith(".parquet")).findFirst().get
+    Files.setLastModifiedTime(part, java.nio.file.attribute.FileTime.fromMillis(
+      Files.getLastModifiedTime(part).toMillis + 10000))
+    assert(!BuildOnce.fresh(spark, out, "t v1", srcs))
+  }
+
   test("an index deleted mid-JVM is rebuilt, not handed back as a stale path") {
     val dir = corpusCopy("graft_bo_ivf", "embeddings")
     val first = rows(Ann.ivfTopKAuto(spark, dir))

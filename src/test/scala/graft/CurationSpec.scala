@@ -244,14 +244,7 @@ class CurationSpec extends SparkSpec {
     // broadcast 1-row aggregate, p5's thresholds a broadcast map —
     // none may execute before an action
     Tables.documents(spark, Sf) // warm the one-time schema-footer read
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add(j.stageInfos.map(_.name).mkString(" / "))
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
+    val (_, jobs) = withJobs {
       val frames = Seq(
         graft.operators.TextAnalysis.heavyHitters(spark, Sf),
         Curation.ppsSample(spark, Sf),
@@ -259,11 +252,9 @@ class CurationSpec extends SparkSpec {
         Curation.fixedSample(spark, Sf))
       frames.foreach(_.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-      Thread.sleep(1000) // listener bus is async
-      assert(jobs.isEmpty,
-        s"construction/explain ran ${jobs.size} jobs: " +
-          jobs.toArray.mkString("; "))
-    } finally spark.sparkContext.removeSparkListener(l)
+    }
+    assert(jobs.isEmpty,
+      s"construction/explain ran ${jobs.size} jobs: " + jobs.mkString("; "))
   }
 
   test("d10: canonicalization folds case/port/www/tracking/order; groups are (doc_id%97)-exact") {
@@ -330,7 +321,6 @@ class CurationSpec extends SparkSpec {
   }
 
   test("p10: cross-split leaks surface, within-split dups do not") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val dir = scratchDir("graft_p10")
     // md5('splt'||id) buckets: 0→28, 1→0, 2→3, 3→88, 4→88, 5→85 —

@@ -217,39 +217,23 @@ class DedupSpec extends SparkSpec {
     // frame still runs nothing further.
     val dir = plantedDir // materialize the fixture before listening
     Tables.documents(spark, dir) // warm the one-time schema-footer read
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add(j.stageInfos.map(s => s.name + "@" + s.details.linesIterator
-          .take(3).mkString("|")).mkString(" / "))
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val d2 = Dedup.minhashLsh(spark, dir, threshold = 0.5)
-      val d4 = Dedup.ngramJaccard(spark, dir, threshold = 0.7)
-      // drain the async listener bus instead of sleeping (r16 ADVICE:
-      // a fixed sleep under a slow bus undercounts)
-      org.apache.spark.sql.graft.BenchMetricsListener
-        .drainBus(spark.sparkContext)
-      val constructJobs = jobs.size
-      jobs.clear()
+    val ((d2, d4), constructJobs) = withJobCount(
+      (Dedup.minhashLsh(spark, dir, threshold = 0.5),
+        Dedup.ngramJaccard(spark, dir, threshold = 0.7)))
+    val (_, jobs) = withJobs {
       d2.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       d4.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
-      org.apache.spark.sql.graft.BenchMetricsListener
-        .drainBus(spark.sparkContext)
-      assert(jobs.isEmpty,
-        s"explain ran ${jobs.size} jobs: " + jobs.toArray.mkString("; "))
-      // the eager builds DID run at construction (2 caches per frame,
-      // 2 frames; AQE may split each build into several jobs — no
-      // upper bound, r16 ADVICE: a hard cap is environment-sensitive).
-      // The explain-runs-nothing assertion above is the property that
-      // actually guards the laziness contract.
-      assert(constructJobs >= 4,
-        s"construction ran $constructJobs jobs (expected the 2x2 cache builds)")
-    } finally spark.sparkContext.removeSparkListener(l)
+    }
+    assert(jobs.isEmpty, s"explain ran ${jobs.size} jobs: " + jobs.mkString("; "))
+    // the eager builds DID run at construction (2 caches per frame,
+    // 2 frames; AQE may split each build into several jobs — no
+    // upper bound, r16 ADVICE: a hard cap is environment-sensitive).
+    // The explain-runs-nothing assertion above is the property that
+    // actually guards the laziness contract.
+    assert(constructJobs >= 4,
+      s"construction ran $constructJobs jobs (expected the 2x2 cache builds)")
   }
 
   test("prefixJaccard (PPJoin variant) agrees with the banded result") {

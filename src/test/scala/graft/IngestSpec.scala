@@ -22,6 +22,10 @@ object FetchProbe {
 class IngestSpec extends SparkSpec {
   import spark.implicits._
 
+  test("the JSON escape writes quote, backslash and control characters as JSON does") {
+    assert(graft.sources.Json.jesc("a\"b\\c\nd\u0001e") == "a\\\"b\\\\c\\nd\\u0001e")
+  }
+
   test("fetch bounds in-flight concurrency to maxConcurrent") {
     FetchProbe.reset()
     val manifest = (1 to 64).map(i => s"key_$i").toDF("k")

@@ -127,7 +127,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("AsofJoin equals the window reference on arbitrary keyed event/order sets") {
-    import org.apache.spark.sql.expressions.Window
     val row = Gen.zip(Gen.choose(0L, 5L), Gen.choose(0L, 500L))
     val prop = Prop.forAll(
       Gen.listOfN(40, row), Gen.listOfN(25, Gen.zip(Gen.choose(0L, 7L), Gen.choose(0L, 500L)))) {

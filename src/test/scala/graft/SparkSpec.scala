@@ -22,18 +22,14 @@ trait SparkSpec extends AnyFunSuite {
 
   /** `body`'s result and the number of Spark jobs started while it ran. */
   def withJobCount[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.sql.graft.BenchMetricsListener.drainBus(sc)
-    sc.addSparkListener(l)
-    try {
-      val r = body
-      org.apache.spark.sql.graft.BenchMetricsListener.drainBus(sc)
-      (r, jobs.get)
-    } finally sc.removeSparkListener(l)
+    val (r, jobs) = withJobs(body)
+    (r, jobs.size)
+  }
+
+  /** `body`'s result and the jobs started while it ran, each named by
+    * its stages. */
+  def withJobs[T](body: => T): (T, Seq[String]) = {
+    val (r, t) = org.apache.spark.sql.graft.Trace.during(spark)(body)
+    (r, t.jobs)
   }
 }

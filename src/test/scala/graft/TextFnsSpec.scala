@@ -218,7 +218,7 @@ class TextFnsSpec extends SparkSpec {
         ((r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     assert(got.view.mapValues(_._1).toMap == expCells)
     // marginals and rates reconcile
-    got.groupBy(_._1._1).foreach { case (lang, cells) =>
+    got.groupBy(_._1._1).foreach { case (_, cells) =>
       val nLabel = cells.head._2._2
       assert(cells.values.map(_._1).sum == nLabel)
       cells.foreach { case (_, (n, nl, pm)) =>

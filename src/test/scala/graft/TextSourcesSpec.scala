@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.TextSources
-import org.apache.spark.sql.functions._
 
 class TextSourcesSpec extends SparkSpec {
   import spark.implicits._

@@ -1,10 +1,9 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import scala.collection.mutable.ArrayBuffer
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.StageInfo
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graft.BenchMetricsListener
+import org.apache.spark.sql.graft.Trace
 import graft.{Caches, Session, SparkEntry}
 
 /** Dev profiling main (not part of the API): runs one SparkEntry query
@@ -22,8 +21,8 @@ import graft.{Caches, Session, SparkEntry}
   *    lines — the operators that actually ran, unlike a static explain.
   *    The whole plan is written to `target/probe/<query>.txt`.
   *
-  * The action is `count()`, as in Bench, so the plan is the benched
-  * one: column pruning may drop work a written result would pay.
+  * Each run is a [[Trace.run]], as in Bench, so the plan is the
+  * benched one: column pruning may drop work a written result would pay.
   * With `runs` = 0 nothing runs: the query's own optimized logical
   * plan (no count on top) is written to
   * `target/probe/<query>.optimized.txt`, the file a refactor that must
@@ -34,10 +33,6 @@ import graft.{Caches, Session, SparkEntry}
   * properties.
   */
 object Probe {
-  private final case class St(id: Int, name: String, ms: Long, tasks: Int,
-      cpuMs: Long, input: Long, shRead: Long, shWrite: Long,
-      memSpill: Long, diskSpill: Long, submitted: Long, completed: Long)
-
   private val PlanKeys = Seq("Exchange", "Sort ", "Join", "InMemory", "Window", "Scan")
 
   def main(args: Array[String]): Unit = {
@@ -70,71 +65,48 @@ object Probe {
       println(s"[probe] $name optimized logical plan: $out")
       return
     }
-    val stages = ArrayBuffer[St]()
-    val listener = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val si = e.stageInfo
-        val m = si.taskMetrics
-        val sub = si.submissionTime.getOrElse(0L)
-        val end = si.completionTime.getOrElse(0L)
-        stages.synchronized {
-          stages += St(si.stageId, si.name.take(40), end - sub, si.numTasks,
-            m.executorCpuTime / 1000000, m.inputMetrics.bytesRead,
-            m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
-            m.memoryBytesSpilled, m.diskBytesSpilled, sub, end)
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val last = (1 to runs).map { r =>
+      val run = Trace.run(spark)(query(spark, dir))
+      println(f"[probe] $name run $r/$runs rows=${run.rows} wall=${run.sec}%.2f s " +
+        f"(construct=${run.constructSec}%.2f s, execute=${run.executeSec}%.2f s)")
+      run
+    }.last
 
-    var plan = ""
-    for (r <- 1 to runs) {
-      BenchMetricsListener.drainBus(spark.sparkContext)
-      stages.synchronized(stages.clear())
-      val t0 = System.nanoTime()
-      // count through an explicit aggregate so its QueryExecution —
-      // whose AdaptiveSparkPlanExec holds the final plan once run —
-      // stays in hand (Dataset.count() builds and drops its own)
-      val counted = query(spark, dir).groupBy().count()
-      val tBuilt = System.nanoTime()
-      val n = counted.collect().head.getLong(0)
-      val tDone = System.nanoTime()
-      plan = counted.queryExecution.executedPlan.toString
-      Caches.clear()
-      println(f"[probe] $name run $r/$runs rows=$n wall=${(tDone - t0) / 1e9}%.2f s " +
-        f"(construct=${(tBuilt - t0) / 1e9}%.2f s, execute=${(tDone - tBuilt) / 1e9}%.2f s)")
-    }
-    BenchMetricsListener.drainBus(spark.sparkContext)
-    spark.sparkContext.removeSparkListener(listener)
-
+    def submitted(s: StageInfo): Long = s.submissionTime.getOrElse(0L)
+    def completed(s: StageInfo): Long = s.completionTime.getOrElse(0L)
+    def ms(s: StageInfo): Long = completed(s) - submitted(s)
+    def cpuMs(s: StageInfo): Long = s.taskMetrics.executorCpuTime / 1000000
     val mb = 1024.0 * 1024
-    val byWall = stages.synchronized(stages.sortBy(-_.ms).toSeq)
+    val byWall = last.stages.sortBy(-ms(_))
     println(f"[probe] last run: ${byWall.size} stages, " +
-      f"sum-of-stage-wall=${byWall.map(_.ms).sum / 1000.0}%.2f s, " +
-      f"sum-cpu=${byWall.map(_.cpuMs).sum / 1000.0}%.2f s")
+      f"sum-of-stage-wall=${byWall.map(ms).sum / 1000.0}%.2f s, " +
+      f"sum-cpu=${byWall.map(cpuMs).sum / 1000.0}%.2f s")
     byWall.take(15).foreach { s =>
-      println(f"stage ${s.id}%4d ${s.ms / 1000.0}%7.2f s tasks=${s.tasks}%4d " +
-        f"cpu=${s.cpuMs / 1000.0}%7.2f s in=${s.input / mb}%8.1f MB " +
-        f"shR=${s.shRead / mb}%8.1f shW=${s.shWrite / mb}%8.1f " +
-        f"spillM=${s.memSpill / mb}%8.1f spillD=${s.diskSpill / mb}%8.1f MB  ${s.name}")
+      val m = s.taskMetrics
+      println(f"stage ${s.stageId}%4d ${ms(s) / 1000.0}%7.2f s tasks=${s.numTasks}%4d " +
+        f"cpu=${cpuMs(s) / 1000.0}%7.2f s in=${m.inputMetrics.bytesRead / mb}%8.1f MB " +
+        f"shR=${m.shuffleReadMetrics.totalBytesRead / mb}%8.1f " +
+        f"shW=${m.shuffleWriteMetrics.bytesWritten / mb}%8.1f " +
+        f"spillM=${m.memoryBytesSpilled / mb}%8.1f spillD=${m.diskBytesSpilled / mb}%8.1f MB  " +
+        s.name.take(40))
     }
 
-    val bySubmit = byWall.sortBy(_.submitted)
+    val bySubmit = byWall.sortBy(submitted)
     if (bySubmit.nonEmpty) {
-      val start = bySubmit.head.submitted
+      val start = submitted(bySubmit.head)
       var prevEnd = start
       println("[probe] timeline (submission order):")
       bySubmit.foreach { s =>
-        println(f"  +${(s.submitted - start) / 1000.0}%6.2f s " +
-          f"gap=${(s.submitted - prevEnd) / 1000.0}%5.2f dur=${s.ms / 1000.0}%5.2f " +
-          f"tasks=${s.tasks}%4d  ${s.name}")
-        prevEnd = math.max(prevEnd, s.completed)
+        println(f"  +${(submitted(s) - start) / 1000.0}%6.2f s " +
+          f"gap=${(submitted(s) - prevEnd) / 1000.0}%5.2f dur=${ms(s) / 1000.0}%5.2f " +
+          f"tasks=${s.numTasks}%4d  ${s.name.take(40)}")
+        prevEnd = math.max(prevEnd, completed(s))
       }
     }
 
-    val out = write(s"$name.txt", plan)
+    val out = write(s"$name.txt", last.plan)
     println(s"[probe] final plan (full text: $out):")
-    plan.linesIterator.takeWhile(!_.contains("== Initial Plan ==")).zipWithIndex
+    last.plan.linesIterator.takeWhile(!_.contains("== Initial Plan ==")).zipWithIndex
       .foreach { case (l, i) => if (PlanKeys.exists(l.contains)) println(f"$i%4d $l") }
   }
 }
