@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.geo.Geo
 
@@ -12,7 +14,8 @@ import graft.geo.Geo
   * by the chosen region set (main.rs:56-88), expands the per-tile
   * grid (main.rs:163-191) and writes a snappy parquet dataset
   * partitioned by tile (main.rs:272-296) — distributed instead of
-  * file-at-a-time.
+  * file-at-a-time. A set is one Spark job: the write, which counts the
+  * rows it writes.
   */
 object Cli {
   def main(args: Array[String]): Unit = {
@@ -39,7 +42,18 @@ object Cli {
     } finally spark.stop()
   }
 
-  /** The reference pipeline for one set; returns rows written. */
+  /** Longest wait for the written row count once the write has
+    * returned: the count is delivered after the job, so it can lag the
+    * write's return by a bus delivery, but a missing one must throw
+    * rather than hang the caller.
+    */
+  private val CountWait = 60.seconds
+
+  /** The reference pipeline for one set; returns rows written. One
+    * Spark job: the rows are counted by an [[Observation]] on the
+    * written frame, so no cache and no second pass over the grid are
+    * needed. An empty set writes only `_SUCCESS` and returns 0.
+    */
   def run(spark: SparkSession, input: String, out: String, setName: String): Long = {
     val t = Geo.tiles(spark, input)
     val inSet = setName match {
@@ -49,16 +63,11 @@ object Cli {
       case "world"       => lit(true)
       case other         => throw new IllegalArgumentException(s"unknown set: $other")
     }
+    val written = Observation()
     val grid = Geo.gridExpand(t.filter(inSet))
       .select(col("lat"), col("lon"), col("elevation"), col("tile_key"))
-      .cache()
-    // count the written frame directly — an empty set writes only
-    // _SUCCESS, which a schema-inferring re-read would choke on; the
-    // cache is released afterwards so a long-lived session does not
-    // accumulate one grid per call
-    try {
-      Geo.writeTiled(grid, out)
-      grid.count()
-    } finally grid.unpersist(blocking = false)
+      .observe(written, count(lit(1)))
+    Geo.writeTiled(grid, out)
+    Await.result(written.future, CountWait).getLong(0)
   }
 }

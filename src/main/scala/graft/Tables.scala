@@ -16,8 +16,8 @@ object Tables {
     */
   val NanosConf: (String, String) = "spark.sql.legacy.parquet.nanosAsLong" -> "true"
 
-  /** Schema-inference cache, keyed by the table's
-    * [[BuildOnce.fingerprint]] (its files' paths, lengths and mtimes).
+  /** Schema-inference cache, keyed by the tables'
+    * [[BuildOnce.fingerprint]] (their files' paths, lengths and mtimes).
     * A schema-less `spark.read.parquet` runs a footer-read JOB at
     * DataFrame construction; with the cache the footer is read once per
     * version of a table and every later construction is job-free
@@ -28,11 +28,24 @@ object Tables {
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
-  /** The parquet table at `path`, its schema read once per version. */
-  private[graft] def parquet(s: SparkSession, path: String): DataFrame = {
-    val sch = schemaCache.computeIfAbsent(BuildOnce.fingerprint(s, Seq(path)),
-      _ => s.read.parquet(path).schema)
-    s.read.schema(sch).parquet(path)
+  /** Each path's fingerprint at its last read here. */
+  private val lastRead = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** The parquet table(s) at `paths`, their schema read once per
+    * version. A path whose fingerprint changed since its last read here
+    * (or that is read here for the first time) is refreshed first:
+    * Spark's cache matches a cached scan by path, so a cached frame over
+    * a rewritten table would otherwise keep serving its old rows.
+    */
+  private[graft] def parquet(s: SparkSession, paths: String*): DataFrame = {
+    val prints = paths.map(p => p -> BuildOnce.fingerprint(s, Seq(p)))
+    prints.foreach { case (p, fp) =>
+      if (lastRead.put(p, fp) != fp) s.catalog.refreshByPath(p)
+    }
+    // keyed by every path's listing, as BuildOnce.fingerprint(s, paths)
+    val sch = schemaCache.computeIfAbsent(prints.map(_._2).mkString("\n"),
+      _ => s.read.parquet(paths: _*).schema)
+    s.read.schema(sch).parquet(paths: _*)
   }
   def region(s: SparkSession, dir: String): DataFrame    = parquet(s, s"$dir/region.parquet")
   def nation(s: SparkSession, dir: String): DataFrame    = parquet(s, s"$dir/nation.parquet")

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Deterministic-arithmetic helpers for oracle parity.
   *
@@ -14,7 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object Det {
   /** Per-row conversion to integer cents; safe to SUM exactly. */
-  def cents(c: Column): Column = round(c * lit(100)).cast("long")
+  def cents(c: Column): Column = round(c * lit(100)).cast(LongType)
 
   /** Exact money sum in cents (bigint). */
   def sumCents(c: Column): Column = sum(cents(c))
@@ -46,5 +47,5 @@ object Det {
     * sites do. Never feed e6 an unguarded ratio: a NaN row would
     * surface as 0 here and blow up the oracle there.
     */
-  def e6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)).cast("long")
+  def e6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)).cast(LongType)
 }

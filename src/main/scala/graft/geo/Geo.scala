@@ -2,6 +2,7 @@ package graft.geo
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 import graft.Tables
 import graft.sources.LocalWriteFileSystem
 
@@ -78,16 +79,16 @@ object Geo {
   def parseLat(key: Column): Column = {
     val hemi = regexp_extract(key, TilePattern, 1)
     val deg  = regexp_extract(key, TilePattern, 2)
-    when(hemi === "", lit(null).cast("int"))
-      .otherwise(when(hemi === "N", deg.cast("int")).otherwise(-deg.cast("int")))
+    when(hemi === "", lit(null).cast(IntegerType))
+      .otherwise(when(hemi === "N", deg.cast(IntegerType)).otherwise(-deg.cast(IntegerType)))
   }
 
   /** Parse a tile key back to signed lon (null if no match). */
   def parseLon(key: Column): Column = {
     val hemi = regexp_extract(key, TilePattern, 3)
     val deg  = regexp_extract(key, TilePattern, 4)
-    when(hemi === "", lit(null).cast("int"))
-      .otherwise(when(hemi === "E", deg.cast("int")).otherwise(-deg.cast("int")))
+    when(hemi === "", lit(null).cast(IntegerType))
+      .otherwise(when(hemi === "E", deg.cast(IntegerType)).otherwise(-deg.cast(IntegerType)))
   }
 
   // --- region sets (main.rs:56-88) -----------------------------------
@@ -148,7 +149,7 @@ object Geo {
         (col("lon0") + col("x") * lit(step)).as("lon") +:
         (col("lat0") - col("y") * lit(step)).as("lat") +:
         pmod(col("tile_id") * lit(131) + col("x") * lit(17) + col("y") * lit(29), lit(8848))
-          .cast("int").as("elevation") +: keep.map(col): _*)
+          .cast(IntegerType).as("elevation") +: keep.map(col): _*)
   }
 
   /** Morton (Z-order) interleave of two 9-bit non-negative integers:
@@ -160,8 +161,8 @@ object Geo {
     */
   def morton9(a: Column, b: Column): Column =
     (0 until 9).map { i =>
-      shiftright(a, i).bitwiseAND(lit(1)).cast("long") * lit(1L << (2 * i)) +
-        shiftright(b, i).bitwiseAND(lit(1)).cast("long") * lit(1L << (2 * i + 1))
+      shiftright(a, i).bitwiseAND(lit(1)).cast(LongType) * lit(1L << (2 * i)) +
+        shiftright(b, i).bitwiseAND(lit(1)).cast(LongType) * lit(1L << (2 * i + 1))
     }.reduce(_ + _)
 
   /** Scala mirror of [[morton9]] for driver-side checks. */

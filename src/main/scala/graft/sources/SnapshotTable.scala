@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Tables
 
 /** Minimal TRANSACTIONAL table commit — the atomic-view piece the
   * reference's file-per-tile layout eventually forces (main.rs:272-296
@@ -88,9 +89,11 @@ object SnapshotTable {
     finally in.close()
   }
 
-  /** Snapshot-isolated read of a PINNED version (time travel). */
+  /** Snapshot-isolated read of a PINNED version (time travel). A
+    * version's files never change, so its schema is read once
+    * ([[graft.Tables.parquet]]) and later reads start no job. */
   def readVersion(s: SparkSession, table: String, version: Long): DataFrame =
-    s.read.parquet(manifest(table, version): _*)
+    Tables.parquet(s, manifest(table, version): _*)
 
   /** Snapshot-isolated read of the latest version at call time. */
   def read(s: SparkSession, table: String): DataFrame = {
@@ -542,7 +545,7 @@ object SnapshotTable {
       }
     }
     if (keep.isEmpty) readVersion(s, table, v).limit(0)
-    else s.read.parquet(keep: _*)
+    else Tables.parquet(s, keep: _*)
   }
 
   /** VACUUM: delete data files referenced by NO retained manifest.

@@ -53,21 +53,22 @@ final class Trace private () extends SparkListener {
 
 object Trace {
 
-  /** One timed run of a query. `gcSec` is process-wide collector time
-    * (all collectors, driver and executors share the JVM);
-    * `fixtureSec` is the [[FixtureTimer]] time inside the run; `plan`
-    * is the executed (post-AQE) plan of the count.
+  /** One timed run of a query. `constructJobs` is the number of jobs
+    * started while the frame was built, before its action; `gcSec` is
+    * process-wide collector time (all collectors, driver and executors
+    * share the JVM); `fixtureSec` is the [[FixtureTimer]] time inside
+    * the run; `plan` is the executed (post-AQE) plan of the count.
     */
   final case class Run(rows: Long, constructSec: Double, executeSec: Double,
-      gcSec: Double, fixtureSec: Double, jobs: Seq[String], stages: Seq[StageInfo],
-      spillDiskBytes: Long, spillMemBytes: Long, shuffleWriteBytes: Long,
-      plan: String) {
+      constructJobs: Int, gcSec: Double, fixtureSec: Double, jobs: Seq[String],
+      stages: Seq[StageInfo], spillDiskBytes: Long, spillMemBytes: Long,
+      shuffleWriteBytes: Long, plan: String) {
     def sec: Double = constructSec + executeSec
 
     /** The two runs' figures summed; jobs, stages and plan are `o`'s. */
     def +(o: Run): Run = Run(rows + o.rows, constructSec + o.constructSec,
-      executeSec + o.executeSec, gcSec + o.gcSec, fixtureSec + o.fixtureSec,
-      o.jobs, o.stages, spillDiskBytes + o.spillDiskBytes,
+      executeSec + o.executeSec, constructJobs + o.constructJobs, gcSec + o.gcSec,
+      fixtureSec + o.fixtureSec, o.jobs, o.stages, spillDiskBytes + o.spillDiskBytes,
       spillMemBytes + o.spillMemBytes, shuffleWriteBytes + o.shuffleWriteBytes, o.plan)
   }
 
@@ -75,13 +76,15 @@ object Trace {
     * is drained before the listener attaches and again before it
     * detaches.
     */
-  def during[T](s: SparkSession)(body: => T): (T, Trace) = {
+  def during[T](s: SparkSession)(body: => T): (T, Trace) = window(s)(_ => body)
+
+  private def window[T](s: SparkSession)(body: Trace => T): (T, Trace) = {
     val sc = s.sparkContext
     val t = new Trace
     drain(sc)
     sc.addSparkListener(t)
     try {
-      val r = body
+      val r = body(t)
       drain(sc)
       (r, t)
     } finally sc.removeSparkListener(t)
@@ -89,23 +92,27 @@ object Trace {
 
   /** Build `frame` and count it through `groupBy().count()` — the plan
     * `Dataset.count()` runs, kept in hand so its executed plan can be
-    * read — then release the run's caches. A failure propagates after
-    * the caches are released.
+    * read — then release the run's caches. The jobs the build started
+    * are counted after a bus drain between the two timers. A failure
+    * propagates after the caches are released.
     */
   def run(s: SparkSession)(frame: => DataFrame): Run = {
     val g0 = gcMs()
     val f0 = FixtureTimer.totalNanos
-    val ((rows, built, done, plan), t) = during(s) {
+    val ((rows, built, constructJobs, done, plan), t) = window(s) { t =>
       try {
         val t0 = System.nanoTime()
         val counted = frame.groupBy().count()
-        val tBuilt = System.nanoTime()
+        val built = (System.nanoTime() - t0) / 1e9
+        drain(s.sparkContext)
+        val constructJobs = t.jobQ.size
+        val t1 = System.nanoTime()
         val n = counted.collect().head.getLong(0)
-        (n, (tBuilt - t0) / 1e9, (System.nanoTime() - tBuilt) / 1e9,
+        (n, built, constructJobs, (System.nanoTime() - t1) / 1e9,
           counted.queryExecution.executedPlan.toString)
       } finally Caches.clear()
     }
-    Run(rows, built, done, (gcMs() - g0) / 1e3,
+    Run(rows, built, done, constructJobs, (gcMs() - g0) / 1e3,
       (FixtureTimer.totalNanos - f0) / 1e9, t.jobs, t.stages,
       t.spillDisk.get, t.spillMem.get, t.shufWrite.get, plan)
   }

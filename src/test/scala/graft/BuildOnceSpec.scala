@@ -132,4 +132,20 @@ class BuildOnceSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/part.parquet")
     assert(Tables.part(spark, dir).columns.toSeq == part.columns.toSeq :+ "p_extra")
   }
+
+  test("a cached frame over a table rewritten with the same schema and row count is not served") {
+    val dir = scratchDir("graft_bo_cached")
+    val t = s"$dir/t.parquet"
+    spark.range(10).withColumn("v", lit("old")).coalesce(1).write.parquet(t)
+    try {
+      val cached = Caches.track(Tables.parquet(spark, t))
+      assert(cached.filter("v = 'old'").count() == 10)
+      // rewritten by another writer: Spark's own overwrite would
+      // refresh the path's caches itself
+      spark.range(10).withColumn("v", lit("new")).coalesce(1).write.parquet(s"$dir/next")
+      graft.geo.Fixtures.deleteRecursively(new java.io.File(t))
+      Files.move(Paths.get(dir, "next"), Paths.get(t))
+      assert(rows(Tables.parquet(spark, t).select("v").distinct()) == Seq(Seq("new")))
+    } finally Caches.clear()
+  }
 }

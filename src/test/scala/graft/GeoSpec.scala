@@ -218,16 +218,30 @@ class GeoSpec extends SparkSpec {
 
   test("Cli.run writes a tiled parquet dataset filtered to the set") {
     val out = scratchDir("graft_cli")
+    Tables.part(spark, Sf) // the part schema is read outside the counted window
     val persisted = spark.sparkContext.getPersistentRDDs.size
-    val n = Cli.run(spark, Sf, out, "europe")
-    // the grid's cache is released, not left to pile up in the session
+    val (n, jobs) = withJobCount(Cli.run(spark, Sf, out, "europe"))
+    // the write counts its own rows: no cache, no second pass
+    assert(jobs == 1)
     assert(spark.sparkContext.getPersistentRDDs.size == persisted)
     val t = Geo.tiles(spark, Sf)
     val expectedTiles = t.filter(Geo.inEurope(col("lat0"), col("lon0"))).count()
     assert(n == expectedTiles * 64)
     val back = spark.read.parquet(out)
+    assert(n == back.count())
     assert(back.columns.sorted.toSeq == Seq("elevation", "lat", "lon", "tile_key"))
     intercept[IllegalArgumentException](Cli.run(spark, Sf, out, "atlantis"))
+  }
+
+  test("Cli.run over a set with no tiles returns 0 and writes only _SUCCESS") {
+    // one tile at (-53, -107): in no set but world
+    val in = scratchDir("graft_cli_empty_in")
+    spark.range(1, 2).toDF("p_partkey").write.parquet(s"$in/part.parquet")
+    for (set <- Seq("netherlands", "france", "europe")) {
+      val out = scratchDir("graft_cli_empty")
+      assert(Cli.run(spark, in, out, set) == 0, set)
+      assert(new java.io.File(out).list().toSet == Set("_SUCCESS", "._SUCCESS.crc"), set)
+    }
   }
 
   test("g7: raster bytes decode to the formula values; malformed payloads → null") {

@@ -16,8 +16,15 @@ class TraceSpec extends SparkSpec {
     assert(run.shuffleWriteBytes > 0)
     assert(run.plan.contains("Exchange") && run.plan.contains("isFinalPlan=true"))
     assert(run.constructSec >= 0 && run.executeSec > 0 && run.sec == run.constructSec + run.executeSec)
+    assert(run.constructJobs == 0)
     assert(cached.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
     val twice = run + run
     assert(twice.rows == 1000 && twice.shuffleWriteBytes == 2 * run.shuffleWriteBytes)
+  }
+
+  test("a job started while the frame is built is a construction job") {
+    val run = Trace.run(spark)(spark.range(spark.range(7).collect().length).toDF("id"))
+    assert(run.rows == 7 && run.constructJobs == 1 && run.jobs.size > 1)
+    assert((run + run).constructJobs == 2)
   }
 }

@@ -8,9 +8,9 @@ import graft.{Caches, Session, SparkEntry}
 
 /** Dev profiling main (not part of the API): runs one SparkEntry query
   * `runs` times (default 1) in a `graft.Session` — the benched session —
-  * and prints, for each run, the construct/execute split, then for the
-  * LAST run (JIT/codegen-warm when runs > 1, the view comparable to a
-  * bench median):
+  * and prints, for each run, the construct/execute split and the jobs
+  * started during construction, then for the LAST run (JIT/codegen-warm
+  * when runs > 1, the view comparable to a bench median):
   *  - the per-stage table: wall, tasks, CPU, input, shuffle read/write
   *    and memory/disk spill, slowest first — locates an I/O-bound stage
   *    that wall-clock timing cannot separate from CPU;
@@ -68,7 +68,8 @@ object Probe {
     val last = (1 to runs).map { r =>
       val run = Trace.run(spark)(query(spark, dir))
       println(f"[probe] $name run $r/$runs rows=${run.rows} wall=${run.sec}%.2f s " +
-        f"(construct=${run.constructSec}%.2f s, execute=${run.executeSec}%.2f s)")
+        f"(construct=${run.constructSec}%.2f s, execute=${run.executeSec}%.2f s) " +
+        s"construct_jobs=${run.constructJobs}")
       run
     }.last
 
