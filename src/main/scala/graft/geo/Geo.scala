@@ -2,6 +2,7 @@ package graft.geo
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.RasterExprs
 import org.apache.spark.sql.types.{IntegerType, LongType}
 import graft.Tables
 import graft.sources.LocalWriteFileSystem
@@ -17,15 +18,22 @@ import graft.sources.LocalWriteFileSystem
   * No live GeoTIFF exists in this environment, so the tile universe
   * is derived deterministically from the synthetic star schema
   * (SURVEY.md §3): both Spark and the DuckDB oracle compute identical
-  * inputs from `part.p_partkey`. Every transform here is a pure
-  * `Column` expression — whole-stage-codegen'd, pushdown-friendly,
-  * no UDFs — and the grid expansion is a generator (`explode`) whose
-  * parallelism scales with tiles × rows, exactly what a 1000-executor
-  * cluster needs for the real 400 GiB `world` set.
+  * inputs from `part.p_partkey`. Every transform here is a `Column`
+  * expression — whole-stage-codegen'd, pushdown-friendly, no UDFs.
+  * All but one are built from Spark's functions; the tile-key parse
+  * (`parseLat`/`parseLon`) is one native codegen'd expression,
+  * `org.apache.spark.sql.graft.TileDegree`, because it runs once per
+  * pixel above an `explode`. The grid expansion is a generator
+  * (`explode`) whose parallelism scales with tiles × rows, exactly
+  * what a 1000-executor cluster needs for the real 400 GiB `world`
+  * set.
   */
 object Geo {
 
-  /** AW3D30 tile-name pattern, as in main.rs:298. */
+  /** AW3D30 tile-name pattern, as in main.rs:298. `parseLat`/`parseLon`
+    * match the same pattern by a byte scan (`TileDegree`); ExprSpec
+    * checks the scan against this regex.
+    */
   val TilePattern = "ALPSMLC30_([NS])(\\d{3})([EW])(\\d{3})_DSM"
 
   // --- deterministic tile universe (SURVEY.md §3) --------------------
@@ -75,21 +83,14 @@ object Geo {
       when(lat >= 0, "N").otherwise("S"), abs(lat),
       when(lon >= 0, "E").otherwise("W"), abs(lon))
 
-  /** Parse a tile key back to signed lat (null if no match). */
-  def parseLat(key: Column): Column = {
-    val hemi = regexp_extract(key, TilePattern, 1)
-    val deg  = regexp_extract(key, TilePattern, 2)
-    when(hemi === "", lit(null).cast(IntegerType))
-      .otherwise(when(hemi === "N", deg.cast(IntegerType)).otherwise(-deg.cast(IntegerType)))
-  }
+  /** Parse a tile key back to signed lat (null if no match): the
+    * leftmost `TilePattern` match anywhere in the string, found by one
+    * byte scan (`RasterExprs.tile_lat`).
+    */
+  def parseLat(key: Column): Column = RasterExprs.tile_lat(key)
 
-  /** Parse a tile key back to signed lon (null if no match). */
-  def parseLon(key: Column): Column = {
-    val hemi = regexp_extract(key, TilePattern, 3)
-    val deg  = regexp_extract(key, TilePattern, 4)
-    when(hemi === "", lit(null).cast(IntegerType))
-      .otherwise(when(hemi === "E", deg.cast(IntegerType)).otherwise(-deg.cast(IntegerType)))
-  }
+  /** Parse a tile key back to signed lon (null if no match), as [[parseLat]]. */
+  def parseLon(key: Column): Column = RasterExprs.tile_lon(key)
 
   // --- region sets (main.rs:56-88) -----------------------------------
   /** N50..=53 × E3..=7 */

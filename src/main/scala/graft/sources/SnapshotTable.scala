@@ -127,7 +127,7 @@ object SnapshotTable {
         val aggs = statsCols.flatMap(c =>
           Seq(min(col(c).cast("long")).as(s"mn_$c"),
             max(col(c).cast("long")).as(s"mx_$c")))
-        s.read.parquet(newFiles: _*)
+        Tables.parquet(s, newFiles: _*)
           .groupBy(col("_metadata.file_path").as("fp"))
           .agg(aggs.head, aggs.tail: _*)
           .collect().toSeq.flatMap { r =>
@@ -340,7 +340,7 @@ object SnapshotTable {
         val base = latestVersion(table)
         require(base >= 0, s"empty table $table: commit a base before merging")
         val files = manifest(table, base)
-        val cur = s.read.parquet(files: _*)
+        val cur = Tables.parquet(s, files: _*)
         val srcKeys = src.select(keyCols.map(col): _*).distinct()
         val affected = cur
           .select(keyCols.map(col) :+ col("_metadata.file_path").as("_file"): _*)
@@ -361,7 +361,7 @@ object SnapshotTable {
             (affected -- files.toSet).take(3).mkString(", "))
         val (rewrite, carry) = files.partition(affected.contains)
         val touched =
-          if (rewrite.nonEmpty) s.read.parquet(rewrite: _*) else cur.limit(0)
+          if (rewrite.nonEmpty) Tables.parquet(s, rewrite: _*) else cur.limit(0)
         // project in the TABLE's column order, not keys-first: a later
         // manifest diff (changeStep) compares rewritten files against
         // carried ones positionally, so a merge must never reorder the
@@ -449,8 +449,8 @@ object SnapshotTable {
     // (nothing toggled) falls back to the caller's schema frame
     val toggled = addedF ++ removedF
     def rd(fs: Seq[String]) =
-      if (fs.nonEmpty) s.read.parquet(fs: _*)
-      else if (toggled.nonEmpty) s.read.parquet(toggled: _*).limit(0)
+      if (fs.nonEmpty) Tables.parquet(s, fs: _*)
+      else if (toggled.nonEmpty) Tables.parquet(s, toggled: _*).limit(0)
       else fallback
     frameDiffChanges(rd(addedF), rd(removedF), keyCols, cache, commitV)
   }

@@ -2,10 +2,11 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 object RasterExprs {
   /** Decode a GRFT raster payload (see [[RasterDecode]]). */
@@ -15,6 +16,14 @@ object RasterExprs {
   /** Decode a baseline-TIFF raster payload (see [[TiffDecode]]). */
   def tiff_decode(content: Column): Column =
     ExpressionUtils.column(TiffDecode(ExpressionUtils.expression(content)))
+
+  /** Signed latitude of the first AW3D30 tile key in a string (see [[TileDegree]]). */
+  def tile_lat(key: Column): Column =
+    ExpressionUtils.column(TileDegree(ExpressionUtils.expression(key), lon = false))
+
+  /** Signed longitude of the first AW3D30 tile key in a string (see [[TileDegree]]). */
+  def tile_lon(key: Column): Column =
+    ExpressionUtils.column(TileDegree(ExpressionUtils.expression(key), lon = true))
 
   /** D8 flow accumulation over a row-major tile array (see [[FlowAccum]]). */
   def flow_accum(elev: Column, n: Column): Column =
@@ -911,5 +920,80 @@ object TiffLzw {
       } else return null // code beyond the table
     }
     null // unreachable
+  }
+}
+
+/** Signed degree of the leftmost AW3D30 tile key in a string: the
+  * latitude (`lon = false`) or longitude of the first 22-byte window
+  * `ALPSMLC30_[NS]ddd[EW]ddd_DSM` (main.rs:298), `S`/`W` negative;
+  * null when no window matches. Exactly what `regexp_extract` with
+  * `Geo.TilePattern` followed by a cast returns: the pattern is ASCII
+  * and every byte of a multibyte UTF-8 character is >= 0x80, so the
+  * leftmost byte window is the leftmost char match, and `d` is ASCII
+  * `0-9` as Java's `\d` is. One scan of the string's bytes with no
+  * allocation; the generated code calls the same scan, so a parse
+  * placed above a pixel `explode` stays inside whole-stage codegen.
+  */
+case class TileDegree(child: Expression, lon: Boolean)
+    extends UnaryExpression with ExpectsInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = IntegerType
+  // a string without a tile key parses to null
+  override def nullable: Boolean = true
+  override def prettyName: String = if (lon) "tile_lon" else "tile_lat"
+
+  override def nullSafeEval(in: Any): Any = {
+    val d = TileDegree.parse(in.asInstanceOf[UTF8String], lon)
+    if (d == TileDegree.NoMatch) null else d
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, in => s"""
+      |${ev.value} = org.apache.spark.sql.graft.TileDegree.parse($in, $lon);
+      |${ev.isNull} = ${ev.value} == ${TileDegree.NoMatch};
+    """.stripMargin)
+
+  override protected def withNewChildInternal(c: Expression): TileDegree = copy(child = c)
+}
+
+/** The key scan shared by [[TileDegree]]'s interpreted and generated paths. */
+object TileDegree {
+  /** `parse`'s result for a string with no tile key. */
+  final val NoMatch = Int.MinValue
+
+  private val Prefix = "ALPSMLC30_".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+  private final val KeyLen = 22
+
+  def parse(s: UTF8String, lon: Boolean): Int = {
+    val last = s.numBytes - KeyLen
+    var i = 0
+    while (i <= last) {
+      if (keyAt(s, i)) {
+        val at = i + (if (lon) 14 else 10)
+        val deg = (s.getByte(at + 1) - '0') * 100 + (s.getByte(at + 2) - '0') * 10 +
+          (s.getByte(at + 3) - '0')
+        val h = s.getByte(at)
+        return if (h == 'N' || h == 'E') deg else -deg
+      }
+      i += 1
+    }
+    NoMatch
+  }
+
+  private def digit(b: Byte): Boolean = b >= '0' && b <= '9'
+
+  /** Whether the pattern matches the 22 bytes starting at `i`. */
+  private def keyAt(s: UTF8String, i: Int): Boolean = {
+    var j = 0
+    while (j < Prefix.length) {
+      if (s.getByte(i + j) != Prefix(j)) return false
+      j += 1
+    }
+    val ns = s.getByte(i + 10); val ew = s.getByte(i + 14)
+    (ns == 'N' || ns == 'S') && digit(s.getByte(i + 11)) && digit(s.getByte(i + 12)) &&
+      digit(s.getByte(i + 13)) && (ew == 'E' || ew == 'W') && digit(s.getByte(i + 15)) &&
+      digit(s.getByte(i + 16)) && digit(s.getByte(i + 17)) && s.getByte(i + 18) == '_' &&
+      s.getByte(i + 19) == 'D' && s.getByte(i + 20) == 'S' && s.getByte(i + 21) == 'M'
   }
 }

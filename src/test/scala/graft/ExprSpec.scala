@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ArrayExprs
+import org.apache.spark.sql.types.IntegerType
+import graft.geo.Geo
 import graft.operators.Dedup
 
 /** Native expressions must be bit-identical to their HOF formulations
@@ -401,6 +404,80 @@ class ExprSpec extends SparkSpec {
     val got = df.collect()
     assert(got(0).getDouble(0) == 11.0)
     assert(got(1).isNullAt(0))
+  }
+
+  /** The `regexp_extract` formula `Geo.parseLat` (`hemi` group 1,
+    * `pos` "N") and `Geo.parseLon` (group 3, "E") were built from: the
+    * reference the native TileDegree scan must match.
+    */
+  private def regexDegree(key: Column, hemiGroup: Int, pos: String): Column = {
+    val hemi = regexp_extract(key, Geo.TilePattern, hemiGroup)
+    val deg  = regexp_extract(key, Geo.TilePattern, hemiGroup + 1)
+    when(hemi === "", lit(null).cast(IntegerType))
+      .otherwise(when(hemi === pos, deg.cast(IntegerType)).otherwise(-deg.cast(IntegerType)))
+  }
+
+  test("TileDegree == the regexp_extract tile-key formula, codegen'd and interpreted") {
+    val rnd = new scala.util.Random(11)
+    def pick(s: String): Char = s(rnd.nextInt(s.length))
+    // a key-shaped string whose letter and digit slots are sometimes
+    // wrong: bad hemispheres, a non-ASCII digit, a letter
+    def shaped(): String = {
+      def deg() = Seq.fill(3)(if (rnd.nextInt(12) == 0) pick("\u0663a\u00e9") else pick("0123456789")).mkString
+      def hemi(ok: String) = if (rnd.nextInt(12) == 0) pick("XNSEWn") else pick(ok)
+      s"ALPSMLC30_${hemi("NS")}${deg()}${hemi("EW")}${deg()}_DSM"
+    }
+    val tokens = Seq("ALPSMLC30_", "ALPSMLC30", "_DSM", "_DS", "N", "S", "E", "W", "X",
+      "0", "12", "345", "\u0663", "\u00e9\u00e9", "\u6771", "p/", ".tif", "_", " ")
+    def noise(): String = Seq.fill(rnd.nextInt(5))(tokens(rnd.nextInt(tokens.size))).mkString
+    def gen(): String = rnd.nextInt(5) match {
+      case 0 => shaped()
+      case 1 => noise() + shaped() + noise()
+      case 2 => val k = shaped(); noise() + k.take(rnd.nextInt(k.length)) + noise() // truncated
+      case 3 => noise() + shaped() + noise() + shaped()                               // two keys
+      case _ => Seq.fill(rnd.nextInt(12))(tokens(rnd.nextInt(tokens.size))).mkString
+    }
+    val fixed = Seq("p/ALPSMLC30_N000E000_DSM.tif", "ALPSMLC30_S014W077_DSM ALPSMLC30_N050E006_DSM",
+      "ALPSMLC30_ALPSMLC30_N001W002_DSM", "ALPSMLC30_N001W00", "ALPSMLC30_N001W002_DS",
+      "ALPSMLC30_X050E006_DSM", "ALPSMLC30_N050X006_DSM", "ALPSMLC30_N0\u06630E006_DSM",
+      "\u00e9\u6771/ALPSMLC30_S001E002_DSM", "", null)
+    val keys = (fixed ++ Seq.fill(200000)(gen())).map(Option(_))
+    // repartition keeps the projection out of ConvertToLocalRelation's
+    // eager (interpreted) fold
+    def compare(): (Long, Long) = {
+      val df = keys.toDF("key").repartition(4).select(col("key"),
+        Geo.parseLat(col("key")).as("lat"), Geo.parseLon(col("key")).as("lon"),
+        regexDegree(col("key"), 1, "N").as("ref_lat"), regexDegree(col("key"), 3, "E").as("ref_lon"))
+      val bad = df.filter(!(col("lat") <=> col("ref_lat")) || !(col("lon") <=> col("ref_lon")))
+      assert(bad.isEmpty, bad.take(5).mkString("; "))
+      (df.count(), df.filter(col("lat").isNotNull).count())
+    }
+    // whether a fresh parse (no exchange, so no adaptive plan) runs in
+    // a whole-stage codegen stage under the current settings
+    def codegen(): Boolean = spark.range(1)
+      .select(Geo.parseLat(concat(lit("ALPSMLC30_N00"), col("id").cast("string"), lit("E002_DSM"))))
+      .queryExecution.executedPlan
+      .exists(_.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec])
+    assert(codegen())
+    val (n, hits) = compare()
+    assert(n == keys.size && hits > n / 4 && hits < n, s"$hits of $n strings hold a key")
+    info(s"$hits of $n strings hold a key")
+    val interpreted = Seq("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")
+    val prev = interpreted.map { case (k, _) => k -> spark.conf.getOption(k) }
+    interpreted.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      assert(!codegen())
+      assert(compare() == ((n, hits)))
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    // spot values: leftmost key wins, a repeated prefix still matches
+    val spot = Seq("ALPSMLC30_S014W077_DSM ALPSMLC30_N050E006_DSM", "ALPSMLC30_ALPSMLC30_N001W002_DSM")
+      .toDF("key").select(Geo.parseLat(col("key")), Geo.parseLon(col("key")))
+      .as[(Int, Int)].collect().toSeq
+    assert(spot == Seq((-14, -77), (1, -2)))
   }
 
   test("flow_accum and watershed are SQL-callable through GraftExtensions") {

@@ -496,6 +496,57 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("g7 and the TIFF ingest parse tile keys in codegen, with no regex above the pixel explode") {
+    import org.apache.spark.sql.catalyst.expressions.RegExpExtract
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan}
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.graft.{RasterExprs, TileDegree}
+    import graft.geo.{Fixtures, Geo}
+    // the aw3d30 TIFF ETL shape: binaryFile -> tiff_decode -> explode,
+    // the tile origin parsed from the key once per pixel
+    val tiff = spark.read.format("binaryFile").option("pathGlobFilter", "*.tif")
+      .load(Fixtures.ensureTiffsDeflate(spark, Sf))
+      .select(regexp_extract(col("path"), Geo.TilePattern, 0).as("tile_key"),
+        RasterExprs.tiff_decode(col("content")).as("r"))
+      .select(col("tile_key"), col("r.width").as("w"), col("r.height").as("h"),
+        explode(col("r.points")).as("p"))
+      .select((Geo.parseLat(col("tile_key")) + lit(1) - col("p.y") / col("h")).as("lat"),
+        (Geo.parseLon(col("tile_key")) + col("p.x") / col("w")).as("lon"),
+        col("p.elevation").as("elevation"), col("tile_key"))
+      .repartition(col("tile_key"))
+    // each physical node, and whether it runs inside a codegen stage
+    def staged(p: SparkPlan, in: Boolean): Seq[(SparkPlan, Boolean)] = {
+      val here = p match {
+        case _: WholeStageCodegenExec => true
+        case _: InputAdapter => false
+        case _ => in
+      }
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case _ => p.children
+      }
+      (p, here) +: kids.flatMap(staged(_, here))
+    }
+    for ((name, df) <- Seq("g7_raster_ingest" -> SparkEntry.queries("g7_raster_ingest")(spark, Sf),
+        "tiff ingest" -> tiff)) {
+      val opt = df.queryExecution.optimizedPlan
+      def aboveGenerate(n: LogicalPlan) = n.children.exists(_.exists(_.isInstanceOf[Generate]))
+      val regex = opt.collect {
+        case n if aboveGenerate(n) && n.expressions.exists(_.exists(_.isInstanceOf[RegExpExtract])) => n
+      }
+      assert(regex.isEmpty, s"$name: regexp_extract above the explode:\n$opt")
+      // run the frame's own plan, so AQE's final stages are codegen'd
+      df.queryExecution.toRdd.count()
+      val parses = staged(df.queryExecution.executedPlan, in = false).filter { case (p, _) =>
+        p.expressions.exists(_.exists(_.isInstanceOf[TileDegree])) }
+      assert(parses.nonEmpty && parses.forall(_._2),
+        s"$name: tile-key parse outside whole-stage codegen:\n${df.queryExecution.executedPlan}")
+    }
+  }
+
   // --- suite-wide plan hygiene gate (r8 VERDICT #6) ------------------
 
   /** Hygiene findings for one frame: cartesian product, broadcast
