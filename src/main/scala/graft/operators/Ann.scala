@@ -522,7 +522,6 @@ object Ann {
     */
   def knnGraphDelta(s: SparkSession, dir: String, indexPath: String,
       deltaFilter: Column, k: Int = -1, nprobe: Int = -1): DataFrame = {
-    import s.implicits._
     val params =
       try s.read.parquet(s"$indexPath/params").head()
       catch {
@@ -538,8 +537,7 @@ object Ann {
     require(nprobe == -1 || nprobe == inprobe,
       s"knnGraphDelta nprobe=$nprobe conflicts with the persisted index (nprobe=$inprobe)")
     val (kk, np) = (ik, inprobe)
-    val cents: Array[Array[Float]] = s.read.parquet(s"$indexPath/centroids")
-      .orderBy("bucket").select("centroid").as[Seq[Float]].collect().map(_.toArray)
+    val cents = loadCentroids(s, indexPath)
     val base = Tables.parquet(s, s"$indexPath/corpus")
       .select(col("vec_id"), col("embedding"), col("nrm"), col("bucket"), col("probes"))
     val delta = graft.Caches.track(Tables.embeddings(s, dir).filter(deltaFilter)
@@ -696,9 +694,7 @@ object Ann {
     * invariance and structural identity asserted in AnnSpec.
     */
   def ivfIndexDelta(s: SparkSession, indexPath: String, delta: DataFrame): Unit = {
-    import s.implicits._
-    val cents: Array[Array[Float]] = s.read.parquet(s"$indexPath/centroids")
-      .orderBy("bucket").select("centroid").as[Seq[Float]].collect().map(_.toArray)
+    val cents = loadCentroids(s, indexPath)
     delta
       .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
       .withColumn("bucket", assignCluster(col("embedding"), cents))
@@ -715,8 +711,7 @@ object Ann {
   def ivfTopKIndexed(s: SparkSession, dir: String, indexPath: String,
       k: Int = K, nprobe: Int = 4): DataFrame = {
     import s.implicits._
-    val cents: Array[Array[Float]] = s.read.parquet(s"$indexPath/centroids")
-      .orderBy("bucket").select("centroid").as[Seq[Float]].collect().map(_.toArray)
+    val cents = loadCentroids(s, indexPath)
     val queries = Tables.embeddings(s, dir).filter(col("vec_id") < 20)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         norm(col("embedding")).as("q_nrm"),
@@ -911,16 +906,52 @@ object Ann {
       .write.mode("overwrite").parquet(s"$indexPath/codes")
   }
 
+  /** Most centroids a persisted index may hold: the adaptive nlist cap
+    * of [[knnJoin]] and [[buildKnnGraphIndex]] (the d9 coarseK
+    * centroid-matrix byte bound). */
+  private val MaxCentroids = 4096
+
+  /** Most codebook rows a persisted PQ index may hold: at most [[Dim]]
+    * subspaces of at most 256 codes (a code is one byte). */
+  private val MaxCodebookRows = Dim * 256
+
+  /** The centroid matrix a build persisted at `indexPath/centroids`,
+    * indexed by bucket id. The driver collects at most
+    * [[MaxCentroids]] + 1 rows, and the bucket ids must be exactly
+    * 0..n-1, each once: a duplicated or missing centroid would
+    * silently re-bucket every query. */
+  private def loadCentroids(s: SparkSession, indexPath: String): Array[Array[Float]] = {
+    import s.implicits._
+    val rows = Tables.parquet(s, s"$indexPath/centroids")
+      .select(col("bucket"), col("centroid")).limit(MaxCentroids + 1)
+      .as[(Int, Seq[Float])].collect().sortBy(_._1)
+    require(rows.length <= MaxCentroids,
+      s"index at $indexPath holds more than $MaxCentroids centroids")
+    require(rows.map(_._1).sameElements(rows.indices),
+      s"index at $indexPath: centroid bucket ids are not exactly " +
+        s"0..${rows.length - 1}, each once")
+    rows.map(_._2.toArray)
+  }
+
   /** Load the per-subspace codebooks written by buildPqIndex /
-    * buildIvfPqIndex, indexed [subspace][code].
+    * buildIvfPqIndex, indexed [subspace][code]. At most
+    * [[MaxCodebookRows]] + 1 rows are collected, and the (subspace,
+    * code) pairs must be exactly {0..m-1} × {0..ksub-1}, each once.
     */
   private def loadCodebooks(s: SparkSession, path: String): Array[Array[Array[Float]]] = {
     import s.implicits._
-    val loaded = s.read.parquet(path)
-      .select(col("subspace"), col("code"), col("centroid"))
+    val loaded = Tables.parquet(s, path)
+      .select(col("subspace"), col("code"), col("centroid")).limit(MaxCodebookRows + 1)
       .as[(Int, Int, Seq[Float])].collect()
-    val books = Array.ofDim[Array[Float]](
-      loaded.map(_._1).max + 1, loaded.map(_._2).max + 1)
+    require(loaded.nonEmpty && loaded.length <= MaxCodebookRows,
+      s"codebooks at $path hold ${loaded.length} rows, not 1..$MaxCodebookRows")
+    val (m, ksub) = (loaded.map(_._1).max + 1, loaded.map(_._2).max + 1)
+    val keys = loaded.map(r => (r._1, r._2)).sorted
+    require(m.toLong * ksub == keys.length &&
+        keys.sameElements(for (i <- 0 until m; j <- 0 until ksub) yield (i, j)),
+      s"codebooks at $path: (subspace, code) pairs are not exactly " +
+        s"0..${m - 1} × 0..${ksub - 1}, each once")
+    val books = Array.ofDim[Array[Float]](m, ksub)
     loaded.foreach { case (mi, j, c) => books(mi)(j) = c.toArray }
     books
   }
@@ -1080,8 +1111,7 @@ object Ann {
   def ivfPqTopKIndexed(s: SparkSession, dir: String, indexPath: String,
       k: Int = K, nprobe: Int = 4, rerank: Int = 4 * K): DataFrame = {
     import s.implicits._
-    val cents: Array[Array[Float]] = s.read.parquet(s"$indexPath/centroids")
-      .orderBy("bucket").select("centroid").as[Seq[Float]].collect().map(_.toArray)
+    val cents = loadCentroids(s, indexPath)
     val books = loadCodebooks(s, s"$indexPath/codebooks")
     val qs = Tables.embeddings(s, dir).filter(col("vec_id") < 20)
       .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))

@@ -86,6 +86,11 @@ object AvroContainer {
     * schema's types (long/int/string/boolean) — this is a fixture
     * writer, not a coercion layer. */
   def writeGeneric(f: File, schemaJson: String,
+      rows: Seq[Map[String, Any]]): Unit =
+    writeGeneric(new java.io.FileOutputStream(f), schemaJson, rows)
+
+  /** [[writeGeneric]] into a stream, which it closes. */
+  def writeGeneric(out: java.io.OutputStream, schemaJson: String,
       rows: Seq[Map[String, Any]]): Unit = {
     val sc = new Schema.Parser().parse(schemaJson)
     // resolve a nullable union to its non-null branch (Iceberg's
@@ -123,7 +128,7 @@ object AvroContainer {
     }
     val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](sc))
     try {
-      w.create(sc, f)
+      w.create(sc, out)
       rows.foreach(m => w.append(rec(sc, m)))
     } finally w.close()
   }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import Json.jesc
 
@@ -42,61 +42,31 @@ import Json.jesc
   * exporter must never race a foreign writer's log — multi-writer
   * commit arbitration against other engines is a catalog's job, out
   * of scope the same way it is for [[IcebergTable]]'s write side).
+  *
+  * Storage goes through [[LogStore]]: `out` is a local path or, with
+  * a URI scheme (`s3a://…`), lands on the Hadoop FileSystem
+  * registered for it. Every commit JSON and checkpoint is an
+  * EXCLUSIVE publish, so a reader sees a complete version or none and
+  * a second writer of the same version fails or skips instead of
+  * replacing it; `_last_checkpoint` is an atomic replace.
   */
 object DeltaExport {
 
-  /** Where an export lands: local java.nio (tmp-then-ATOMIC_MOVE is
-    * the commit point) or, when `out` carries a URI scheme
-    * (`s3a://…`), the Hadoop FileSystem registered for it — with
-    * [[S3HttpFileSystem]] bound, log and data publish over the wire
-    * via multipart upload, whose CompleteMultipartUpload IS the
-    * atomic commit point (no tmp-then-rename on an object store).
-    */
-  private sealed trait Sink {
-    def requireEmpty(): Unit
-    def copyData(srcAbs: java.nio.file.Path, relName: String): Unit
-    def publishLogAtomic(name: String, bytes: Array[Byte]): Unit
-  }
-
-  private final class LocalSink(outDir: java.nio.file.Path) extends Sink {
-    val log = outDir.resolve("_delta_log")
-    def requireEmpty(): Unit = {
-      Files.createDirectories(outDir)
-      require(Option(outDir.toFile.list()).forall(_.isEmpty),
-        s"export target $outDir is not empty — refusing to write a log " +
-          "beside existing content (foreign-writer commit arbitration is " +
-          "a catalog's job)")
-      Files.createDirectories(log)
-    }
-    def copyData(srcAbs: java.nio.file.Path, relName: String): Unit =
-      Files.copy(srcAbs, outDir.resolve(relName),
-        StandardCopyOption.COPY_ATTRIBUTES)
-    def publishLogAtomic(name: String, bytes: Array[Byte]): Unit = {
-      val tmp = log.resolve(s".$name.tmp")
-      Files.write(tmp, bytes)
-      Files.move(tmp, log.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-    }
-  }
-
-  private final class HadoopSink(s: SparkSession, out: String) extends Sink {
-    private val conf = s.sparkContext.hadoopConfiguration
-    private val outP = new org.apache.hadoop.fs.Path(out)
-    private val fs = outP.getFileSystem(conf)
-    def requireEmpty(): Unit =
-      require(!fs.exists(outP) || fs.listStatus(outP).isEmpty,
-        s"export target $out is not empty — refusing to write a log " +
-          "beside existing content")
-    def copyData(srcAbs: java.nio.file.Path, relName: String): Unit = {
-      val o = fs.create(new org.apache.hadoop.fs.Path(outP, relName), false)
-      try Files.copy(srcAbs, o) finally o.close()
-    }
-    def publishLogAtomic(name: String, bytes: Array[Byte]): Unit = {
-      // object-store writes are invisible until complete; writing the
-      // final key directly IS tmp-then-move
-      val o = fs.create(
-        new org.apache.hadoop.fs.Path(outP, s"_delta_log/$name"), false)
-      try o.write(bytes) finally o.close()
-    }
+  /** An `add` action's stats JSON: numRecords from the file's parquet
+    * FOOTER (an O(files) metadata read, no data scan), min/max from
+    * the snapshot's stats sidecars when the committing writer
+    * recorded them. */
+  private def addStats(s: SparkSession,
+      colStats: Map[String, Map[String, (Long, Long)]], f: String): String = {
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f),
+        s.sparkContext.hadoopConfiguration))
+    val n = try footer.getRecordCount finally footer.close()
+    val mm = colStats.getOrElse(f, Map.empty).toSeq.sortBy(_._1)
+    val mins = mm.map { case (c, (mn, _)) => s""""${jesc(c)}":$mn""" }
+    val maxs = mm.map { case (c, (_, mx)) => s""""${jesc(c)}":$mx""" }
+    s"""{"numRecords":$n,"minValues":{${mins.mkString(",")}},"maxValues":{${maxs.mkString(",")}}}"""
   }
 
   /** Export `version` (latest when -1) of the snapshot table at
@@ -109,38 +79,25 @@ object DeltaExport {
     require(v >= 0, s"empty snapshot table $table")
     val files = SnapshotTable.manifest(table, v)
     require(files.nonEmpty, s"version $v of $table lists no files")
-    val sink: Sink =
-      if (out.contains("://")) new HadoopSink(s, out)
-      else new LocalSink(Paths.get(out))
-    sink.requireEmpty()
+    val root = out.stripSuffix("/")
+    require(LogStore.list(root).isEmpty,
+      s"export target $out is not empty — refusing to write a log " +
+        "beside existing content (foreign-writer commit arbitration is " +
+        "a catalog's job)")
     // schemaString: Delta's format IS the Spark StructType JSON; the
     // files' parquet footers are the schema of record
     val schemaJson = s.read.parquet(files: _*).schema.json
-    // add.stats: numRecords from each file's parquet FOOTER (an
-    // O(files) metadata read — no data scan, so metadata-only export
-    // stays O(files)), min/max from the snapshot's stats sidecars
-    // when the committing writer recorded them
+    // add.stats ([[addStats]]) reads footers, not data, so
+    // metadata-only export stays O(files)
     val colStats = SnapshotTable.fileStats(table)
-    def statsJson(f: String): String = {
-      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f),
-          s.sparkContext.hadoopConfiguration))
-      val n = try footer.getRecordCount finally footer.close()
-      val mm = colStats.getOrElse(f, Map.empty)
-      val mins = mm.toSeq.sortBy(_._1)
-        .map { case (c, (mn, _)) => s""""${jesc(c)}":$mn""" }
-      val maxs = mm.toSeq.sortBy(_._1)
-        .map { case (c, (_, mx)) => s""""${jesc(c)}":$mx""" }
-      s"""{"numRecords":$n,"minValues":{${mins.mkString(",")}},"maxValues":{${maxs.mkString(",")}}}"""
-    }
+    def statsJson(f: String): String = addStats(s, colStats, f)
     val adds = files.zipWithIndex.map { case (f, i) =>
       val src = Paths.get(f)
       val size = Files.size(src)
       val path =
         if (copy) {
           val n = f"part-$i%05d-${src.getFileName}"
-          sink.copyData(src, n)
+          LogStore.copyIn(src, s"$root/$n")
           n
         } else src.toUri.toString
       s"""{"add":{"path":"${jesc(path)}","partitionValues":{},"size":$size,"modificationTime":${Files.getLastModifiedTime(src).toMillis},"dataChange":true,"stats":"${jesc(statsJson(f))}"}}"""
@@ -150,11 +107,12 @@ object DeltaExport {
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
       s"""{"metaData":{"id":"${java.util.UUID.nameUUIDFromBytes(
         s"graft-export:$table:$v".getBytes(StandardCharsets.UTF_8))}","format":{"provider":"parquet","options":{}},"schemaString":"${jesc(schemaJson)}","partitionColumns":[],"configuration":{},"createdTime":${System.currentTimeMillis()}}}""") ++ adds
-    // atomic publish: tmp-then-ATOMIC_MOVE locally, direct final-key
-    // multipart write remotely — either way a reader sees a complete
-    // version 0 or no table at all
-    sink.publishLogAtomic("00000000000000000000.json",
-      (lines.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
+    // exclusive publish: a reader sees a complete version 0 or no
+    // table at all, and a writer that lost the race fails loudly
+    if (!LogStore.publish(s"$root/_delta_log/00000000000000000000.json", exclusive = true)(
+        _.write((lines.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))))
+      throw new IllegalStateException(
+        s"export target $out gained a version 0 while this export ran")
     adds.size
   }
 
@@ -170,10 +128,10 @@ object DeltaExport {
     * TAILING is built in and idempotent: when `out` already holds a
     * previous exportLog of the SAME table, only versions past its
     * last commit are appended — so a scheduler can call this per
-    * epoch and crashes replay harmlessly. Each commit publishes
-    * tmp-then-exclusive-link (the SnapshotTable discipline: link(2)
-    * fails on an existing target, so a replayed version can never
-    * tear or double-publish). Data files keep their snapshot-relative
+    * epoch and crashes replay harmlessly. Each commit is an exclusive
+    * [[LogStore]] publish (the SnapshotTable discipline: an existing
+    * target is never replaced, so a replayed version can never tear
+    * or double-publish). Data files keep their snapshot-relative
     * `data/<uuid>/...` paths in copy mode (basenames are not unique
     * across commits; the uuid dir is), absolute URIs in
     * metadata-only mode. Returns the last exported version.
@@ -214,19 +172,7 @@ object DeltaExport {
         s"data file $abs outside table root $root")
       a.stripPrefix(root + "/")
     }
-    def statsJson(f: String): String = {
-      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f),
-          s.sparkContext.hadoopConfiguration))
-      val n = try footer.getRecordCount finally footer.close()
-      val mm = colStats.getOrElse(f, Map.empty)
-      val mins = mm.toSeq.sortBy(_._1)
-        .map { case (c, (mn, _)) => s""""${jesc(c)}":$mn""" }
-      val maxs = mm.toSeq.sortBy(_._1)
-        .map { case (c, (_, mx)) => s""""${jesc(c)}":$mx""" }
-      s"""{"numRecords":$n,"minValues":{${mins.mkString(",")}},"maxValues":{${maxs.mkString(",")}}}"""
-    }
+    def statsJson(f: String): String = addStats(s, colStats, f)
     (exported + 1 to latest).foreach { v =>
       val files = SnapshotTable.manifest(table, v)
       val prev: Set[String] =
@@ -235,13 +181,9 @@ object DeltaExport {
       val removed = (prev -- files.toSet).toSeq.sorted
       def pubPath(abs: String): String =
         if (!copy) Paths.get(abs).toUri.toString else relOf(abs)
-      added.foreach { f =>
-        if (copy) {
-          val dest = outDir.resolve(relOf(f))
-          Files.createDirectories(dest.getParent)
-          if (!Files.exists(dest))
-            Files.copy(Paths.get(f), dest, StandardCopyOption.COPY_ATTRIBUTES)
-        }
+      if (copy) added.foreach { f =>
+        val dest = outDir.resolve(relOf(f)).toString
+        if (!LogStore.exists(dest)) LogStore.copyIn(Paths.get(f), dest)
       }
       val head =
         if (v > 0) Seq(s"""{"commitInfo":{"operation":"WRITE","graftSourceTable":"${jesc(table)}","graftSourceVersion":$v}}""")
@@ -258,11 +200,8 @@ object DeltaExport {
           val src = Paths.get(f)
           s"""{"add":{"path":"${jesc(pubPath(f))}","partitionValues":{},"size":${Files.size(src)},"modificationTime":${Files.getLastModifiedTime(src).toMillis},"dataChange":true,"stats":"${jesc(statsJson(f))}"}}"""
         }
-      val tmp = log.resolve(f".$v%020d.json.${java.util.UUID.randomUUID()}.tmp")
-      Files.write(tmp, (lines.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
-      try Files.createLink(log.resolve(f"$v%020d.json"), tmp)
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      finally Files.deleteIfExists(tmp)
+      LogStore.publish(log.resolve(f"$v%020d.json").toString, exclusive = true)(
+        _.write((lines.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8)))
 
       // CHECKPOINT every `checkpointEvery` commits (r15 VERDICT
       // "what's missing" #2): without one, a foreign reader of a
@@ -272,11 +211,11 @@ object DeltaExport {
       // to. The checkpoint is the full replayed state at v (delta.io
       // PROTOCOL.md "Checkpoints"): protocol + metaData + one add per
       // live file, stats included so downstream skipping (j17)
-      // survives the log aging out. Published with the same
-      // tmp-then-exclusive-link discipline as commits — a replayed
-      // tail can never tear it — and `_last_checkpoint` updates via
-      // atomic replace AFTER the checkpoint lands (a reader follows
-      // the pointer only to a checkpoint that exists).
+      // survives the log aging out. Published exclusively like the
+      // commits — a replayed tail can never tear it — and
+      // `_last_checkpoint` updates via atomic replace AFTER the
+      // checkpoint lands (a reader follows the pointer only to a
+      // checkpoint that exists).
       if (checkpointEvery > 0 && v % checkpointEvery == checkpointEvery - 1) {
         import s.implicits._
         val live = SnapshotTable.manifest(table, v)
@@ -292,23 +231,20 @@ object DeltaExport {
               Files.size(src), Files.getLastModifiedTime(src).toMillis,
               dataChange = false, stats = Some(statsJson(f)))), None)
           }
-        val cpName = f"$v%020d.checkpoint.parquet"
-        if (!Files.exists(log.resolve(cpName))) {
+        val cp = log.resolve(f"$v%020d.checkpoint.parquet").toString
+        if (!LogStore.exists(cp)) {
           val scratch = log.resolve(f".w_cp_$v%020d-${java.util.UUID.randomUUID()}")
-          rows.toDS().coalesce(1).write.mode("overwrite").parquet(scratch.toString)
-          val part = Option(scratch.toFile.listFiles()).toSeq.flatten
-            .find(_.getName.endsWith(".parquet"))
-            .getOrElse(throw new IllegalStateException(
-              s"checkpoint write produced no parquet under $scratch"))
-          try Files.createLink(log.resolve(cpName), part.toPath)
-          catch { case _: java.nio.file.FileAlreadyExistsException => () }
-          graft.geo.Fixtures.deleteRecursively(scratch.toFile)
+          try {
+            rows.toDS().coalesce(1).write.mode("overwrite").parquet(scratch.toString)
+            val part = Option(scratch.toFile.listFiles()).toSeq.flatten
+              .find(_.getName.endsWith(".parquet"))
+              .getOrElse(throw new IllegalStateException(
+                s"checkpoint write produced no parquet under $scratch"))
+            LogStore.publish(cp, exclusive = true)(o => Files.copy(part.toPath, o))
+          } finally graft.geo.Fixtures.deleteRecursively(scratch.toFile)
         }
-        val ptrTmp = log.resolve(f"._last_checkpoint.${java.util.UUID.randomUUID()}.tmp")
-        Files.write(ptrTmp,
-          s"""{"version":$v,"size":${rows.size}}""".getBytes(StandardCharsets.UTF_8))
-        Files.move(ptrTmp, log.resolve("_last_checkpoint"),
-          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+        LogStore.publish(log.resolve("_last_checkpoint").toString, exclusive = false)(
+          _.write(s"""{"version":$v,"size":${rows.size}}""".getBytes(StandardCharsets.UTF_8)))
       }
     }
     latest

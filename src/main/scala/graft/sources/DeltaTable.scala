@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -44,6 +44,10 @@ import org.apache.spark.sql.functions._
   * free join to the scan planner; the replay algebra is unchanged).
   * Post-checkpoint JSON commits are small (one commit's actions) and
   * parse driver-side with Jackson, as Delta's own LogReplay does.
+  * Log IO goes through [[LogStore]]: a table path with a URI scheme
+  * (`s3a://…`, e.g. a [[DeltaExport]] published to object storage)
+  * resolves through the Hadoop FileSystem registered for it, and a
+  * plain path stays on java.nio.
   *
   * Write-side interop is deliberately OUT of scope: writing Delta
   * means implementing its commit protocol against concurrent foreign
@@ -81,38 +85,6 @@ object DeltaTable {
   private def logDir(table: String): String =
     s"${table.stripSuffix("/")}/_delta_log"
 
-  /** Scheme-aware log IO (r16): a table path with a URI scheme
-    * (`s3a://…` — e.g. a [[DeltaExport]] published to object storage)
-    * resolves through the Hadoop FileSystem registered for it; local
-    * paths keep java.nio. Log files are manifest-grade metadata, so
-    * driver-side reads here stay O(log), never O(data).
-    */
-  private object Lio {
-    def remote(p: String): Boolean = p.contains("://")
-    private def conf(): org.apache.hadoop.conf.Configuration =
-      SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-        .map(_.sparkContext.hadoopConfiguration)
-        .getOrElse(new org.apache.hadoop.conf.Configuration())
-    private def fs(p: String): org.apache.hadoop.fs.FileSystem =
-      new org.apache.hadoop.fs.Path(p).getFileSystem(conf())
-    def isDir(p: String): Boolean =
-      if (!remote(p)) Files.isDirectory(Paths.get(p))
-      else try fs(p).getFileStatus(new org.apache.hadoop.fs.Path(p)).isDirectory
-      catch { case _: java.io.FileNotFoundException => false }
-    def exists(p: String): Boolean =
-      if (!remote(p)) Files.exists(Paths.get(p))
-      else fs(p).exists(new org.apache.hadoop.fs.Path(p))
-    def readBytes(p: String): Array[Byte] =
-      if (!remote(p)) Files.readAllBytes(Paths.get(p))
-      else {
-        val in = fs(p).open(new org.apache.hadoop.fs.Path(p))
-        try in.readAllBytes() finally in.close()
-      }
-    def readLines(p: String): Seq[String] =
-      new String(readBytes(p), java.nio.charset.StandardCharsets.UTF_8)
-        .linesIterator.toVector
-  }
-
   private val CommitRe = """(\d{20})\.json""".r
   private val CheckpointRe = """(\d{20})\.checkpoint\.parquet""".r
   // multi-part checkpoints (the protocol's large-table shape, emitted
@@ -124,25 +96,6 @@ object DeltaTable {
   // UUID-named file whose action rows may DELEGATE the add/remove
   // state to sidecar parquet files under _delta_log/_sidecars/
   private val V2CpRe = """(\d{20})\.checkpoint\.([0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12})\.parquet""".r
-
-  private def ls(d: String): Seq[String] = {
-    if (Lio.remote(d)) {
-      if (!Lio.isDir(d)) return Nil
-      val f = new org.apache.hadoop.fs.Path(d)
-      return f.getFileSystem(SparkSession.getActiveSession
-          .orElse(SparkSession.getDefaultSession)
-          .map(_.sparkContext.hadoopConfiguration)
-          .getOrElse(new org.apache.hadoop.conf.Configuration()))
-        .listStatus(f).toSeq.map(_.getPath.getName).toVector
-    }
-    val dp = Paths.get(d)
-    if (!Files.isDirectory(dp)) return Nil
-    val s = Files.list(dp)
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.map(_.getFileName.toString).toVector
-    } finally s.close()
-  }
 
   /** version → the checkpoint's part files (single-part: one entry).
     * An INCOMPLETE multi-part checkpoint (listed parts ≠ declared
@@ -163,7 +116,7 @@ object DeltaTable {
   }
 
   def latestVersion(table: String): Long = {
-    val names = ls(logDir(table))
+    val names = LogStore.list(logDir(table))
     val vs = names.collect { case CommitRe(v) => v.toLong } ++
       checkpointsOf(names).keys
     if (vs.isEmpty) -1L else vs.max
@@ -173,8 +126,8 @@ object DeltaTable {
     * checkpoint base + JSON replay, last action per path wins. */
   def snapshot(s: SparkSession, table: String, version: Long = -1L): Snapshot = {
     val dir = logDir(table)
-    require(Lio.isDir(dir), s"not a delta table (no _delta_log): $table")
-    val names = ls(dir)
+    require(LogStore.exists(dir), s"not a delta table (no _delta_log): $table")
+    val names = LogStore.list(dir)
     val commits = names.collect { case n @ CommitRe(v) => v.toLong -> n }.toMap
     val checkpoints = checkpointsOf(names)
     val latest = (commits.keySet ++ checkpoints.keySet).maxOption.getOrElse(
@@ -187,10 +140,10 @@ object DeltaTable {
     // corruption and must fail loudly, not fall back silently
     val lastCp = s"$dir/_last_checkpoint"
     val pointed: Option[Long] =
-      if (!Lio.exists(lastCp)) None
+      if (!LogStore.exists(lastCp)) None
       else {
         val v = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(Lio.readBytes(lastCp)).get("version").asLong()
+          .readTree(LogStore.read(lastCp)).get("version").asLong()
         require(checkpoints.contains(v),
           s"_last_checkpoint points at checkpoint $v which is missing or " +
             s"an incomplete multi-part set at $table")
@@ -312,7 +265,7 @@ object DeltaTable {
           .where(col("sidecar").isNotNull).collect().map(_.getString(0))
         if (sidecars.nonEmpty) {
           val paths = sidecars.map(n => s"$dir/_sidecars/$n")
-          paths.foreach(p => require(Lio.exists(p),
+          paths.foreach(p => require(LogStore.exists(p),
             s"v2 checkpoint sidecar missing at $table: $p"))
           applyActions(s.read.parquet(paths: _*))
         }
@@ -330,7 +283,8 @@ object DeltaTable {
       val name = commits.getOrElse(v, throw new IllegalStateException(
         s"version $v unreadable at $table: commit json aged out and no " +
           s"checkpoint covers it (oldest checkpoint: ${checkpoints.keys.minOption})"))
-      Lio.readLines(s"$dir/$name").foreach { line =>
+      val text = new String(LogStore.read(s"$dir/$name"), StandardCharsets.UTF_8)
+      text.linesIterator.foreach { line =>
         if (line.nonEmpty) {
           val n = om.readTree(line)
           if (n.has("protocol")) {
@@ -555,7 +509,7 @@ object DeltaTable {
         // removes NOTHING — deleted rows resurrecting is exactly the
         // failure the reader-version gate exists to prevent.
         val rootUri =
-          if (Lio.remote(table)) table
+          if (LogStore.hasScheme(table)) table
           else new java.io.File(table).toURI.toString
         val key = (if (a.path.startsWith("/") || a.path.contains(":/")) a.path
           else rootUri.stripSuffix("/") + "/" + a.path)

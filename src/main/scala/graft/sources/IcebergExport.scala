@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import Json.jesc
 
@@ -32,11 +32,11 @@ import Json.jesc
   *    downstream Iceberg reader; `record_count` comes from parquet
   *    FOOTERS (O(files) metadata reads).
   *  - Commit pointer: `metadata/v1.metadata.json` + the Hadoop
-  *    catalog's `version-hint.text`, written tmp-then-ATOMIC_MOVE
-  *    (the hint is the commit point). A non-empty target refuses —
-  *    committing INTO an existing Iceberg table needs the catalog's
-  *    optimistic version race, a catalog's job (same scope rule as
-  *    [[DeltaExport]]).
+  *    catalog's `version-hint.text`, an atomic replace through
+  *    [[LogStore]] (the hint is the commit point). A non-empty target
+  *    refuses — committing INTO an existing Iceberg table needs the
+  *    catalog's optimistic version race, a catalog's job (same scope
+  *    rule as [[DeltaExport]]).
   */
 object IcebergExport {
 
@@ -144,10 +144,8 @@ object IcebergExport {
     val published: Seq[String] = files.zipWithIndex.map { case (f, i) =>
       if (!copy) f
       else {
-        val dataDir = outDir.resolve("data")
-        Files.createDirectories(dataDir)
-        val dest = dataDir.resolve(f"part-$i%05d-${Paths.get(f).getFileName}")
-        Files.copy(Paths.get(f), dest, StandardCopyOption.COPY_ATTRIBUTES)
+        val dest = outDir.resolve("data").resolve(f"part-$i%05d-${Paths.get(f).getFileName}")
+        LogStore.copyIn(Paths.get(f), dest.toString)
         dest.toString
       }
     }
@@ -184,28 +182,11 @@ object IcebergExport {
          |""".stripMargin
     Files.write(meta.resolve("v1.metadata.json"),
       mdJson.getBytes(StandardCharsets.UTF_8))
-    // the hint is the commit point: tmp-then-ATOMIC_MOVE, so a reader
-    // sees a complete table or no table
-    val tmp = meta.resolve(".version-hint.tmp")
-    Files.write(tmp, "1\n".getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, meta.resolve("version-hint.text"),
-      StandardCopyOption.ATOMIC_MOVE)
+    // the hint is the commit point, published last by atomic
+    // replace, so a reader sees a complete table or no table
+    LogStore.publish(meta.resolve("version-hint.text").toString, exclusive = false)(
+      _.write("1\n".getBytes(StandardCharsets.UTF_8)))
     entries.size
-  }
-
-  /** Publish a path idempotently: write a uniquely-named tmp sibling,
-    * then link(2) to the final name — an existing target wins and the
-    * tmp vanishes, so a crashed-and-replayed export can never tear or
-    * double-publish (the j23 discipline). */
-  private def publishIfAbsent(dest: java.nio.file.Path)(
-      write: java.io.File => Unit): Unit = {
-    if (Files.exists(dest)) return
-    val tmp = dest.resolveSibling(
-      s".${dest.getFileName}.${java.util.UUID.randomUUID()}.tmp")
-    write(tmp.toFile)
-    try Files.createLink(dest, tmp)
-    catch { case _: java.nio.file.FileAlreadyExistsException => () }
-    finally Files.deleteIfExists(tmp)
   }
 
   /** HISTORY-PRESERVING, TAILING export (r15 VERDICT "what's missing"
@@ -221,11 +202,12 @@ object IcebergExport {
     *
     * TAILING is idempotent: when `out` already tails the SAME source
     * (the `_graft_export_source` marker), only versions past the
-    * current `version-hint.text` are appended. Every artifact
-    * publishes via [[publishIfAbsent]] and the hint advances LAST by
-    * atomic replace — a reader follows the hint only onto complete
-    * metadata, and a crash replays harmlessly. Returns the last
-    * exported source version.
+    * current `version-hint.text` are appended. Every artifact is an
+    * exclusive [[LogStore]] publish (an existing one wins, so a
+    * crashed-and-replayed export can never tear or double-publish)
+    * and the hint advances LAST by atomic replace — a reader follows
+    * the hint only onto complete metadata, and a crash replays
+    * harmlessly. Returns the last exported source version.
     */
   def exportLog(s: SparkSession, table: String, out: String,
       copy: Boolean = true): Long = {
@@ -274,23 +256,21 @@ object IcebergExport {
       val prev: Set[String] =
         if (v == 0) Set.empty else SnapshotTable.manifest(table, v - 1).toSet
       if (copy) files.filterNot(prev).foreach { f =>
-        val dest = outDir.resolve("data").resolve(relOf(f))
-        Files.createDirectories(dest.getParent)
-        if (!Files.exists(dest))
-          Files.copy(Paths.get(f), dest, StandardCopyOption.COPY_ATTRIBUTES)
+        val dest = outDir.resolve("data").resolve(relOf(f)).toString
+        if (!LogStore.exists(dest)) LogStore.copyIn(Paths.get(f), dest)
       }
       val sid = v + 1 // snapshot ids are nonzero
       val schema = s.read.parquet(files: _*).schema
       val fieldIds = schema.fields.zipWithIndex
         .map { case (f, i) => f.name -> (i + 1) }.toMap
-      publishIfAbsent(meta.resolve(s"manifest-$sid.avro")) { f =>
-        AvroContainer.writeGeneric(f, ManifestSchema, files.map { src =>
+      LogStore.publish(s"$meta/manifest-$sid.avro", exclusive = true) { o =>
+        AvroContainer.writeGeneric(o, ManifestSchema, files.map { src =>
           entryFor(s, src, pubPath(src), colStats, fieldIds,
             status = if (prev(src)) 0 else 1, snapshotId = sid)
         })
       }
-      publishIfAbsent(meta.resolve(s"snap-$sid.avro")) { f =>
-        AvroContainer.writeGeneric(f, ManifestListSchema,
+      LogStore.publish(s"$meta/snap-$sid.avro", exclusive = true) { o =>
+        AvroContainer.writeGeneric(o, ManifestListSchema,
           Seq(Map[String, Any](
             "manifest_path" -> s"$outDir/metadata/manifest-$sid.avro",
             "manifest_length" -> Files.size(meta.resolve(s"manifest-$sid.avro")),
@@ -315,13 +295,11 @@ object IcebergExport {
            |"current-snapshot-id":$sid,
            |"snapshots":$snapsJson}
            |""".stripMargin
-      publishIfAbsent(meta.resolve(s"v$sid.metadata.json"))(f =>
-        Files.write(f.toPath, mdJson.getBytes(StandardCharsets.UTF_8)): Unit)
+      LogStore.publish(s"$meta/v$sid.metadata.json", exclusive = true)(
+        _.write(mdJson.getBytes(StandardCharsets.UTF_8)))
       // the hint advances LAST — the commit point for this version
-      val tmp = meta.resolve(s".version-hint.${java.util.UUID.randomUUID()}.tmp")
-      Files.write(tmp, s"$sid\n".getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, hintF,
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      LogStore.publish(hintF.toString, exclusive = false)(
+        _.write(s"$sid\n".getBytes(StandardCharsets.UTF_8)))
     }
     latest
   }

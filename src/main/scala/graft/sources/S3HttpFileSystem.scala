@@ -51,9 +51,9 @@ import org.apache.hadoop.util.Progressable
   * CompleteMultipartUpload above `fs.<scheme>.multipart.size`
   * (default 8 MiB, floored at S3's 5 MiB part minimum), all under
   * the same backoff contract — parts are in-memory buffers retried
-  * whole, and Complete is the atomic commit point, so the engine's
-  * sinks ([[DeltaExport]], [[SnapshotTable]] publishes) write final
-  * keys directly with no tmp-then-rename. rename is server-side
+  * whole, and Complete is the atomic commit point, so a scheme-path
+  * log publish ([[LogStore]], e.g. [[DeltaExport]]) writes its final
+  * key directly with no tmp-then-rename. rename is server-side
   * CopyObject + delete (recursive over "directories" for the
   * FileOutputCommitter contract); mkdirs writes a zero-byte `key/`
   * marker, the S3 empty-directory convention.

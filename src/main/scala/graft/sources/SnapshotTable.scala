@@ -16,14 +16,14 @@ import graft.Tables
   *  - A VERSION is a manifest file `_graft_log/<n>.manifest` listing
   *    exactly the data files visible at that version (absolute paths,
   *    one per line). Manifests are immutable once published.
-  *  - PUBLICATION is atomic: the manifest is written to a temp name
-  *    and renamed into place. The rename is the commit point — a
-  *    reader either resolves version n (and reads exactly its files)
-  *    or does not see it at all; it can never observe a half-written
-  *    file list. The publish primitive is link(2) — atomic AND
+  *  - PUBLICATION is atomic: the manifest is an exclusive
+  *    [[LogStore]] publish, the commit point — a reader either
+  *    resolves version n (and reads exactly its files) or does not
+  *    see it at all; it can never observe a half-written file list.
+  *    On local disk the primitive is link(2) — atomic AND
   *    create-exclusive; on an object store the same seam is a
-  *    conditional PUT (If-None-Match), which is why the commit path
-  *    is isolated here.
+  *    conditional PUT (If-None-Match), which is why the choice lives
+  *    in LogStore alone.
   *  - CONCURRENT writers race on the exclusive publish: link(2)
   *    fails with EEXIST if the target exists, so exactly ONE writer
   *    wins version n; the loser re-reads the latest version and
@@ -50,23 +50,17 @@ object SnapshotTable {
 
   private def logDir(table: String): Path = Paths.get(table, "_graft_log")
 
-  /** List a directory, CLOSING the stream (Files.list holds a
-    * directory handle — unclosed it leaks an fd per call in a
-    * long-lived driver).
-    */
-  private def ls(d: Path): Seq[Path] = {
-    val st = Files.list(d)
-    try st.iterator().asScala.toList finally st.close()
-  }
+  private def ls(d: Path): Seq[Path] = LogStore.list(d.toString).map(d.resolve)
 
   /** Latest committed version, or -1 for an empty table. */
-  def latestVersion(table: String): Long = {
-    val d = logDir(table)
-    if (!Files.isDirectory(d)) return -1L
-    ls(d).map(_.getFileName.toString)
+  def latestVersion(table: String): Long =
+    LogStore.list(logDir(table).toString)
       .collect { case n if n.endsWith(".manifest") => n.dropRight(9).toLong }
       .foldLeft(-1L)(math.max)
-  }
+
+  /** Publish `text` at `p` exclusively; false when `p` already exists. */
+  private def publish(p: Path, text: String): Boolean =
+    LogStore.publish(p.toString, exclusive = true)(_.write(text.getBytes("UTF-8")))
 
   /** The immutable file list of `version`. Lines starting with `#`
     * are manifest HEADERS (`#txn:` — the commit's idempotence record,
@@ -103,8 +97,8 @@ object SnapshotTable {
   }
 
   /** One optimistic commit: write `df`'s files into a fresh immutable
-    * data directory, then publish a manifest for version latest+1 via
-    * atomic rename; on losing the version race, re-read the latest
+    * data directory, then publish a manifest for version latest+1
+    * exclusively; on losing the version race, re-read the latest
     * and retry. `replace = true` publishes ONLY the new files (the
     * compaction/OPTIMIZE shape); `replace = false` appends them to
     * the previous version's list. Returns the committed version.
@@ -148,7 +142,6 @@ object SnapshotTable {
             }
           }
       }
-    Files.createDirectories(logDir(table))
     var attempt = 0
     while (attempt < maxRetries) {
       val prev = latestVersion(table)
@@ -156,33 +149,26 @@ object SnapshotTable {
       val files =
         if (replace || prev < 0) newFiles
         else manifest(table, prev) ++ newFiles
-      val tmp = logDir(table).resolve(s".${next}.manifest.${java.util.UUID.randomUUID()}.tmp")
       // the txn header rides INSIDE the manifest, so idempotence is
       // atomic with the commit point itself (Delta's txn-action
-      // pattern): a crash after the link(2) below but before any
+      // pattern): a crash after the publish below but before any
       // side-channel marker still leaves the txnId discoverable
       val header = txnId.map(t => s"#txn:$t\n").getOrElse("")
-      Files.write(tmp, (header + files.mkString("\n") + "\n").getBytes("UTF-8"))
-      try {
-        // the commit point: link(2) is the POSIX create-EXCLUSIVE
-        // publish — atomic, and fails with EEXIST if another writer
-        // already published this version (rename(2)/ATOMIC_MOVE would
-        // silently REPLACE the winner — the classic lost-commit bug);
-        // the loser retries against n+1
-        Files.createLink(logDir(table).resolve(s"$next.manifest"), tmp)
-        Files.deleteIfExists(tmp)
+      // the commit point: an EXCLUSIVE publish fails if another writer
+      // already published this version (a replacing rename would
+      // silently REPLACE the winner — the classic lost-commit bug);
+      // the loser retries against n+1
+      if (publish(logDir(table).resolve(s"$next.manifest"),
+          header + files.mkString("\n") + "\n")) {
         // sidecar AFTER the publish: a reader racing the write sees a
         // manifest without stats and stays conservative (keeps the
         // files) — skipping is an optimization, never a correctness
         // dependency
         if (stats.nonEmpty)
-          Files.write(logDir(table).resolve(s"$next.stats.tsv"),
-            (stats.mkString("\n") + "\n").getBytes("UTF-8"))
+          publish(logDir(table).resolve(s"$next.stats.tsv"), stats.mkString("\n") + "\n")
         return next
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          Files.deleteIfExists(tmp); attempt += 1
       }
+      attempt += 1
     }
     throw new IllegalStateException(
       s"lost the version race $maxRetries times at $table")
@@ -196,7 +182,7 @@ object SnapshotTable {
     * marker and returns the already-committed version WITHOUT writing.
     * The idempotence record is ATOMIC with the commit: the txnId is
     * written as a `#txn:` HEADER inside the manifest itself, so the
-    * link(2) that publishes the version IS the transaction record —
+    * publish of the version IS the transaction record —
     * there is no window where the epoch is committed but unrecorded.
     * The side-channel marker `_graft_log/txn/<txnId>` remains as a
     * fast path (O(1) lookup, and it survives vacuum where old
@@ -217,15 +203,6 @@ object SnapshotTable {
     require(!txnId.contains('/') && txnId.nonEmpty, s"flat txnId required: $txnId")
     val txnDir = logDir(table).resolve("txn")
     val marker = txnDir.resolve(txnId)
-    def writeMarker(m: Path, version: Long): Unit = {
-      Files.createDirectories(txnDir)
-      val tmp = txnDir.resolve(
-        s".${m.getFileName}.${java.util.UUID.randomUUID()}.tmp")
-      Files.write(tmp, s"$version\n".getBytes("UTF-8"))
-      try Files.createLink(m, tmp)
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      finally Files.deleteIfExists(tmp)
-    }
     if (Files.exists(marker))
       return new String(Files.readAllBytes(marker), "UTF-8").trim.toLong
     // marker missing ≠ epoch uncommitted: scan manifests' headers
@@ -240,7 +217,7 @@ object SnapshotTable {
     // a walk that reaches the boundary advances the watermark to the
     // latest version it started from — amortized O(new commits since
     // the last walk). Racy watermark updates are monotone-best-effort
-    // (ATOMIC_MOVE replace; a lost update only re-scans, never skips).
+    // (an atomic replace; a lost update only re-scans, never skips).
     val coveredFile = txnDir.resolve("_covered")
     val covered: Long =
       if (!Files.exists(coveredFile)) -1L
@@ -252,23 +229,18 @@ object SnapshotTable {
     while (replayed.isEmpty && v > covered &&
         Files.exists(logDir(table).resolve(s"$v.manifest"))) {
       manifestTxnId(table, v).foreach { t =>
-        writeMarker(txnDir.resolve(t), v)
+        publish(txnDir.resolve(t), s"$v\n")
         if (t == txnId) replayed = Some(v)
       }
       v -= 1L
     }
     if (replayed.nonEmpty) fullWalk = false
-    if (fullWalk && scanTop > covered) {
-      Files.createDirectories(txnDir)
-      val tmp = txnDir.resolve(s"._covered.${java.util.UUID.randomUUID()}.tmp")
-      Files.write(tmp, s"$scanTop\n".getBytes("UTF-8"))
-      Files.move(tmp, coveredFile,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
+    if (fullWalk && scanTop > covered)
+      LogStore.publish(coveredFile.toString, exclusive = false)(
+        _.write(s"$scanTop\n".getBytes("UTF-8")))
     val committed = replayed.getOrElse(
       commit(s, table, df, replace = replace, txnId = Some(txnId)))
-    writeMarker(marker, committed)
+    publish(marker, s"$committed\n")
     new String(Files.readAllBytes(marker), "UTF-8").trim.toLong
   }
 
@@ -377,16 +349,10 @@ object SnapshotTable {
         val added = ls(dataDir).map(_.toAbsolutePath.toString)
           .filter(_.endsWith(".parquet")).sorted
         val next = base + 1
-        val tmp = logDir(table).resolve(s".$next.manifest.${java.util.UUID.randomUUID()}.tmp")
-        Files.write(tmp, ((carry ++ added).mkString("\n") + "\n").getBytes("UTF-8"))
-        try {
-          Files.createLink(logDir(table).resolve(s"$next.manifest"), tmp)
-          Files.deleteIfExists(tmp)
+        if (publish(logDir(table).resolve(s"$next.manifest"),
+            (carry ++ added).mkString("\n") + "\n"))
           return MergeStats(next, carry, rewrite, added)
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            Files.deleteIfExists(tmp); attempt += 1
-        }
+        attempt += 1
       }
       throw new IllegalStateException(
         s"lost the merge race $maxRetries times at $table")
@@ -492,10 +458,8 @@ object SnapshotTable {
     * files, so later sidecars never contradict earlier ones; sidecars
     * of vacuumed versions may linger and are harmless (their files
     * are in no retained manifest, so no reader asks about them). */
-  def fileStats(table: String): Map[String, Map[String, (Long, Long)]] = {
-    val d = logDir(table)
-    if (!Files.isDirectory(d)) return Map.empty
-    ls(d).filter(_.getFileName.toString.endsWith(".stats.tsv"))
+  def fileStats(table: String): Map[String, Map[String, (Long, Long)]] =
+    ls(logDir(table)).filter(_.getFileName.toString.endsWith(".stats.tsv"))
       .flatMap(p => Files.readAllLines(p).asScala)
       .filter(_.nonEmpty)
       .map { line =>
@@ -506,7 +470,6 @@ object SnapshotTable {
       .map { case (fp, rows) =>
         fp -> rows.map { case (_, c, mn, mx) => c -> (mn, mx) }.toMap
       }
-  }
 
   /** FILE-STATS DATA SKIPPING — the fourth scan-reduction lever
     * beside static partition pruning (g11), dynamic partition pruning
@@ -569,7 +532,7 @@ object SnapshotTable {
     // _SUCCESS/crc markers with them), then the expired manifests;
     // txn markers stay — idempotence must survive vacuum
     val dataRoot = Paths.get(table, "data")
-    if (Files.isDirectory(dataRoot)) ls(dataRoot).foreach { d =>
+    ls(dataRoot).foreach { d =>
       if (Files.isDirectory(d)) {
         val (pq, aux) = ls(d).partition(_.toString.endsWith(".parquet"))
         val (dead, alive) = pq.partition(f => !live.contains(f.toAbsolutePath.toString))

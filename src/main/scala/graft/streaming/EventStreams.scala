@@ -700,7 +700,8 @@ object EventStreams {
     * the tailer dies or how many foreign commits land in between
     * (a range-grain txnId would double-append the overlap when the
     * range endpoint moved between crash and retry). The cursor write
-    * is atomic (temp + ATOMIC_MOVE). Returns the new cursor.
+    * is an atomic replace ([[graft.sources.LogStore]]). Returns the
+    * new cursor.
     *
     * Scale: each call's cost is |changed rows in (cursor, latest]|,
     * never a table rescan — the j12 incrementality contract carried
@@ -709,11 +710,10 @@ object EventStreams {
   def deltaTailOnce(s: org.apache.spark.sql.SparkSession,
       foreignTable: String, sinkTable: String, cursorFile: String,
       keyCols: Seq[String]): Long = {
-    import graft.sources.{DeltaTable, SnapshotTable}
-    val cp = java.nio.file.Paths.get(cursorFile)
+    import graft.sources.{DeltaTable, LogStore, SnapshotTable}
     val last =
-      if (java.nio.file.Files.exists(cp))
-        new String(java.nio.file.Files.readAllBytes(cp), "UTF-8").trim.toLong
+      if (LogStore.exists(cursorFile))
+        new String(LogStore.read(cursorFile), "UTF-8").trim.toLong
       else 0L // v0 is the bootstrap snapshot; the feed starts after it
     val latest = DeltaTable.latestVersion(foreignTable)
     require(latest >= 0, s"not a delta table: $foreignTable")
@@ -724,13 +724,7 @@ object EventStreams {
         DeltaTable.changes(s, foreignTable, v - 1, v, keyCols),
         txnId = s"delta-tail-v$v")
       graft.Caches.clear()
-      java.nio.file.Files.createDirectories(cp.toAbsolutePath.getParent)
-      val tmp = java.nio.file.Paths.get(
-        cursorFile + s".${java.util.UUID.randomUUID()}.tmp")
-      java.nio.file.Files.write(tmp, s"$v\n".getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp, cp,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      LogStore.publish(cursorFile, exclusive = false)(_.write(s"$v\n".getBytes("UTF-8")))
       cursor = v
     }
     cursor

@@ -309,6 +309,29 @@ class AnnSpec extends SparkSpec {
     assert(scan.contains("PartitionFilters"), scan)
   }
 
+  /** Copy the one parquet file under `dir` to a second name beside it. */
+  private def duplicatePart(dir: java.nio.file.Path): Unit = {
+    val part = dir.toFile.listFiles().map(_.toPath)
+      .filter(_.getFileName.toString.endsWith(".parquet")).head
+    java.nio.file.Files.copy(part, dir.resolve(s"dup-${part.getFileName}"))
+  }
+
+  test("a persisted IVF index holding its centroids twice fails loudly, naming the index") {
+    val idx = scratchDir("graft_ivf_dup")
+    Ann.buildIvfIndex(spark, Sf, idx)
+    duplicatePart(java.nio.file.Paths.get(idx, "centroids"))
+    val e = intercept[IllegalArgumentException](Ann.ivfTopKIndexed(spark, Sf, idx).collect())
+    assert(e.getMessage.contains(idx), e.getMessage)
+  }
+
+  test("a persisted PQ index holding its codebooks twice fails loudly, naming the index") {
+    val idx = scratchDir("graft_pq_dup")
+    Ann.buildPqIndex(spark, Sf, idx)
+    duplicatePart(java.nio.file.Paths.get(idx, "codebooks"))
+    val e = intercept[IllegalArgumentException](Ann.pqTopKIndexed(spark, Sf, idx).collect())
+    assert(e.getMessage.contains(idx), e.getMessage)
+  }
+
   test("PQ ANN: recall vs brute baseline, exact re-ranked scores, codes-only stage 1") {
     val idx = scratchDir("graft_pq")
     Ann.buildPqIndex(spark, Sf, idx)
