@@ -14,11 +14,37 @@ object Caches {
 
   private val live = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
-  /** Cache `df` and register it for the next `clear()`. */
+  /** The frames `track` newly cached on this thread inside the
+    * innermost [[releasing]] block. */
+  private val scoped = new ThreadLocal[List[DataFrame]]
+
+  /** Cache `df` and register it for the next `clear()`, and for the
+    * enclosing [[releasing]] block's release unless its plan was
+    * already cached (a caller's own cache of the same plan stays). */
   private[graft] def track(df: DataFrame): DataFrame = {
+    val fresh = df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     val cached = df.cache()
     live.add(cached)
+    val mine = scoped.get
+    if (fresh && mine != null) scoped.set(cached :: mine)
     cached
+  }
+
+  /** Run `body`, then unpersist (non-blocking) exactly the caches
+    * `track` registered on this thread inside it — never another
+    * query's or the caller's. An operator that caches per step of a
+    * loop releases each step's caches this way instead of `clear()`. */
+  private[graft] def releasing[T](body: => T): T = {
+    val outer = scoped.get
+    scoped.set(Nil)
+    try body
+    finally {
+      scoped.get.foreach { df =>
+        live.remove(df)
+        df.unpersist(blocking = false)
+      }
+      scoped.set(outer)
+    }
   }
 
   /** Globally sort `df` without executing its pipeline twice: a

@@ -255,7 +255,7 @@ object IngestQueries {
     */
   def deltaRead(s: SparkSession, dir: String): DataFrame = {
     val table = IngestFixtures.ensureDelta(s, dir)
-    val snap = graft.sources.DeltaTable.snapshot(s, table)
+    val version = graft.sources.DeltaTable.latestVersion(table)
     graft.sources.DeltaTable.read(s, table)
       .agg(
         count(lit(1)).as("n_rows"),
@@ -263,7 +263,7 @@ object IngestQueries {
         sum(col("n_chars")).as("sum_n_chars"),
         sum(fold32(col("text"))).as("text_fold"),
         countDistinct(col("_metadata.file_path")).as("n_files"))
-      .select(lit(snap.version).as("snapshot_version"), col("*"))
+      .select(lit(version).as("snapshot_version"), col("*"))
   }
 
   /** j11: ICEBERG v1 table read — the second open-table format,
@@ -358,7 +358,7 @@ object IngestQueries {
     */
   def deltaDvRead(s: SparkSession, dir: String): DataFrame = {
     val table = IngestFixtures.ensureDeltaDv(s, dir)
-    val snap = graft.sources.DeltaTable.snapshot(s, table)
+    val version = graft.sources.DeltaTable.latestVersion(table)
     graft.sources.DeltaTable.read(s, table)
       .agg(
         count(lit(1)).as("n_rows"),
@@ -366,7 +366,7 @@ object IngestQueries {
         sum(col("n_chars")).as("sum_n_chars"),
         sum(fold32(col("text"))).as("text_fold"),
         countDistinct(col("_metadata.file_path")).as("n_files"))
-      .select(lit(snap.version).as("snapshot_version"), col("*"))
+      .select(lit(version).as("snapshot_version"), col("*"))
   }
 
   /** j15: ICEBERG EQUALITY DELETES — the Flink-CDC upsert shape:
@@ -574,7 +574,7 @@ object IngestQueries {
     */
   def deltaV2cpRead(s: SparkSession, dir: String): DataFrame = {
     val table = IngestFixtures.ensureDeltaV2cp(s, dir)
-    val snap = graft.sources.DeltaTable.snapshot(s, table)
+    val version = graft.sources.DeltaTable.latestVersion(table)
     graft.sources.DeltaTable.read(s, table)
       .agg(
         count(lit(1)).as("n_rows"),
@@ -582,7 +582,7 @@ object IngestQueries {
         sum(col("n_chars")).as("sum_n_chars"),
         sum(fold32(col("text"))).as("text_fold"),
         countDistinct(col("_metadata.file_path")).as("n_files"))
-      .select(lit(snap.version).as("snapshot_version"), col("*"))
+      .select(lit(version).as("snapshot_version"), col("*"))
   }
 
   def orcIngest(s: SparkSession, dir: String): DataFrame =

@@ -86,7 +86,7 @@ object DeltaExport {
         "a catalog's job)")
     // schemaString: Delta's format IS the Spark StructType JSON; the
     // files' parquet footers are the schema of record
-    val schemaJson = s.read.parquet(files: _*).schema.json
+    val schemaJson = graft.Tables.parquet(s, files: _*).schema.json
     // add.stats ([[addStats]]) reads footers, not data, so
     // metadata-only export stays O(files)
     val colStats = SnapshotTable.fileStats(table)
@@ -192,7 +192,7 @@ object DeltaExport {
           """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
           s"""{"metaData":{"id":"${java.util.UUID.nameUUIDFromBytes(
             s"graft-export-log:$table".getBytes(StandardCharsets.UTF_8))}","format":{"provider":"parquet","options":{}},"schemaString":"${jesc(
-            s.read.parquet(files: _*).schema.json)}","partitionColumns":[],"configuration":{},"createdTime":${System.currentTimeMillis()}}}""")
+            graft.Tables.parquet(s, files: _*).schema.json)}","partitionColumns":[],"configuration":{},"createdTime":${System.currentTimeMillis()}}}""")
       val lines = head ++
         removed.map(f =>
           s"""{"remove":{"path":"${jesc(pubPath(f))}","deletionTimestamp":${System.currentTimeMillis()},"dataChange":true}}""") ++
@@ -224,7 +224,7 @@ object DeltaExport {
           CpRow(None, Some(CpMeta(
             java.util.UUID.nameUUIDFromBytes(
               s"graft-export-log:$table".getBytes(StandardCharsets.UTF_8)).toString,
-            s.read.parquet(live: _*).schema.json, Nil)), None, None) +:
+            graft.Tables.parquet(s, live: _*).schema.json, Nil)), None, None) +:
           live.sorted.map { f =>
             val src = Paths.get(f)
             CpRow(None, None, Some(CpAdd(pubPath(f), Map.empty,

@@ -1,5 +1,6 @@
 package graft.sources
 
+import com.fasterxml.jackson.databind.JsonNode
 import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -36,14 +37,20 @@ import org.apache.spark.sql.functions._
   * the oldest checkpoint fails at log resolution, exactly like
   * SnapshotTable's vacuumed versions.
   *
-  * Scale posture: the checkpoint is read DISTRIBUTED (one parquet
-  * scan); the active-path set it yields is driver-side
-  * manifest-grade metadata — the same accepted bound as
-  * SnapshotTable.merge's affected-file set and Delta's own planner
-  * (at 10^8 files the paths would stay a frame feeding an exchange-
-  * free join to the scan planner; the replay algebra is unchanged).
-  * Post-checkpoint JSON commits are small (one commit's actions) and
-  * parse driver-side with Jackson, as Delta's own LogReplay does.
+  * Scale posture: one action decoder serves the whole log. A
+  * checkpoint's parts, then its V2 sidecars, are each read as ONE
+  * distributed parquet scan whose rows `toJSON` renders as the very
+  * action lines a commit carries (a checkpoint row is an action in
+  * columnar form), so a checkpoint costs one collect job and every
+  * line — checkpoint or commit — applies through the same Jackson
+  * decoder, as Delta's own LogReplay parses commits. The active-path
+  * set it yields is driver-side manifest-grade metadata — the same
+  * accepted bound as SnapshotTable.merge's affected-file set and
+  * Delta's own planner (at 10^8 files the paths would stay a frame
+  * feeding an exchange-free join to the scan planner; the replay
+  * algebra is unchanged). Checkpoint and data footers are read once
+  * per file version ([[graft.Tables.parquet]]), so a warm read starts
+  * no schema-inference job.
   * Log IO goes through [[LogStore]]: a table path with a URI scheme
   * (`s3a://…`, e.g. a [[DeltaExport]] published to object storage)
   * resolves through the Hadoop FileSystem registered for it, and a
@@ -138,12 +145,12 @@ object DeltaTable {
     // _last_checkpoint pointer when present (protocol: readers use it
     // to skip the listing); a pointer to a missing file is table
     // corruption and must fail loudly, not fall back silently
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val lastCp = s"$dir/_last_checkpoint"
     val pointed: Option[Long] =
       if (!LogStore.exists(lastCp)) None
       else {
-        val v = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(LogStore.read(lastCp)).get("version").asLong()
+        val v = om.readTree(LogStore.read(lastCp)).get("version").asLong()
         require(checkpoints.contains(v),
           s"_last_checkpoint points at checkpoint $v which is missing or " +
             s"an incomplete multi-part set at $table")
@@ -152,184 +159,103 @@ object DeltaTable {
     val cpV = (pointed.toSeq ++ checkpoints.keys).filter(_ <= target)
       .maxOption
 
-    // base state from the checkpoint (distributed parquet scan;
-    // active-path set is driver-side manifest-grade metadata — the
-    // SnapshotTable.merge bound, stated in the object scaladoc)
+    // ONE action decoder for both log sources: a commit's JSON lines,
+    // and a checkpoint's rows rendered as the same lines by `toJSON`
+    // (a checkpoint row IS an action in columnar form, PROTOCOL.md
+    // "Checkpoints"; null structs print absent). An action key whose
+    // value is JSON null counts as absent.
     val active = scala.collection.mutable.LinkedHashMap[String, AddFile]()
     var minReader = 1
     var readerFeatures = Set.empty[String]
     var partitionColumns: Seq[String] = Nil
     var schemaJson: Option[String] = None
     var configuration = Map.empty[String, String]
-    cpV.foreach { v =>
-      // all parts of the version read as ONE distributed scan — the
-      // replayed state is the union of the parts' action rows
-      val cp = s.read.parquet(checkpoints(v).map(n => s"$dir/$n"): _*)
-      val cols = cp.columns.toSet
-      def fieldsOf(c: String): Set[String] =
-        cp.schema(c).dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
-          .fieldNames.toSet
-      if (cols.contains("protocol")) {
-        val pf = fieldsOf("protocol")
-        val featCol = if (pf.contains("readerFeatures"))
-          col("protocol.readerFeatures") else lit(null).cast("array<string>")
-        cp.select(col("protocol.minReaderVersion"), featCol)
-          .where(col("protocol").isNotNull).collect()
-          .foreach { r =>
-            minReader = r.getInt(0)
-            if (!r.isNullAt(1)) readerFeatures = r.getSeq[String](1).toSet
-          }
+    def field(n: JsonNode, k: String): Option[JsonNode] =
+      Option(n.get(k)).filterNot(_.isNull)
+    def strings(n: JsonNode): Vector[String] = {
+      val b = Vector.newBuilder[String]
+      n.forEach(e => b += e.asText())
+      b.result()
+    }
+    def applyAction(n: JsonNode): Unit = {
+      field(n, "protocol").foreach { p =>
+        minReader = p.get("minReaderVersion").asInt()
+        field(p, "readerFeatures").foreach(f => readerFeatures = strings(f).toSet)
       }
-      if (cols.contains("metaData")) {
-        val mf = fieldsOf("metaData")
-        val confCol = if (mf.contains("configuration"))
-          col("metaData.configuration") else lit(null).cast("map<string,string>")
-        cp.select(col("metaData.partitionColumns"), col("metaData.schemaString"),
-            confCol)
-          .where(col("metaData").isNotNull).collect().foreach { r =>
-            partitionColumns = r.getSeq[String](0)
-            schemaJson = Option(r.getString(1))
-            if (!r.isNullAt(2)) configuration = r.getMap[String, String](2).toMap
-          }
-      }
-      // add/remove state parse, shared between the checkpoint file
-      // itself and any V2 sidecars (schemas differ per writer — every
-      // optional column is presence-guarded)
-      def applyActions(frame: DataFrame): Unit = {
-        val fcols = frame.columns.toSet
-        def ffields(c: String): Set[String] =
-          frame.schema(c).dataType
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-            .fieldNames.toSet
-        if (fcols.contains("add")) {
-          val addFields = ffields("add")
-          val pvCol = if (addFields.contains("partitionValues"))
-            col("add.partitionValues") else map().cast("map<string,string>")
-          // deletionVector fields selected BY NAME, each presence-
-          // guarded (never positionally from the writer's struct
-          // layout: a foreign checkpoint is free to reorder fields or
-          // add new ones mid-struct, and a positional read would
-          // misparse offsets/cardinalities into each other)
-          val dvFields: Set[String] =
-            if (!addFields.contains("deletionVector")) Set.empty
-            else frame.schema("add").dataType
-              .asInstanceOf[org.apache.spark.sql.types.StructType]("deletionVector")
-              .dataType match {
-                case st: org.apache.spark.sql.types.StructType => st.fieldNames.toSet
-                case _ => Set.empty
-              }
-          def dvField(n: String, t: String) =
-            if (dvFields.contains(n)) col(s"add.deletionVector.$n").cast(t)
-            else lit(null).cast(t)
-          val statsCol = if (addFields.contains("stats")) col("add.stats")
-            else lit(null).cast("string")
-          frame.select(col("add.path"), pvCol, statsCol,
-              dvField("storageType", "string"),
-              dvField("pathOrInlineDv", "string"), dvField("offset", "int"),
-              dvField("sizeInBytes", "int"), dvField("cardinality", "bigint"))
-            .where(col("add").isNotNull)
-            .collect().foreach { r =>
-              val pv = Option(r.getMap[String, String](1))
-                .map(_.toMap).getOrElse(Map.empty[String, String])
-              val dv = if (r.isNullAt(3)) None else {
-                // required-when-present fields (PROTOCOL.md): refuse a
-                // torn descriptor loudly rather than misapply a DV
-                require(!r.isNullAt(4) && !r.isNullAt(6) && !r.isNullAt(7),
-                  s"checkpoint DV descriptor for ${r.getString(0)} at $table " +
-                    "is missing pathOrInlineDv/sizeInBytes/cardinality")
-                Some(Dv(r.getString(3), r.getString(4),
-                  if (r.isNullAt(5)) -1 else r.getInt(5), r.getInt(6),
-                  r.getLong(7)))
-              }
-              val stats = if (r.isNullAt(2)) None else Option(r.getString(2))
-              active(r.getString(0)) = AddFile(r.getString(0), pv, dv, stats)
-            }
+      field(n, "metaData").foreach { m =>
+        schemaJson = field(m, "schemaString").map(_.asText())
+        partitionColumns = field(m, "partitionColumns").map(strings).getOrElse(Nil)
+        field(m, "configuration").foreach { c =>
+          val b = Map.newBuilder[String, String]
+          c.fields().forEachRemaining(e => b += e.getKey -> e.getValue.asText())
+          configuration = b.result()
         }
-        if (fcols.contains("remove"))
-          frame.select(col("remove.path")).where(col("remove").isNotNull)
-            .collect().foreach(r => active -= r.getString(0))
       }
+      field(n, "add").foreach { a =>
+        val p = a.get("path").asText()
+        val pv = scala.collection.mutable.LinkedHashMap[String, String]()
+        field(a, "partitionValues").foreach(_.fields().forEachRemaining(
+          e => pv(e.getKey) = if (e.getValue.isNull) null else e.getValue.asText()))
+        // a descriptor with no fields (a checkpoint's all-null struct)
+        // is no DV; otherwise its required-when-present fields must
+        // all be there — refuse a torn descriptor loudly rather than
+        // misapply a DV
+        val dv = field(a, "deletionVector").filter(_.size > 0).map { d =>
+          val missing = Seq("storageType", "pathOrInlineDv", "sizeInBytes",
+            "cardinality").filter(field(d, _).isEmpty)
+          require(missing.isEmpty, s"DV descriptor for $p at $table is " +
+            s"missing ${missing.mkString("/")}")
+          Dv(d.get("storageType").asText(), d.get("pathOrInlineDv").asText(),
+            field(d, "offset").map(_.asInt()).getOrElse(-1),
+            d.get("sizeInBytes").asInt(), d.get("cardinality").asLong())
+        }
+        active(p) = AddFile(p, pv.toMap, dv, field(a, "stats").map(_.asText()))
+      }
+      field(n, "remove").foreach(r => active -= r.get("path").asText())
+    }
+
+    // base state from the checkpoint: its parts, then its V2 sidecars,
+    // each set one distributed scan collected as action lines; the
+    // active-path set is driver-side manifest-grade metadata (the
+    // SnapshotTable.merge bound, stated in the object scaladoc)
+    def actionsOf(paths: Seq[String]): Seq[JsonNode] =
+      graft.Tables.parquet(s, paths: _*).toJSON.collect().toSeq.map(om.readTree)
+    cpV.foreach { v =>
+      val main = actionsOf(checkpoints(v).map(n => s"$dir/$n"))
       // V2 checkpoints: the UUID-named file must declare its own
       // version (integrity — a misnamed copy would replay the wrong
       // state), and may delegate add/remove state to sidecar parquet
       // files under _delta_log/_sidecars/ (each must exist: a torn
       // sidecar set read as partial state would silently lose files)
-      if (cols.contains("checkpointMetadata"))
-        cp.select(col("checkpointMetadata.version"))
-          .where(col("checkpointMetadata").isNotNull).collect()
-          .foreach(r => require(r.getLong(0) == v,
-            s"v2 checkpoint named $v declares version ${r.getLong(0)} at $table"))
-      applyActions(cp)
-      if (cols.contains("sidecar")) {
-        val sidecars = cp.select(col("sidecar.path"))
-          .where(col("sidecar").isNotNull).collect().map(_.getString(0))
-        if (sidecars.nonEmpty) {
-          val paths = sidecars.map(n => s"$dir/_sidecars/$n")
-          paths.foreach(p => require(LogStore.exists(p),
-            s"v2 checkpoint sidecar missing at $table: $p"))
-          applyActions(s.read.parquet(paths: _*))
-        }
+      main.flatMap(field(_, "checkpointMetadata")).foreach { m =>
+        val declared = m.get("version").asLong()
+        require(declared == v,
+          s"v2 checkpoint named $v declares version $declared at $table")
       }
+      val sidecars = main.flatMap(field(_, "sidecar"))
+        .map(sc => s"$dir/_sidecars/${sc.get("path").asText()}")
+      sidecars.foreach(p => require(LogStore.exists(p),
+        s"v2 checkpoint sidecar missing at $table: $p"))
+      val side = if (sidecars.isEmpty) Nil else actionsOf(sidecars)
+      // a checkpoint is a state, not a sequence: protocol and
+      // metaData first, then adds, then removes
+      (main ++ side).sortBy(n =>
+        if (field(n, "add").isDefined) 1 else if (field(n, "remove").isDefined) 2 else 0)
+        .foreach(applyAction)
     }
 
-    // replay the JSON commits after the checkpoint; every version in
-    // the range must resolve — a gap means the log was aged out past
-    // our base and the snapshot CANNOT be reconstructed (the
-    // SnapshotTable vacuum rule: fail at log resolution, never
-    // silently drop a commit)
+    // replay the JSON commits after the checkpoint, each commit's
+    // lines in order; every version in the range must resolve — a gap
+    // means the log was aged out past our base and the snapshot
+    // CANNOT be reconstructed (the SnapshotTable vacuum rule: fail at
+    // log resolution, never silently drop a commit)
     val from = cpV.map(_ + 1).getOrElse(0L)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
     (from to target).foreach { v =>
       val name = commits.getOrElse(v, throw new IllegalStateException(
         s"version $v unreadable at $table: commit json aged out and no " +
           s"checkpoint covers it (oldest checkpoint: ${checkpoints.keys.minOption})"))
-      val text = new String(LogStore.read(s"$dir/$name"), StandardCharsets.UTF_8)
-      text.linesIterator.foreach { line =>
-        if (line.nonEmpty) {
-          val n = om.readTree(line)
-          if (n.has("protocol")) {
-            val p = n.get("protocol")
-            minReader = p.get("minReaderVersion").asInt()
-            if (p.has("readerFeatures") && !p.get("readerFeatures").isNull) {
-              val b = Set.newBuilder[String]
-              p.get("readerFeatures").forEach(e => b += e.asText())
-              readerFeatures = b.result()
-            }
-          }
-          if (n.has("metaData")) {
-            val m = n.get("metaData")
-            schemaJson = Option(m.get("schemaString")).map(_.asText())
-            partitionColumns = Option(m.get("partitionColumns")).toSeq
-              .flatMap { pc =>
-                val b = Vector.newBuilder[String]
-                pc.forEach(e => b += e.asText())
-                b.result()
-              }
-            Option(m.get("configuration")).filterNot(_.isNull).foreach { c =>
-              val b = Map.newBuilder[String, String]
-              c.fields().forEachRemaining(e => b += e.getKey -> e.getValue.asText())
-              configuration = b.result()
-            }
-          }
-          if (n.has("add")) {
-            val a = n.get("add")
-            val pv = scala.collection.mutable.LinkedHashMap[String, String]()
-            Option(a.get("partitionValues")).foreach(_.fields().forEachRemaining(
-              e => pv(e.getKey) = if (e.getValue.isNull) null else e.getValue.asText()))
-            val dv = Option(a.get("deletionVector")).filterNot(_.isNull).map { d =>
-              Dv(d.get("storageType").asText(), d.get("pathOrInlineDv").asText(),
-                if (d.has("offset") && !d.get("offset").isNull)
-                  d.get("offset").asInt() else -1,
-                d.get("sizeInBytes").asInt(), d.get("cardinality").asLong())
-            }
-            val stats = Option(a.get("stats")).filterNot(_.isNull)
-              .map(_.asText())
-            val p = a.get("path").asText()
-            active(p) = AddFile(p, pv.toMap, dv, stats)
-          }
-          if (n.has("remove")) active -= n.get("remove").get("path").asText()
-        }
-      }
+      new String(LogStore.read(s"$dir/$name"), StandardCharsets.UTF_8)
+        .linesIterator.filter(_.nonEmpty).foreach(l => applyAction(om.readTree(l)))
     }
     // reader-version discipline: versions 1 (base), 2 (column
     // mapping) and 3 with ONLY features we honor read; anything else
@@ -599,7 +525,7 @@ object DeltaTable {
       val paths = fs.map(f => resolvePath(table, f.path))
       var df =
         if (cmMode == "id") s.read.schema(idReadSchema).parquet(paths: _*)
-        else s.read.parquet(paths: _*)
+        else graft.Tables.parquet(s, paths: _*)
       if (withOrdinals) df = df
         .withColumn("__fp",
           regexp_replace(col("_metadata.file_path"), "^file:/+", "/"))

@@ -720,10 +720,9 @@ object EventStreams {
     var cursor = last
     while (cursor < latest) {
       val v = cursor + 1
-      SnapshotTable.commitOnce(s, sinkTable,
+      graft.Caches.releasing(SnapshotTable.commitOnce(s, sinkTable,
         DeltaTable.changes(s, foreignTable, v - 1, v, keyCols),
-        txnId = s"delta-tail-v$v")
-      graft.Caches.clear()
+        txnId = s"delta-tail-v$v"))
       LogStore.publish(cursorFile, exclusive = false)(_.write(s"$v\n".getBytes("UTF-8")))
       cursor = v
     }

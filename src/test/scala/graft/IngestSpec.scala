@@ -505,6 +505,111 @@ class IngestSpec extends SparkSpec {
     assert(e.getMessage.contains("incomplete multi-part"), e.getMessage)
   }
 
+  test("delta decoder: one table state decodes alike from JSON commits and classic, multi-part and V2 checkpoints") {
+    import graft.sources.DeltaTable
+    import graft.sources.DeltaTable.{AddFile, Dv, Snapshot}
+    import graft.sources.Json.jesc
+    // the delta.io checkpoint schema for the actions decoded here, as
+    // a writer lays them out (V2 rows in their own columns)
+    val cpSchema = Seq(
+      "protocol STRUCT<minReaderVersion: INT, minWriterVersion: INT, readerFeatures: ARRAY<STRING>, writerFeatures: ARRAY<STRING>>",
+      "metaData STRUCT<id: STRING, format: STRUCT<provider: STRING, options: MAP<STRING, STRING>>, schemaString: STRING, partitionColumns: ARRAY<STRING>, configuration: MAP<STRING, STRING>, createdTime: BIGINT>",
+      "add STRUCT<path: STRING, partitionValues: MAP<STRING, STRING>, size: BIGINT, modificationTime: BIGINT, dataChange: BOOLEAN, stats: STRING, deletionVector: STRUCT<storageType: STRING, pathOrInlineDv: STRING, offset: INT, sizeInBytes: INT, cardinality: BIGINT>>",
+      "remove STRUCT<path: STRING, deletionTimestamp: BIGINT, dataChange: BOOLEAN>",
+      "checkpointMetadata STRUCT<version: BIGINT>",
+      "sidecar STRUCT<path: STRING, sizeInBytes: BIGINT, modificationTime: BIGINT>").mkString(", ")
+    val dataSchema = """{"type":"struct","fields":[{"name":"doc_id","type":"long","nullable":false,"metadata":{}},{"name":"k","type":"string","nullable":true,"metadata":{}}]}"""
+    val statsA = """{"numRecords":3,"minValues":{"doc_id":1},"maxValues":{"doc_id":3}}"""
+    val statsD = """{"numRecords":1,"minValues":{"doc_id":9},"maxValues":{"doc_id":9}}"""
+    val inlineDv = "wi5b=000010000siXQKl0rr91000f55c8Xg0@@D72lkbi5=-{L"
+    def protocol(features: String) =
+      s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":[$features],"writerFeatures":["deletionVectors"]}}"""
+    val meta = s"""{"metaData":{"id":"dec","format":{"provider":"parquet","options":{}},"schemaString":"${jesc(dataSchema)}","partitionColumns":["k"],"configuration":{"delta.enableDeletionVectors":"true","delta.columnMapping.mode":"none"},"createdTime":0}}"""
+    val addA = s"""{"add":{"path":"a.parquet","partitionValues":{"k":"x"},"size":10,"modificationTime":0,"dataChange":true,"stats":"${jesc(statsA)}","deletionVector":{"storageType":"u","pathOrInlineDv":"ab^-aqEH.-t@S}K{vb[*k^","offset":4,"sizeInBytes":40,"cardinality":2}}}"""
+    val addB = s"""{"add":{"path":"b.parquet","partitionValues":{"k":null},"size":10,"modificationTime":0,"dataChange":true,"deletionVector":{"storageType":"i","pathOrInlineDv":"$inlineDv","sizeInBytes":40,"cardinality":6}}}"""
+    val addC = """{"add":{"path":"c.parquet","partitionValues":{"k":"y"},"size":10,"modificationTime":0,"dataChange":true}}"""
+    val removeC = """{"remove":{"path":"c.parquet","deletionTimestamp":1,"dataChange":true}}"""
+    val addD = s"""{"add":{"path":"d.parquet","partitionValues":{"k":"y"},"size":10,"modificationTime":0,"dataChange":true,"stats":"${jesc(statsD)}"}}"""
+    def writeLines(f: java.io.File, lines: Seq[String]): Unit =
+      java.nio.file.Files.write(f.toPath, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    def writeCp(dir: java.io.File, name: String, lines: Seq[String], cols: String*): Unit = {
+      val scratch = new java.io.File(dir, ".w_" + name)
+      val rows = spark.read.schema(cpSchema).json(lines.toDS())
+      (if (cols.isEmpty) rows else rows.select(cols.map(col): _*))
+        .coalesce(1).write.mode("overwrite").parquet(scratch.toString)
+      val part = scratch.listFiles().find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.move(part.toPath, new java.io.File(dir, name).toPath)
+      graft.geo.Fixtures.deleteRecursively(scratch)
+    }
+    // the same version-1 state five ways: two JSON commits (v0 adds
+    // a/b/c, v1 removes c and adds d), and checkpoints at v1 with the
+    // commits aged out — classic, two-part, and V2 whose add/remove
+    // state lives in two sidecars
+    def forms(proto: String): Seq[(String, String)] = {
+      val state = Seq(proto, meta, addA, addB, addD, removeC)
+      def table(name: String)(fill: java.io.File => Unit): (String, String) = {
+        val tbl = new java.io.File(scratchDir(s"delta_dec_$name"))
+        val log = new java.io.File(tbl, "_delta_log"); log.mkdirs()
+        fill(log)
+        name -> tbl.toString
+      }
+      Seq(
+        table("json") { log =>
+          writeLines(new java.io.File(log, "00000000000000000000.json"),
+            Seq(proto, meta, addA, addB, addC))
+          writeLines(new java.io.File(log, "00000000000000000001.json"), Seq(removeC, addD))
+        },
+        table("classic") { log =>
+          writeCp(log, "00000000000000000001.checkpoint.parquet", state)
+          writeLines(new java.io.File(log, "_last_checkpoint"), Seq("""{"version":1,"size":6}"""))
+        },
+        table("multipart") { log =>
+          writeCp(log, "00000000000000000001.checkpoint.0000000001.0000000002.parquet", state.take(3))
+          writeCp(log, "00000000000000000001.checkpoint.0000000002.0000000002.parquet", state.drop(3))
+        },
+        table("v2") { log =>
+          val sidecars = new java.io.File(log, "_sidecars"); sidecars.mkdirs()
+          writeCp(sidecars, "s1.parquet", Seq(addA, addB), "add", "remove")
+          writeCp(sidecars, "s2.parquet", Seq(addD, removeC), "add", "remove")
+          writeCp(log, "00000000000000000001.checkpoint.3f2b6a1e-0c4d-4e8f-9a7b-1c2d3e4f5a6b.parquet",
+            Seq(proto, meta, """{"checkpointMetadata":{"version":1}}""") ++
+              Seq("s1.parquet", "s2.parquet").map(n =>
+                s"""{"sidecar":{"path":"$n","sizeInBytes":1,"modificationTime":0}}"""),
+            "protocol", "metaData", "checkpointMetadata", "sidecar")
+        })
+    }
+    val want = Snapshot(1L, Seq(
+        AddFile("a.parquet", Map("k" -> "x"),
+          Some(Dv("u", "ab^-aqEH.-t@S}K{vb[*k^", 4, 40, 2L)), Some(statsA)),
+        AddFile("b.parquet", Map("k" -> null), Some(Dv("i", inlineDv, -1, 40, 6L))),
+        AddFile("d.parquet", Map("k" -> "y"), None, Some(statsD))),
+      minReaderVersion = 3, partitionColumns = Seq("k"), schemaJson = Some(dataSchema),
+      configuration = Map("delta.enableDeletionVectors" -> "true",
+        "delta.columnMapping.mode" -> "none"))
+    forms(protocol(""""deletionVectors","columnMapping"""")).foreach { case (name, tbl) =>
+      val snap = DeltaTable.snapshot(spark, tbl)
+      assert(snap.copy(adds = snap.adds.sortBy(_.path)) == want, name)
+    }
+    // readerFeatures decode from every form: an unimplemented one refuses
+    forms(protocol(""""deletionVectors","timestampNtz"""")).foreach { case (name, tbl) =>
+      val e = intercept[IllegalArgumentException](DeltaTable.snapshot(spark, tbl))
+      assert(e.getMessage.contains("timestampNtz"), s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("delta decoder: a commit-JSON DV descriptor without cardinality refuses by name") {
+    import graft.sources.DeltaTable
+    val tbl = new java.io.File(scratchDir("delta_torn_dv"))
+    val log = new java.io.File(tbl, "_delta_log"); log.mkdirs()
+    java.nio.file.Files.write(log.toPath.resolve("00000000000000000000.json"),
+      Seq("""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["deletionVectors"],"writerFeatures":["deletionVectors"]}}""",
+        """{"add":{"path":"a.parquet","partitionValues":{},"size":1,"modificationTime":0,"dataChange":true,"deletionVector":{"storageType":"u","pathOrInlineDv":"ab^-aqEH.-t@S}K{vb[*k^","offset":1,"sizeInBytes":36}}}""")
+        .mkString("", "\n", "\n").getBytes("UTF-8"))
+    val e = intercept[IllegalArgumentException](DeltaTable.snapshot(spark, tbl.toString))
+    assert(e.getMessage.contains("DV descriptor for a.parquet") &&
+      e.getMessage.contains("missing cardinality"), e.getMessage)
+  }
+
   test("j14: deletion vectors — deleted rows stay deleted, pre-DV time travel, torn DV refuses") {
     import graft.sources.{DeltaTable, IngestFixtures}
     val table = IngestFixtures.ensureDeltaDv(spark, Sf)

@@ -401,6 +401,20 @@ class StreamingSpec extends SparkSpec {
     graft.Caches.clear()
   }
 
+  test("a foreign-Delta tail releases its own step caches, never the caller's") {
+    import graft.sources.IngestFixtures
+    val foreign = IngestFixtures.ensureDeltaCdc(spark, Sf)
+    val mine = Caches.track(spark.range(100).selectExpr("id * 3 AS x"))
+    assert(mine.count() == 100L)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val cursor = scratchDir("graft_dtail_keep_cur") + "/cursor"
+    assert(EventStreams.deltaTailOnce(spark, foreign,
+      scratchDir("graft_dtail_keep_sink"), cursor, Seq("doc_id")) == 2L)
+    assert(mine.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+    Caches.clear()
+  }
+
   test("streaming IVM: the g40 change feed drives the g41 view across a crash/replay boundary") {
     import graft.sources.SnapshotTable
     // the SAME copy-on-write scenario batch g41 maintains (v0 base,
